@@ -48,10 +48,21 @@ from magictables_spark.warehouse import ChainRecord, Warehouse
 PLACEHOLDER_RE = re.compile(r"\{(\w+)\}")
 
 
-def url_expr(template: str, colmap: dict[str, str] | None = None) -> Column:
+def _quoted(name: str) -> str:
+    """Backtick-quote a column name so Spark reads it as ONE top-level
+    column: a flattened ``customer.id`` would otherwise resolve as the
+    field ``id`` of a struct ``customer``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def url_expr(
+    template: str, colmap: dict[str, str] | None = None, columns=()
+) -> Column:
     """URL template -> column expression. ``{placeholder}`` segments bind
     to columns (optionally renamed via colmap) — the reference's
-    _format_url_template (magictable.py:119-143) without the row loop."""
+    _format_url_template (magictable.py:119-143) without the row loop.
+    Names listed in ``columns`` (the frame's top-level columns) bind
+    literally, dots included; any other name may be a struct path."""
     colmap = colmap or {}
     parts: list[Column] = []
     pos = 0
@@ -59,6 +70,8 @@ def url_expr(template: str, colmap: dict[str, str] | None = None) -> Column:
         if m.start() > pos:
             parts.append(F.lit(template[pos : m.start()]))
         col = colmap.get(m.group(1), m.group(1))
+        if col in columns:
+            col = _quoted(col)
         parts.append(F.col(col).cast("string"))
         pos = m.end()
     if pos < len(template):
@@ -202,7 +215,7 @@ def parse_payload(df: DataFrame, payload_col: str = "__payload") -> DataFrame:
         dtype = dtype.elementType
     if isinstance(dtype, StructType):
         fields = sorted(f.name for f in dtype.fields)
-        others = [c for c in parsed.columns if c != "__parsed"]
+        others = [F.col(_quoted(c)) for c in parsed.columns if c != "__parsed"]
         return parsed.select(
             *others,
             *[F.col(f"__parsed.`{name}`").alias(f"api_{name}") for name in fields],
@@ -232,7 +245,7 @@ def chain_enrich(
             return hit
 
     mapping = resolve_keys(url_template, df.columns, source_key, target_key)
-    with_url = df.withColumn("__url", url_expr(url_template, mapping))
+    with_url = df.withColumn("__url", url_expr(url_template, mapping, df.columns))
     payloads = fetch_urls(spark, with_url.select("__url"), fetcher, warehouse, for_join=True)
     joined = with_url.join(payloads, "__url", "left")
     result = parse_payload(joined).drop("__url")

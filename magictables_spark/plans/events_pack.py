@@ -238,16 +238,16 @@ def _events_stream_sharded(
     whole month as ONE micro-batch, so a stream-stream join must buffer
     the entire table in state before the watermark can evict anything —
     that is O(input) state and OOMed an 8 GB heap at sf2. Slicing the
-    fixture into contiguous time ranges and feeding them through
-    ``maxFilesPerTrigger=1`` advances the watermark between batches, so
+    fixture into contiguous time ranges and replaying them one file per
+    trigger (``ReplaySource``) advances the watermark between batches, so
     join state plateaus at ~watermark-window x event-rate regardless of
     total input size — the shape a production stream has anyway. Below
     ``rows_per_shard`` the single-file fast path is kept (identical to
     _events_stream, no copy)."""
-    import hashlib
     import os
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.warehouse import corpus_fingerprint
 
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
@@ -255,18 +255,14 @@ def _events_stream_sharded(
     n_shards = n_rows // rows_per_shard
     if n_shards < 2:
         return _events_stream(spark, sf_dir)
-    cfp = corpus_fingerprint(path)
-    tag = hashlib.md5(
-        f"v1:evshard:{n_shards}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"evshard_{tag}")
-    src = os.path.join(root, "src")
-    ready = os.path.join(root, "_READY")
-    if not os.path.exists(ready):
-        import shutil
+    src = ReplaySource(
+        "evshard",
+        f"v1:evshard:{n_shards}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(path),
+    )
 
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         ev = spark.read.parquet(path)
         lo, hi = ev.agg(
             F.min(F.unix_millis(F.col("ts").cast("timestamp"))),
@@ -284,37 +280,15 @@ def _events_stream_sharded(
                 ).cast("long"),
             ),
         )
-        for k in range(n_shards):  # written oldest-first: the file
-            # source picks files up in mtime order, one per trigger
-            part_dir = os.path.join(root, f"part{k}")
-            (
-                sliced.filter(F.col("_shard") == k)
-                .drop("_shard")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-            shard_path = os.path.join(src, f"shard_{k:04d}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), shard_path)
-            # The file source delivers oldest-mtime-first; on coarse-
-            # granularity filesystems two shards can land in the same
-            # tick and arrive out of order, letting the watermark jump
-            # ahead and evict join state early. Stamp strictly
-            # increasing mtimes so delivery order is guaranteed, not
-            # incidental.
-            os.utime(shard_path, (1_600_000_000 + k, 1_600_000_000 + k))
-            import shutil as _sh
+        # oldest time range first: replay order is what lets the
+        # watermark advance between batches and evict join state
+        return [
+            sliced.filter(F.col("_shard") == k).drop("_shard")
+            for k in range(n_shards)
+        ]
 
-            _sh.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
+    src.prepare(_seed)
+    return src.stream(spark, schema)
 
 
 def _run_available_now(
@@ -336,10 +310,9 @@ def _run_available_now(
     per-batch state-store commit: stream-stream joins measured 4.4x
     faster at fixture scale with 8 instead of 32 — at production
     scale size it to state volume, not to the session default)."""
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
+    from magictables_spark.streaming.commit import stop_query
+
+    stop_query(spark, name)
     saved = None
     if shuffle_partitions is not None:
         saved = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1222,7 +1195,7 @@ def scd2_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     "16-20 / 21-25 / 26-31, mtime-ordered so the file source replays "
     "them in changelog order — SCD2 merge REQUIRES in-order batches, "
     "the same append-only contract a CDC feed gives you) consumed via "
-    "readStream + maxFilesPerTrigger=1: Trigger.AvailableNow executes "
+    "readStream, one shard per trigger: Trigger.AvailableNow executes "
     "THREE real micro-batches. Each foreachBatch turn (a) finds the "
     "batch's touched user-buckets, (b) reads the store pruned to those "
     "partitions only, (c) replays each TOUCHED user's stored runs as "
@@ -1247,25 +1220,22 @@ def scd2_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
-    import time as _time
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.warehouse import corpus_fingerprint
 
     NB = 32  # user-hash bucket partitions (the overwrite/pruning unit)
     ev = _t(spark, sf_dir, "events")
     split = F.lit(_SCD2_SPLIT_TS).cast("timestamp")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"v2:scd2s:{NB}:{_SCD2_SPLIT_TS}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"scd2stream_{tag}")
-    src = os.path.join(root, "src")
-    store_dir = os.path.join(root, "store")
-    applied_dir = os.path.join(root, "applied")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "scd2stream",
+        f"v2:scd2s:{NB}:{_SCD2_SPLIT_TS}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+    )
+    store_dir = src.path("store")
+    applied_dir = src.path("applied")
 
     _ub = F.pmod(F.xxhash64("user_id"), F.lit(NB)).alias("ub")
     run_cols = ["user_id", "version", "status", "vf", "vf_event_id", "n_events"]
@@ -1278,9 +1248,7 @@ def scd2_store_stream(
         "vf_event_id bigint, n_events bigint, last_batch bigint, ub bigint"
     )
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         os.makedirs(applied_dir)
         hist = ev.filter(F.col("ts") < split).withColumn(
             "weight", F.lit(1).cast("bigint")
@@ -1290,26 +1258,15 @@ def scd2_store_stream(
         ).select(*run_cols, "last_batch", _ub).write.partitionBy("ub").mode(
             "overwrite"
         ).parquet(store_dir)
-        # 3 contiguous time shards — mtime-ordered (oldest first is the
-        # file source's replay order), because SCD2 merge is order-
-        # sensitive by contract
-        now = _time.time()
-        for shard, (lo, hi) in enumerate([(16, 21), (21, 26), (26, 32)]):
-            part_dir = os.path.join(root, f"part{shard}")
-            d = F.dayofmonth(F.col("ts").cast("date"))
-            (
-                ev.filter((F.col("ts") >= split) & (d >= lo) & (d < hi))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), dst)
-            os.utime(dst, (now - 300 + shard * 100, now - 300 + shard * 100))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        # 3 contiguous time shards in changelog order, because SCD2
+        # merge is order-sensitive by contract
+        d = F.dayofmonth(F.col("ts").cast("date"))
+        return [
+            ev.filter((F.col("ts") >= split) & (d >= lo) & (d < hi))
+            for lo, hi in [(16, 21), (21, 26), (26, 32)]
+        ]
+
+    src.prepare(_seed)
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(applied_dir, f"batch_{batch_id}")
@@ -1376,25 +1333,7 @@ def scd2_store_stream(
         with open(marker, "w") as f:
             f.write("ok")
 
-    name = f"mts_scd2stream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, ev.schema, _merge_batch)
     return _scd2_finalize(
         spark.read.schema(store_schema)
         .parquet(store_dir)
@@ -1417,8 +1356,8 @@ def scd2_store_stream(
     doc="Streaming MERGE-INTO (SCD-1 upsert) sink at the driver "
     "surface, run as a REAL multi-batch incremental job: the events "
     "fixture is split once into 3 parquet shards (by event_id % 3, "
-    "deterministic), readStream consumes them with maxFilesPerTrigger "
-    "= 1 so Trigger.AvailableNow executes THREE micro-batches, and "
+    "deterministic), readStream consumes them one shard per trigger "
+    "so Trigger.AvailableNow executes THREE micro-batches, and "
     "each batch merges latest-record-per-key into a versioned parquet "
     "snapshot behind an atomic manifest repoint "
     "(streaming/stream_upsert_foreach_batch -- foreachBatch is how "
@@ -1436,64 +1375,22 @@ def scd2_store_stream(
     tags=("streaming", "merge", "pipeline"),
 )
 def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
-    from magictables_spark.streaming import (
-        read_upsert_snapshot,
-        stream_upsert_foreach_batch,
-    )
-
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming import read_upsert_snapshot, upsert_merge_batch
+    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.warehouse import corpus_fingerprint
 
     ev = _t(spark, sf_dir, "events")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(f"{os.path.realpath(sf_dir)}:{cfp}".encode()).hexdigest()[:12]
-    root = store_root(f"upsert_q_{tag}")
-    src = os.path.join(root, "src")
-    ready = os.path.join(root, "_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                ev.filter(F.col("event_id") % 3 == shard)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
-    name = f"mts_upsert_q_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
+    src = ReplaySource(
+        "upsert_q",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
     )
-    query = (
-        stream_upsert_foreach_batch(
-            stream, os.path.join(root, "target"), os.path.join(root, "ckpt")
-        )
-        .queryName(name)
-        .start()
-    )
-    query.awaitTermination()
-    snap = read_upsert_snapshot(spark, os.path.join(root, "target"))
+    src.prepare(lambda: [ev.filter(F.col("event_id") % 3 == k) for k in range(3)])
+    target = src.path("target")
+    src.drain(spark, ev.schema, upsert_merge_batch(target, ("user_id",), "event_type"))
+    snap = read_upsert_snapshot(spark, target)
     return snap.select(
         "user_id",
         F.col("event_type").alias("latest_status"),
@@ -1604,7 +1501,7 @@ def rollup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     "seeds a parquet store PARTITIONED BY day; the rest of the month "
     "is sharded 3 ways on event_id % 3 (all shards hit the SAME days, "
     "so the merge path genuinely sums partials rather than appending "
-    "disjoint keys) and consumed via readStream + maxFilesPerTrigger=1 "
+    "disjoint keys) and consumed via readStream, one shard per trigger "
     "— Trigger.AvailableNow executes THREE real micro-batches. Each "
     "foreachBatch turn (a) aggregates ONLY its own rows to (day, "
     "event_type) partials, (b) reads the store pruned to the batch's "
@@ -1631,22 +1528,19 @@ def rollup_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.warehouse import corpus_fingerprint
 
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    cfp = corpus_fingerprint(ev_path)
-    tag = hashlib.md5(
-        f"v2:16:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"rollstream_{tag}")
-    src = os.path.join(root, "src")
-    store_dir = os.path.join(root, "store")
-    applied_dir = os.path.join(root, "applied")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "rollstream",
+        "v2:16",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+    )
+    store_dir = src.path("store")
+    applied_dir = src.path("applied")
 
     ev = _t(spark, sf_dir, "events")
 
@@ -1664,9 +1558,7 @@ def rollup_store_stream(
             )
         )
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         os.makedirs(applied_dir)
         # seed: history partials, partitioned by day (the rollup key's
         # coarse component — partition pruning + dynamic overwrite unit).
@@ -1677,26 +1569,15 @@ def rollup_store_stream(
         ).withColumn("last_batch", F.lit(-1).cast("long")).write.partitionBy(
             "day"
         ).mode("overwrite").parquet(store_dir)
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                ev.filter(
-                    (F.dayofmonth(F.col("ts").cast("date")) >= 16)
-                    & (F.col("event_id") % 3 == shard)
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
+        return [
+            ev.filter(
+                (F.dayofmonth(F.col("ts").cast("date")) >= 16)
+                & (F.col("event_id") % 3 == k)
             )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     # explicit schema: a store seeded from an EMPTY history has no
     # partition dirs to infer from (day comes back as the formatted
@@ -1763,25 +1644,7 @@ def rollup_store_stream(
         with open(marker, "w") as f:
             f.write("ok")
 
-    name = f"mts_rollstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, ev.schema, _merge_batch)
     return (
         spark.read.schema(store_schema)
         .parquet(store_dir)

@@ -475,8 +475,8 @@ def hll_rollup_incremental(spark, sf_dir):
     "the foreachBatch twin of hll_rollup_incremental, closing the "
     "streaming side of the mergeable-sketch family: the history half "
     "of the month seeds per-event_type HLL sketches once; the rest "
-    "streams in 3 shards (event_id % 3) via readStream + "
-    "maxFilesPerTrigger=1, and each micro-batch sketches ONLY ITSELF "
+    "streams in 3 shards (event_id % 3) via readStream, one shard "
+    "per trigger, and each micro-batch sketches ONLY ITSELF "
     "then register-wise-maxes into the store (hll_union_agg over "
     "stored + batch sketches, O(groups) rewrite of a store that holds "
     "one tiny binary row per event_type — never a rescan of history). "
@@ -498,52 +498,36 @@ def hll_store_stream(
     sf_dir,
     _crash_after_write: frozenset[int] = frozenset(),
 ):
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.streaming.commit import VersionedStore
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource, VersionedStore
+    from magictables_spark.warehouse import corpus_fingerprint
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"v2:hlls:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"hllstream_{tag}")
-    src = os.path.join(root, "src")
-    store_dir = os.path.join(root, "store")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "hllstream",
+        "v2:hlls",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+    )
 
     def _sketch(df):
         return df.groupBy("event_type").agg(F.hll_sketch_agg("user_id").alias("sk"))
 
-    vs = VersionedStore(store_dir)
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    vs = VersionedStore(src.path("store"))
+
+    def _seed():
         _sketch(ev.filter(F.col("ts") < split)).write.mode("overwrite").parquet(
             vs.seed_path()
         )
         vs.init()
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _merge_batch(batch_df, batch_id):
         # register-max union is idempotent under replay, but the old
@@ -568,25 +552,7 @@ def hll_store_stream(
             raise RuntimeError(f"injected crash after batch {batch_id} write")
         vs.commit(batch_id)
 
-    name = f"mts_hllstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, ev.schema, _merge_batch)
     return (
         spark.read.parquet(vs.current_path())
         .select(

@@ -2511,7 +2511,7 @@ def roc_auc_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
     "HLL, CMS, quantile-histogram — already has a foreachBatch twin): "
     "the history split (vec_id%%4 < 3) seeds a per-bin (count, "
     "positives) store; the remaining vectors stream in 3 shards "
-    "(maxFilesPerTrigger=1 under AvailableNow = 3 REAL micro-batches), "
+    "(one shard per trigger under AvailableNow = 3 REAL micro-batches), "
     "each foreachBatch turn scoring ONLY its batch with the fixed "
     "int64 linear scorer, aggregating to bin partials, and merging "
     "group-wise. Per-bin (c, c1) counts are associative+commutative "
@@ -2537,28 +2537,24 @@ def auc_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource, VersionedStore
+    from magictables_spark.warehouse import corpus_fingerprint
 
     emb = _t(spark, sf_dir, "embeddings")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"v2:4:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"aucstream_{tag}")
-    src = os.path.join(root, "src")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "aucstream",
+        "v2:4",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+    )
 
     # Versioned store + atomic CURRENT pointer flip as the single
     # commit point (streaming/commit.py — the r8 ADVICE fix: the old
     # overwrite-then-marker scheme double-counted a batch replayed
     # between the two writes).
-    from magictables_spark.streaming.commit import VersionedStore
-
-    vs = VersionedStore(root)
+    vs = VersionedStore(src.root)
 
     def _bins(df: DataFrame) -> DataFrame:
         return (
@@ -2571,32 +2567,17 @@ def auc_store_stream(
             )
         )
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         _bins(emb.filter(F.col("vec_id") % 4 < 3)).coalesce(1).write.mode(
             "overwrite"
         ).parquet(vs.seed_path())
         vs.init()
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                emb.filter(
-                    (F.col("vec_id") % 4 == 3) & (F.col("vec_id") % 3 == shard)
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            emb.filter((F.col("vec_id") % 4 == 3) & (F.col("vec_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     store_schema = "bin bigint, c bigint, c1 bigint"
 
@@ -2623,25 +2604,7 @@ def auc_store_stream(
             raise RuntimeError(f"injected crash after batch {batch_id} write")
         vs.commit(batch_id)  # atomic flip + pre-merge reclaim
 
-    name = f"mts_aucstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, emb.schema, _merge_batch)
 
     per_bin = spark.read.schema(store_schema).parquet(vs.current_path())
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)

@@ -589,10 +589,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magictables_spark.sources.pyds import FixtureDataSource
 
-    try:
-        spark.dataSource.register(FixtureDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(FixtureDataSource)
     df = (
         spark.read.format("mts_fixture")
         .option("n_rows", 1000)
@@ -653,6 +650,8 @@ def python_datasource_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         SimpleDataSourceStreamReader as _SR,
     )
 
+    from magictables_spark.streaming.commit import stop_query
+
     n_rows_total, batch_rows = 100, 25
 
     def _rows(lo: int, hi: int) -> list:
@@ -684,14 +683,8 @@ def python_datasource_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         def simpleStreamReader(self, schema) -> "_Reader":
             return _Reader()
 
-    try:
-        spark.dataSource.register(_Src)
-    except Exception:
-        pass
-    for active in spark.streams.active:
-        if active.name == "mts_pyds_stream_q":
-            active.stop()
-            active.awaitTermination()
+    spark.dataSource.register(_Src)
+    stop_query(spark, "mts_pyds_stream_q")
     ckpt = _scratch("pyds_stream_ckpt")
     import shutil
 
@@ -808,10 +801,7 @@ def python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
         def writer(self, schema, overwrite: bool) -> "_Writer":
             return _Writer(self.options["path"], [f.name for f in schema])
 
-    try:
-        spark.dataSource.register(_Sink)
-    except Exception:
-        pass
+    spark.dataSource.register(_Sink)
     out = _scratch("jsonl_roundtrip")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)

@@ -623,28 +623,24 @@ def quantile_hist_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource, VersionedStore
+    from magictables_spark.warehouse import corpus_fingerprint
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"v2:qhs:{_QH_B}x{_QH_W}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"qhstream_{tag}")
-    src = os.path.join(root, "src")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "qhstream",
+        f"v2:qhs:{_QH_B}x{_QH_W}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+    )
     store_schema = "event_type string, bin bigint, c bigint"
     # versioned store + atomic CURRENT flip: the count-merge is not
     # idempotent and the old overwrite-then-marker scheme left a
     # double-count window between the two writes (streaming/commit.py)
-    from magictables_spark.streaming.commit import VersionedStore
-
-    vs = VersionedStore(root)
+    vs = VersionedStore(src.root)
 
     def _hist(df: DataFrame) -> DataFrame:
         b = F.least(
@@ -655,30 +651,17 @@ def quantile_hist_store_stream(
             "event_type", "bin"
         ).agg(F.count("*").cast("bigint").alias("c"))
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         _hist(ev.filter(F.col("ts") < split)).write.mode("overwrite").parquet(
             vs.seed_path()
         )
         vs.init()
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if vs.is_applied(batch_id):  # replay of a committed batch
@@ -698,25 +681,7 @@ def quantile_hist_store_stream(
             raise RuntimeError(f"injected crash after batch {batch_id} write")
         vs.commit(batch_id)  # atomic flip + pre-merge reclaim
 
-    name = f"mts_qhstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, ev.schema, _merge_batch)
 
     cum = (
         spark.read.schema(store_schema)
@@ -908,27 +873,24 @@ def cms_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.streaming.commit import VersionedStore
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource, VersionedStore
+    from magictables_spark.warehouse import corpus_fingerprint
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"v2:cmss:{_CMS_D}x{_CMS_W}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"cmsstream_{tag}")
-    src = os.path.join(root, "src")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "cmsstream",
+        f"v2:cmss:{_CMS_D}x{_CMS_W}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+    )
     store_schema = "j bigint, col bigint, c bigint"
     # versioned store + atomic CURRENT flip (streaming/commit.py): the
     # counter merge is not idempotent; the old overwrite-then-marker
     # scheme left a double-count window between the two writes
-    vs = VersionedStore(root)
+    vs = VersionedStore(src.root)
 
     js = spark.range(_CMS_D).select(F.col("id").alias("j"))
     col_expr = F.expr(
@@ -945,30 +907,17 @@ def cms_store_stream(
             .agg(F.count("*").cast("bigint").alias("c"))
         )
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         _sketch(ev.filter(F.col("ts") < split)).write.mode("overwrite").parquet(
             vs.seed_path()
         )
         vs.init()
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if vs.is_applied(batch_id):  # replay of a committed batch
@@ -988,25 +937,7 @@ def cms_store_stream(
             raise RuntimeError(f"injected crash after batch {batch_id} write")
         vs.commit(batch_id)  # atomic flip + pre-merge reclaim
 
-    name = f"mts_cmsstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, ev.schema, _merge_batch)
 
     merged = spark.read.schema(store_schema).parquet(vs.current_path())
     users = ev.select("user_id").distinct()
@@ -1123,7 +1054,7 @@ def join_view_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     "round's store symmetry (every persisted incremental store has "
     "BOTH a batch and a streaming maintainer). The order history "
     "(o_orderkey%5 < 4) joined to the customer dim seeds the store; "
-    "the delta orders stream in 3 shards via maxFilesPerTrigger=1 "
+    "the delta orders stream in 3 shards, one shard per trigger "
     "(three REAL micro-batches under Trigger.AvailableNow), and each "
     "foreachBatch turn joins ONLY its batch rows against the static "
     "dim (broadcast — batch-sized work, the store is never read or "
@@ -1144,21 +1075,19 @@ def join_view_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.warehouse import corpus_fingerprint
 
     orders = _t(spark, sf_dir, "orders")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "orders.parquet"))
-    tag = hashlib.md5(
-        f"v1:5:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"jvstream_{tag}")
-    src = os.path.join(root, "src")
-    store_dir = os.path.join(root, "store")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "jvstream",
+        "v1:5",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "orders.parquet")),
+    )
+    store_dir = src.path("store")
 
     def _view(o: DataFrame, c: DataFrame) -> DataFrame:
         return o.join(c, o["o_custkey"] == c["c_custkey"]).select(
@@ -1170,33 +1099,19 @@ def join_view_store_stream(
             F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("price_cents"),
         )
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         _view(
             orders.filter(F.col("o_orderkey") % 5 < 4),
             _t(spark, sf_dir, "customer"),
         ).write.mode("overwrite").parquet(os.path.join(store_dir, "seed"))
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                orders.filter(
-                    (F.col("o_orderkey") % 5 == 4)
-                    & (F.col("o_orderkey") % 3 == shard)
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
+        return [
+            orders.filter(
+                (F.col("o_orderkey") % 5 == 4) & (F.col("o_orderkey") % 3 == k)
             )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _append_batch(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
@@ -1208,25 +1123,7 @@ def join_view_store_stream(
         if batch_id in _crash_after_write:
             raise RuntimeError(f"injected crash after batch {batch_id} write")
 
-    name = f"mts_jvstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_append_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, orders.schema, _append_batch)
     view_schema = (
         "o_orderkey bigint, cust_name string, c_nationkey int, "
         "c_mktsegment string, order_date string, price_cents bigint"

@@ -943,11 +943,10 @@ def lsh_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.warehouse import corpus_fingerprint
 
     B = APPEND_SPLIT
     NPG = 16  # bucket-group partitions (the overwrite/pruning unit)
@@ -955,16 +954,15 @@ def lsh_store_stream(
     n_vec = quant.count()
     n_hist = min(B, n_vec)
     emb = _t(spark, sf_dir, "embeddings")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"v2:lshstream:{N_TABLES}:{N_PROBES}:{B}:"
-        f"{os.path.realpath(sf_dir)}:{n_vec}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"lshstream_{tag}")
-    src = os.path.join(root, "src")
-    store_dir = os.path.join(root, "store")
-    applied_dir = os.path.join(root, "applied")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "lshstream",
+        f"v2:lshstream:{N_TABLES}:{N_PROBES}:{B}",
+        os.path.realpath(sf_dir),
+        n_vec,
+        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+    )
+    store_dir = src.path("store")
+    applied_dir = src.path("applied")
     # last_batch stamps each pg partition with the batch that last
     # rewrote it (-1 = seed) — the per-partition replay guard
     # (streaming/commit.py module doc; the rollup_store_stream pattern)
@@ -977,9 +975,7 @@ def lsh_store_stream(
         F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
     )
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         os.makedirs(applied_dir)
         hist = _lsh_index_core(
             spark, quant.filter(F.col("vec_id") < B), n_hist, N_TABLES, N_PROBES
@@ -992,27 +988,16 @@ def lsh_store_stream(
             .mode("overwrite")
             .parquet(store_dir)
         )
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                emb.filter(
-                    (F.col("vec_id") >= B)
-                    & (F.col("vec_id") < APPEND_DEMO_MAX)
-                    & (F.col("vec_id") % 3 == shard)
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
+        return [
+            emb.filter(
+                (F.col("vec_id") >= B)
+                & (F.col("vec_id") < APPEND_DEMO_MAX)
+                & (F.col("vec_id") % 3 == k)
             )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _sign_merge(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(applied_dir, f"batch_{batch_id}")
@@ -1077,25 +1062,7 @@ def lsh_store_stream(
         with open(marker, "w") as f:
             f.write("ok")
 
-    name = f"mts_lshstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_sign_merge)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, emb.schema, _sign_merge)
 
     T = spark.read.schema(store_schema).parquet(store_dir)
     a = T.select(
@@ -1865,7 +1832,7 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"(vec_id < {APPEND_SPLIT}) builds the index once — coarse "
     "quantizer pinned to the history geometry, exactly like "
     "ann_ivf_index_append — and new embedding batches stream in as 3 "
-    "deterministic shards (readStream + maxFilesPerTrigger=1 under "
+    "deterministic shards (readStream, one shard per trigger, under "
     "Trigger.AvailableNow). Each micro-batch assigns ONLY ITS OWN "
     "vectors against the pinned broadcast centroids (O(batch) "
     "map-side argmin, per-vector independent) and appends the cell "
@@ -1886,54 +1853,40 @@ def ivf_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
     from magictables_spark.streaming.commit import (
+        ReplaySource,
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.warehouse import corpus_fingerprint
 
     B = APPEND_SPLIT
     wh, ck, lk, tag, _n = _ivf_persisted_index(spark, sf_dir, hist_limit=B)
     cents = wh.read_table(spark, ck)
     emb = _t(spark, sf_dir, "embeddings")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    stag = hashlib.md5(
-        f"v2:ivfstream:{B}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"ivfstream_{stag}")
-    src = os.path.join(root, "src")
-    cells_dir = os.path.join(root, "cells")
-    ready = os.path.join(root, "_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    src = ReplaySource(
+        "ivfstream",
+        f"v2:ivfstream:{B}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+    )
+    cells_dir = src.path("cells")
+
+    def _seed():
         # seed the cell store with the HISTORY index (same rows the
         # persisted bucketed table holds; plain parquet here because the
         # store is append-maintained between batches)
         wh.read_table(spark, lk).write.mode("overwrite").parquet(
             os.path.join(cells_dir, "seed")
         )
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                emb.filter((F.col("vec_id") >= B) & (F.col("vec_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            emb.filter((F.col("vec_id") >= B) & (F.col("vec_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _assign_append(batch_df: DataFrame, bid: int) -> None:
         sp = batch_df.sparkSession
@@ -1949,25 +1902,7 @@ def ivf_store_stream(
         if bid in _crash_after_write:
             raise RuntimeError(f"injected crash after batch {bid} write")
 
-    name = f"mts_ivfstream_{stag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_assign_append)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, emb.schema, _assign_append)
     cells = spark.read.parquet(*subdir_store_paths(cells_dir))
     return _ivf_serve(spark, sf_dir, cents, cells)
 
@@ -3375,7 +3310,7 @@ def ann_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"(vec_id < {APPEND_SPLIT}) trains the codebook and seeds the "
     "code store once (pinned geometry, exactly like "
     "ann_pq_index_append); new embedding batches stream in as 3 "
-    "deterministic shards (readStream + maxFilesPerTrigger=1 under "
+    "deterministic shards (readStream, one shard per trigger, under "
     "Trigger.AvailableNow), and each micro-batch encodes ONLY ITS OWN "
     "vectors at the pinned broadcast codebook — O(batch) subspace "
     "argmin, per-vector independent — appending 8-byte code rows to "
@@ -3395,53 +3330,39 @@ def pq_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
     from magictables_spark.streaming.commit import (
+        ReplaySource,
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.warehouse import corpus_fingerprint
 
     B = APPEND_SPLIT
     wh, ck, ek, tag, _n = _pq_persisted_index(spark, sf_dir, hist_limit=B)
     emb = _t(spark, sf_dir, "embeddings")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    stag = hashlib.md5(
-        f"v2:pqstream:{B}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"pqstream_{stag}")
-    src = os.path.join(root, "src")
-    codes_dir = os.path.join(root, "codes")
-    ready = os.path.join(root, "_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    src = ReplaySource(
+        "pqstream",
+        f"v2:pqstream:{B}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+    )
+    codes_dir = src.path("codes")
+
+    def _seed():
         # seed the code store with the HISTORY encode (same rows the
         # persisted table holds; plain parquet because the store is
         # append-maintained between batches)
         wh.read_table(spark, ek).write.mode("overwrite").parquet(
             os.path.join(codes_dir, "seed")
         )
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                emb.filter((F.col("vec_id") >= B) & (F.col("vec_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            emb.filter((F.col("vec_id") >= B) & (F.col("vec_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _encode_append(batch_df: DataFrame, bid: int) -> None:
         sp = batch_df.sparkSession
@@ -3457,25 +3378,7 @@ def pq_store_stream(
         if bid in _crash_after_write:
             raise RuntimeError(f"injected crash after batch {bid} write")
 
-    name = f"mts_pqstream_{stag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_encode_append)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, emb.schema, _encode_append)
     return _pq_serve(
         spark, sf_dir, wh.read_table(spark, ck),
         spark.read.parquet(*subdir_store_paths(codes_dir)),
@@ -3493,7 +3396,7 @@ def pq_store_stream(
     "one streams the probes) — the shape a production retrieval "
     "service runs when queries arrive continuously against a "
     "build-once index: 15 probe vectors split into 3 micro-batches "
-    "(readStream + maxFilesPerTrigger=1, Trigger.AvailableNow) each "
+    "(readStream, one shard per trigger, Trigger.AvailableNow) each "
     "serve top-10 from the PERSISTED full-corpus PQ index "
     "(ann_pq_persisted's codebook + 8-byte code table — zero "
     "training, zero index mutation; the index read is the same "
@@ -3510,47 +3413,33 @@ def pq_store_stream(
     tags=("similarity", "ann", "streaming", "scale", "warehouse"),
 )
 def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.warehouse import corpus_fingerprint
 
     NP = 15  # streamed probe set; 3 micro-batches of 5
     wh, ck, ek, _tag, _n = _pq_persisted_index(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    stag = hashlib.md5(
-        f"v1:annserve:{NP}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"annserve_{stag}")
-    src = os.path.join(root, "src")
-    out_dir = os.path.join(root, "results")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "annserve",
+        f"v1:annserve:{NP}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+    )
+    out_dir = src.path("results")
     out_schema = "query_id bigint, neighbor_id bigint, cosine double"
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+
+    def _seed():
         spark.createDataFrame([], out_schema).write.mode("overwrite").parquet(
             out_dir
         )
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                emb.filter((F.col("vec_id") < NP) & (F.col("vec_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            emb.filter((F.col("vec_id") < NP) & (F.col("vec_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _serve_batch(batch_df: DataFrame, _bid: int) -> None:
         sp = batch_df.sparkSession
@@ -3567,25 +3456,7 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    name = f"mts_annserve_{stag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_serve_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, emb.schema, _serve_batch)
     return (
         spark.read.schema(out_schema)
         .parquet(out_dir)
@@ -4505,7 +4376,7 @@ def simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(round-7 verdict item 2): the history corpus (doc_id < 250) "
     "seeds the band store once; the new-crawl side (doc_id >= 250) "
     "is split into 3 deterministic shards (doc_id % 3) and consumed "
-    "via readStream + maxFilesPerTrigger=1, so Trigger.AvailableNow "
+    "via readStream, one shard per trigger, so Trigger.AvailableNow "
     "executes THREE real micro-batches. Each foreachBatch turn (a) "
     "signs and bands ONLY its own micro-batch, (b) probes the "
     "CURRENT store — history plus every earlier batch — for Hamming "
@@ -4532,34 +4403,28 @@ def simhash_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
     from magictables_spark.streaming.commit import (
+        ReplaySource,
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import (
-        corpus_fingerprint as _cfp,
-        store_root,
-    )
+    from magictables_spark.warehouse import corpus_fingerprint
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    cfp = _cfp(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"v2:{B}:{_SH_BANDS}x{_SH_BITS}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"shstream_{tag}")
-    src = os.path.join(root, "src")
-    store_dir = os.path.join(root, "store")
-    hits_dir = os.path.join(root, "hits")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "shstream",
+        f"v2:{B}:{_SH_BANDS}x{_SH_BITS}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    )
+    store_dir = src.path("store")
+    hits_dir = src.path("hits")
     out_schema = "doc_id bigint, dup_of bigint, hamming int"
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+
+    def _seed():
         # seed: history band store + empty results log
         _simhash_bands(
             _simhash_sig_frame(docs.filter(F.col("doc_id") < B))
@@ -4567,24 +4432,13 @@ def simhash_store_stream(
         spark.createDataFrame([], out_schema).write.mode("overwrite").parquet(
             os.path.join(hits_dir, "seed")
         )
-        # 3 deterministic single-file shards of the new-crawl side
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                docs.filter((F.col("doc_id") >= B) & (F.col("doc_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        # 3 deterministic shards of the new-crawl side
+        return [
+            docs.filter((F.col("doc_id") >= B) & (F.col("doc_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _probe_and_append(batch_df: DataFrame, bid: int) -> None:
         # runs on the DRIVER once per micro-batch (foreachBatch
@@ -4619,25 +4473,7 @@ def simhash_store_stream(
         if bid in _crash_after_write:
             raise RuntimeError(f"injected crash after batch {bid} write")
 
-    name = f"mts_shstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_probe_and_append)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, docs.schema, _probe_and_append)
     return (
         spark.read.schema(out_schema)
         .parquet(*subdir_store_paths(hits_dir))
@@ -4694,7 +4530,7 @@ def simhash_store_stream(
     "form of dedup_minhash_incremental: the history corpus (doc_id < "
     "250) seeds the banded index (band, bh) and hashed-shingle sets "
     "once; the new-crawl side is split into 3 deterministic shards "
-    "(doc_id % 3) consumed via readStream + maxFilesPerTrigger=1, so "
+    "(doc_id % 3) consumed via readStream, one shard per trigger, so "
     "Trigger.AvailableNow executes THREE real micro-batches. Each "
     "foreachBatch turn (a) shingles/signs ONLY its own micro-batch "
     "(identical _MH16/_h60/P31 arithmetic to dedup_minhash, so the "
@@ -4723,35 +4559,29 @@ def minhash_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
     from magictables_spark.streaming.commit import (
+        ReplaySource,
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import (
-        corpus_fingerprint as _cfp,
-        store_root,
-    )
+    from magictables_spark.warehouse import corpus_fingerprint
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    cfp = _cfp(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"v2:{B}:mh16x4:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"mhstream_{tag}")
-    src = os.path.join(root, "src")
-    bands_dir = os.path.join(root, "bands")
-    hs_dir = os.path.join(root, "hs")
-    hits_dir = os.path.join(root, "hits")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "mhstream",
+        f"v2:{B}:mh16x4",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    )
+    bands_dir = src.path("bands")
+    hs_dir = src.path("hs")
+    hits_dir = src.path("hits")
     out_schema = "doc_id bigint, dup_of bigint, jaccard double"
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+
+    def _seed():
         # seed: history shingle-set + band stores, empty results log
         hs_h, bands_h = _minhash_tables(docs.filter(F.col("doc_id") < B))
         bands_h.write.mode("overwrite").parquet(os.path.join(bands_dir, "seed"))
@@ -4759,24 +4589,13 @@ def minhash_store_stream(
         spark.createDataFrame([], out_schema).write.mode("overwrite").parquet(
             os.path.join(hits_dir, "seed")
         )
-        # 3 deterministic single-file shards of the new-crawl side
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                docs.filter((F.col("doc_id") >= B) & (F.col("doc_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        # 3 deterministic shards of the new-crawl side
+        return [
+            docs.filter((F.col("doc_id") >= B) & (F.col("doc_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _probe_and_append(batch_df: DataFrame, bid: int) -> None:
         # runs on the DRIVER once per micro-batch (foreachBatch
@@ -4823,25 +4642,7 @@ def minhash_store_stream(
         if bid in _crash_after_write:
             raise RuntimeError(f"injected crash after batch {bid} write")
 
-    name = f"mts_mhstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_probe_and_append)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, docs.schema, _probe_and_append)
     return (
         spark.read.schema(out_schema)
         .parquet(*subdir_store_paths(hits_dir))

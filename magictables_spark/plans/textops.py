@@ -250,8 +250,8 @@ def dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     "store family now has both a batch and a streaming driver: exact-"
     "fp, MinHash, SimHash, IVF, LPA, rollup, SCD2, HLL): history "
     "(doc_id < 250) seeds the md5 fingerprint set once; the new crawl "
-    "streams in 3 shards (doc_id % 3) via readStream + "
-    "maxFilesPerTrigger=1, and each micro-batch (a) self-dedups (min "
+    "streams in 3 shards (doc_id % 3) via readStream, one shard "
+    "per trigger, and each micro-batch (a) self-dedups (min "
     "doc_id per fp), (b) anti-joins the CURRENT store — history plus "
     "every earlier batch — admitting only first-seen documents to the "
     "results log, then (c) appends exactly its admitted fps to the "
@@ -271,31 +271,28 @@ def dedup_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
     from magictables_spark.streaming.commit import (
+        ReplaySource,
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.warehouse import corpus_fingerprint
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"v2:{B}:fps:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"fpstream_{tag}")
-    src = os.path.join(root, "src")
-    store_dir = os.path.join(root, "store")
-    admit_dir = os.path.join(root, "admitted")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "fpstream",
+        f"v2:{B}:fps",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    )
+    store_dir = src.path("store")
+    admit_dir = src.path("admitted")
     out_schema = "doc_id bigint, fp string"
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+
+    def _seed():
         (
             docs.filter(F.col("doc_id") < B)
             .select(F.md5("text").alias("fp"))
@@ -306,23 +303,12 @@ def dedup_store_stream(
         spark.createDataFrame([], out_schema).write.mode("overwrite").parquet(
             os.path.join(admit_dir, "seed")
         )
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                docs.filter((F.col("doc_id") >= B) & (F.col("doc_id") % 3 == shard))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            docs.filter((F.col("doc_id") >= B) & (F.col("doc_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _admit_and_append(batch_df: DataFrame, bid: int) -> None:
         # the admission anti-join reads the store MINUS this batch's
@@ -351,25 +337,7 @@ def dedup_store_stream(
         if bid in _crash_after_write:
             raise RuntimeError(f"injected crash after batch {bid} write")
 
-    name = f"mts_fpstream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_admit_and_append)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, docs.schema, _admit_and_append)
     return (
         spark.read.schema(out_schema)
         .parquet(*subdir_store_paths(admit_dir))
@@ -1183,7 +1151,7 @@ def label_propagation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     "stream in. The history subgraph (pairs with both docs < "
     f"{_LPA_HIST_SPLIT}) seeds a base label store + edge log once; the "
     "new pairs are split into 3 deterministic shards ((doc_a + doc_b) "
-    "% 3) and consumed via readStream + maxFilesPerTrigger=1 under "
+    "% 3) and consumed via readStream, one shard per trigger, under "
     "Trigger.AvailableNow — three real micro-batches. Each batch: "
     "append its symmetrized edges to the edge log, expand the "
     "adjacency closure of ITS new endpoints over the union graph "
@@ -1211,29 +1179,27 @@ def lpa_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import hashlib
     import os
-    import shutil
 
-    from magictables_spark.streaming import _resolve_snapshot
+    from magictables_spark.streaming import _resolve_snapshot, publish_snapshot
     from magictables_spark.streaming.commit import (
+        ReplaySource,
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint, store_root
+    from magictables_spark.warehouse import corpus_fingerprint
 
     H = _LPA_HIST_SPLIT
     docs = _t(spark, sf_dir, "documents")
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"v2:lpastream:{H}:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:12]
-    root = store_root(f"lpastream_{tag}")
-    src = os.path.join(root, "src")
-    edges_dir = os.path.join(root, "edges")
-    base_dir = os.path.join(root, "base")
-    delta_dir = os.path.join(root, "delta")
-    ready = os.path.join(root, "_READY")
+    src = ReplaySource(
+        "lpastream",
+        f"v2:lpastream:{H}",
+        os.path.realpath(sf_dir),
+        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    )
+    edges_dir = src.path("edges")
+    base_dir = src.path("base")
+    delta_dir = src.path("delta")
     lab_schema = "v bigint, lab bigint"
 
     def _sym(p: DataFrame) -> DataFrame:
@@ -1241,9 +1207,7 @@ def lpa_store_stream(
             p.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
 
-    if not os.path.exists(ready):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(src)
+    def _seed():
         os.makedirs(delta_dir)
         pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
         hist_edges = _sym(
@@ -1259,23 +1223,12 @@ def lpa_store_stream(
         new_pairs = pairs.filter(
             (F.col("doc_a") >= H) | (F.col("doc_b") >= H)
         ).localCheckpoint()
-        for shard in range(3):
-            part_dir = os.path.join(root, f"part{shard}")
-            (
-                new_pairs.filter((F.col("doc_a") + F.col("doc_b")) % 3 == shard)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-            _dst = os.path.join(src, f"shard_{shard}.parquet")
-            os.replace(os.path.join(part_dir, pf[0]), _dst)
-            # guarantee oldest-first file-source delivery even on coarse-
-            # mtime filesystems: stamp strictly increasing mtimes
-            os.utime(_dst, (1_600_000_000 + shard, 1_600_000_000 + shard))
-            shutil.rmtree(part_dir, ignore_errors=True)
-        with open(ready, "w") as f:
-            f.write("ok")
+        return [
+            new_pairs.filter((F.col("doc_a") + F.col("doc_b")) % 3 == k)
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
 
     def _maintain(batch_pairs: DataFrame, batch_id: int) -> None:
         sp = batch_pairs.sparkSession
@@ -1323,36 +1276,11 @@ def lpa_store_stream(
         )
         fresh = os.path.join(delta_dir, f"snapshot_b{batch_id}")
         new_delta.write.mode("overwrite").parquet(fresh)
-        tmp = os.path.join(delta_dir, "LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(fresh))
-        os.replace(tmp, os.path.join(delta_dir, "LATEST"))
-        for name in os.listdir(delta_dir):
-            pth = os.path.join(delta_dir, name)
-            if name.startswith("snapshot_") and pth != fresh and os.path.isdir(pth):
-                shutil.rmtree(pth, ignore_errors=True)
+        publish_snapshot(delta_dir, fresh)
         if batch_id in _crash_after_write:
             raise RuntimeError(f"injected crash after batch {batch_id} write")
 
-    name = f"mts_lpastream_{tag}"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-            active.awaitTermination()
-    stream = (
-        spark.readStream.schema("doc_a bigint, doc_b bigint")
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    src.drain(spark, "doc_a bigint, doc_b bigint", _maintain)
     base = spark.read.schema(lab_schema).parquet(base_dir)
     snap = _resolve_snapshot(delta_dir)
     delta = (

@@ -51,8 +51,10 @@ def get_spark(app_name: str = "magictables_spark", master: str | None = None) ->
       static shuffle-partition count is always wrong somewhere; AQE
       re-plans with runtime statistics.
     - Arrow on: every pandas_udf / toPandas boundary is vectorized.
+    - ``local[N]`` and shuffle partitions default to the cores this
+      process may run on; ``SPARK_GRAFT_CPUS`` overrides (deployment).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     # Per-process warehouse dir: saveAsTable writes table DIRECTORIES
     # under the warehouse; a killed session leaves orphaned dirs with no
     # catalog entry, and the next session's saveAsTable dies with

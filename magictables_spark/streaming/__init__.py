@@ -179,10 +179,19 @@ def stream_upsert_foreach_batch(
     bounded: the snapshot carries one row per key, not the event
     history. Read back with :func:`read_upsert_snapshot`.
     """
-    import os
-    import shutil
+    return (
+        events.writeStream.foreachBatch(
+            upsert_merge_batch(target_dir, key_cols, status_col)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .trigger(availableNow=True)
+    )
 
-    from pyspark.sql import functions as F
+
+def upsert_merge_batch(target_dir: str, key_cols: tuple[str, ...], status_col: str):
+    """The foreachBatch body of :func:`stream_upsert_foreach_batch`."""
+    import os
 
     keys = list(key_cols)
 
@@ -213,22 +222,26 @@ def stream_upsert_foreach_batch(
         )
         fresh = os.path.join(target_dir, f"snapshot_b{batch_id}")
         merged.write.mode("overwrite").parquet(fresh)
-        # atomic repoint: readers see the old snapshot or the new one
-        tmp = os.path.join(target_dir, "LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(os.path.basename(fresh))
-        os.replace(tmp, os.path.join(target_dir, "LATEST"))
-        for name in os.listdir(target_dir):
-            p = os.path.join(target_dir, name)
-            if name.startswith("snapshot_") and p != fresh and os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
+        publish_snapshot(target_dir, fresh)
 
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
+    return merge_batch
+
+
+def publish_snapshot(target_dir: str, fresh: str) -> None:
+    """Atomically repoint ``<target_dir>/LATEST`` at the snapshot dir
+    ``fresh`` (readers see the old snapshot or the new one), then prune
+    every other ``snapshot_*`` dir."""
+    import os
+    import shutil
+
+    tmp = os.path.join(target_dir, "LATEST.tmp")
+    with open(tmp, "w") as f:
+        f.write(os.path.basename(fresh))
+    os.replace(tmp, os.path.join(target_dir, "LATEST"))
+    for name in os.listdir(target_dir):
+        p = os.path.join(target_dir, name)
+        if name.startswith("snapshot_") and p != fresh and os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def _resolve_snapshot(target_dir: str) -> str | None:

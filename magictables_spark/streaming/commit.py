@@ -1,4 +1,32 @@
-"""Crash-safe commit protocol for non-idempotent foreachBatch merges.
+"""Replay-source lifecycle and crash-safe commit protocols for the
+streaming store maintainers (the ``*_store_stream`` slugs).
+
+Every maintainer runs the same replay lifecycle, owned here by
+``ReplaySource``; a maintainer supplies only its seed, its shard
+frames and its foreachBatch merge body.
+
+- ROOT: ``store_root(f"{prefix}_{md5(':'.join(key))[:12]}")``. The key
+  carries the maintainer's version tag and geometry, the corpus path
+  and the corpus fingerprint, so changed inputs get a fresh root and a
+  warm call reuses the old one.
+- PREPARE, guarded by ``<root>/_READY``: wipe the root, write the
+  seed state, write the shards, then the marker. A root without the
+  marker (a crash mid-prepare) is never trusted; it is wiped and
+  rebuilt.
+- SHARDS: shard ``k`` is ONE ``coalesce(1)`` parquet file,
+  ``<root>/src/shard_{k}.parquet``, stamped with mtime
+  ``SHARD_EPOCH + k``. The file source sorts files by modification
+  time and delivers the oldest first, one file per trigger. Shards
+  written within one filesystem tick would otherwise tie and arrive in
+  listing order; the stamp makes replay order the shard order, which
+  order-sensitive merges (SCD2 runs, watermark-driven joins) rely on.
+- DRAIN: stop any active query with the maintainer's name (a second
+  call in one session), ``readStream`` the shard dir with
+  ``maxFilesPerTrigger=1`` and a ``*.parquet`` glob, run the merge
+  body in ``foreachBatch`` with its checkpoint at ``<root>/ckpt``
+  under ``Trigger.AvailableNow``, and wait. The checkpoint makes a warm
+  call run zero batches; a batch that crashed is replayed on the next
+  call, which the commit protocols below make safe.
 
 foreachBatch is at-least-once: a failure AFTER the store rewrite but
 BEFORE the applied-marker write replays the batch against the already-
@@ -45,10 +73,101 @@ never reads it.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
+from typing import Callable, Iterable
 
-__all__ = ["VersionedStore", "batch_subdir", "subdir_store_paths"]
+from pyspark.sql import DataFrame, SparkSession
+
+from magictables_spark.warehouse import store_root
+
+__all__ = [
+    "ReplaySource",
+    "VersionedStore",
+    "batch_subdir",
+    "stop_query",
+    "subdir_store_paths",
+]
+
+# shard k's mtime is SHARD_EPOCH + k: strictly increasing in k, and
+# independent of the clock and of how fast the shards were written
+SHARD_EPOCH = 1_600_000_000
+
+
+def stop_query(spark: SparkSession, name: str) -> None:
+    """Stop the active streaming query called ``name``, if any, so a
+    second call in the same session can start it again."""
+    for active in spark.streams.active:
+        if active.name == name:
+            active.stop()
+            active.awaitTermination()
+
+
+class ReplaySource:
+    """One maintainer's replay source: content-keyed root, ``_READY``-
+    guarded prepare, one-file mtime-ordered shards, and the
+    ``availableNow`` foreachBatch drain (module doc)."""
+
+    def __init__(self, prefix: str, *key):
+        tag = hashlib.md5(":".join(map(str, key)).encode()).hexdigest()[:12]
+        self.root = store_root(f"{prefix}_{tag}")
+        self.name = f"mts_{prefix}_{tag}"
+
+    def path(self, *parts: str) -> str:
+        return os.path.join(self.root, *parts)
+
+    def prepare(self, seed: Callable[[], Iterable[DataFrame]]) -> None:
+        """Build the root unless ``_READY`` is present. ``seed()`` runs
+        on a freshly wiped root whose ``src`` dir exists; it writes the
+        store's initial state and returns the shard frames in replay
+        order."""
+        ready = self.path("_READY")
+        if os.path.exists(ready):
+            return
+        shutil.rmtree(self.root, ignore_errors=True)
+        os.makedirs(self.path("src"))
+        for k, shard in enumerate(seed()):
+            self._write_shard(k, shard)
+        with open(ready, "w") as f:
+            f.write("ok")
+
+    def _write_shard(self, k: int, shard: DataFrame) -> None:
+        part_dir = self.path(f"part{k}")
+        shard.coalesce(1).write.mode("overwrite").parquet(part_dir)
+        (part,) = [p for p in os.listdir(part_dir) if p.endswith(".parquet")]
+        dst = self.path("src", f"shard_{k}.parquet")
+        os.replace(os.path.join(part_dir, part), dst)
+        os.utime(dst, (SHARD_EPOCH + k, SHARD_EPOCH + k))
+        shutil.rmtree(part_dir, ignore_errors=True)
+
+    def stream(self, spark: SparkSession, schema) -> DataFrame:
+        """The shards as a file-source stream, one shard per trigger."""
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(self.path("src"))
+        )
+
+    def drain(
+        self,
+        spark: SparkSession,
+        schema,
+        merge: Callable[[DataFrame, int], None],
+    ) -> None:
+        """Feed every shard not yet in the checkpoint through ``merge``
+        (one foreachBatch call per shard) and wait until done."""
+        stop_query(spark, self.name)
+        query = (
+            self.stream(spark, schema)
+            .writeStream.foreachBatch(merge)
+            .option("checkpointLocation", self.path("ckpt"))
+            .queryName(self.name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
 
 
 def batch_subdir(store_dir: str, batch_id) -> str:

@@ -15,9 +15,6 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     from magictables_spark.session import get_spark
 
-    # Tiny fixtures: fewer threads/partitions => less task-scheduling
-    # overhead per test. Scale configs are exercised by bench.py instead.
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("magictables_spark_tests")
     yield spark
 

@@ -283,6 +283,36 @@ def test_chain_with_magicframe_target(spark, tmp_path):
         base.chain(bare)
 
 
+def test_chain_on_flattened_nested_source_key(spark):
+    """A frame ingested from a nested payload carries the flattened
+    top-level column ``customer.id``: the URL binds that column (not a
+    struct path ``customer`` -> ``id``) and the column survives the
+    payload unnest."""
+
+    def fetcher(url, params=None):
+        cid = int(url.rsplit("/", 1)[-1])
+        return {"tier": "gold" if cid % 2 else "silver"}
+
+    base = MagicFrame.from_raw(
+        spark,
+        [
+            {"order_id": 1, "customer": {"id": 7}},
+            {"order_id": 2, "customer": {"id": 8}},
+        ],
+    )
+    assert "customer.id" in base.df.columns
+    out = base.chain(
+        "http://mock/customer/{customer_id}",
+        source_key="customer.id",
+        target_key="customer_id",
+        fetcher=fetcher,
+    )
+    got = sorted(
+        (r["order_id"], r["customer.id"], r["api_tier"]) for r in out.df.collect()
+    )
+    assert got == [(1, 7, "gold"), (2, 8, "silver")]
+
+
 def test_chain_llm_key_inference(spark):
     """Deterministic binding fails ({uid} has no matching column), the
     injected LLM maps it, and the chain proceeds — deterministic match

@@ -29,7 +29,6 @@ def main() -> int:
     from magictables_spark.session import get_spark
     from tests.parity import compare
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("devcheck")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()

@@ -38,7 +38,6 @@ def main() -> int:
     from magictables_spark.session import get_spark
     from tests.parity import driver_unsafe_columns
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("driver_canon_smoke")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -211,7 +211,6 @@ def main() -> int:
     from magictables_spark.plans.queries import REGISTRY
     from magictables_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
 
