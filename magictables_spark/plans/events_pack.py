@@ -247,7 +247,7 @@ def _events_stream_sharded(
     import os
 
     from magictables_spark.streaming.commit import ReplaySource
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
@@ -256,10 +256,7 @@ def _events_stream_sharded(
     if n_shards < 2:
         return _events_stream(spark, sf_dir)
     src = ReplaySource(
-        "evshard",
-        f"v1:evshard:{n_shards}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(path),
+        "evshard", *store_key(sf_dir, "events", f"v1:evshard:{n_shards}")
     )
 
     def _seed():
@@ -1124,32 +1121,24 @@ _SCD2_SPLIT_TS = "2024-01-16 00:00:00"  # history/batch time boundary
     tags=("events", "pipeline", "merge", "warehouse", "scale"),
 )
 def scd2_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     ev = _t(spark, sf_dir, "events")
     split = F.lit(_SCD2_SPLIT_TS).cast("timestamp")
-    n = ev.count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"v1:scd2:{_SCD2_SPLIT_TS}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("scd2"))
-    hk, dk = f"scd2H_{tag}", f"scd2D_{tag}"
+    store = Store("scd2", sf_dir, "events", f"v1:scd2:{_SCD2_SPLIT_TS}")
+    layout = dict(bucket_by=["user_id"], n_buckets=16, sort_by=["user_id", "version"])
+    stored = store.table(
+        spark,
+        "scd2H",
+        lambda: _scd2_runs(
+            ev.filter(F.col("ts") < split).withColumn(
+                "weight", F.lit(1).cast("bigint")
+            )
+        ),
+        **layout,
+    )
 
-    if not wh.has_table(hk):
-        hist = ev.filter(F.col("ts") < split).withColumn(
-            "weight", F.lit(1).cast("bigint")
-        )
-        wh.write_table(
-            _scd2_runs(hist), hk, source_info={"split": _SCD2_SPLIT_TS},
-            bucket_by=["user_id"], n_buckets=16, sort_by=["user_id", "version"],
-        )
-    stored = wh.read_table(spark, hk)
-
-    if not wh.has_table(dk):
+    def _delta() -> DataFrame:
         batch = ev.filter(F.col("ts") >= split)
         touched = batch.select("user_id").distinct()
         # each stored run of a touched user re-enters as ONE
@@ -1161,17 +1150,16 @@ def scd2_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("status").alias("event_type"),
             F.col("n_events").alias("weight"),
         )
-        merged = synth.unionByName(
-            batch.select(
-                "user_id", "ts", "event_id", "event_type",
-                F.lit(1).cast("bigint").alias("weight"),
+        return _scd2_runs(
+            synth.unionByName(
+                batch.select(
+                    "user_id", "ts", "event_id", "event_type",
+                    F.lit(1).cast("bigint").alias("weight"),
+                )
             )
         )
-        wh.write_table(
-            _scd2_runs(merged), dk, source_info={"split": _SCD2_SPLIT_TS},
-            bucket_by=["user_id"], n_buckets=16, sort_by=["user_id", "version"],
-        )
-    delta = wh.read_table(spark, dk)
+
+    delta = store.table(spark, "scd2D", _delta, **layout)
 
     cols = ["user_id", "version", "status", "vf", "n_events"]
     untouched = stored.join(
@@ -1223,16 +1211,13 @@ def scd2_store_stream(
     import os
 
     from magictables_spark.streaming.commit import ReplaySource
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     NB = 32  # user-hash bucket partitions (the overwrite/pruning unit)
     ev = _t(spark, sf_dir, "events")
     split = F.lit(_SCD2_SPLIT_TS).cast("timestamp")
     src = ReplaySource(
-        "scd2stream",
-        f"v2:scd2s:{NB}:{_SCD2_SPLIT_TS}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+        "scd2stream", *store_key(sf_dir, "events", f"v2:scd2s:{NB}:{_SCD2_SPLIT_TS}")
     )
     store_dir = src.path("store")
     applied_dir = src.path("applied")
@@ -1375,18 +1360,12 @@ def scd2_store_stream(
     tags=("streaming", "merge", "pipeline"),
 )
 def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from magictables_spark.streaming import read_upsert_snapshot, upsert_merge_batch
     from magictables_spark.streaming.commit import ReplaySource
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     ev = _t(spark, sf_dir, "events")
-    src = ReplaySource(
-        "upsert_q",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
-    )
+    src = ReplaySource("upsert_q", *store_key(sf_dir, "events"))
     src.prepare(lambda: [ev.filter(F.col("event_id") % 3 == k) for k in range(3)])
     target = src.path("target")
     src.drain(spark, ev.schema, upsert_merge_batch(target, ("user_id",), "event_type"))
@@ -1431,36 +1410,23 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "pipeline", "warehouse", "scale"),
 )
 def rollup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     ev = _t(spark, sf_dir, "events").select(
         F.col("ts").cast("date").alias("day"),
         "event_type",
         F.expr(VAL_I.replace("value", "value")).alias("cents"),
     )
-    n = _t(spark, sf_dir, "events").count()
-    # content fingerprint: regenerated same-size events invalidate the
-    # persisted partials (round-6 advisory)
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = "rollup_" + hashlib.md5(
-        f"v2:16:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("rollup"))
-    if not wh.has_table(key):
-        hist = (
-            ev.filter(F.dayofmonth("day") < 16)
-            .groupBy("day", "event_type")
-            .agg(F.count("*").alias("n_events"), F.sum("cents").alias("sum_cents"))
-        )
-        wh.write_table(
-            hist, key, source_info={"n_events": n, "split": "day<16"},
-            bucket_by=["day", "event_type"], n_buckets=32,
-            sort_by=["day", "event_type"],
-        )
-    store = wh.read_table(spark, key)
+    store = Store("rollup", sf_dir, "events", "v2:16").table(
+        spark,
+        "rollup",
+        lambda: ev.filter(F.dayofmonth("day") < 16)
+        .groupBy("day", "event_type")
+        .agg(F.count("*").alias("n_events"), F.sum("cents").alias("sum_cents")),
+        bucket_by=["day", "event_type"],
+        n_buckets=32,
+        sort_by=["day", "event_type"],
+    )
     batch = (
         ev.filter(F.dayofmonth("day") >= 16)
         .groupBy("day", "event_type")
@@ -1531,14 +1497,9 @@ def rollup_store_stream(
     import os
 
     from magictables_spark.streaming.commit import ReplaySource
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
-    src = ReplaySource(
-        "rollstream",
-        "v2:16",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
-    )
+    src = ReplaySource("rollstream", *store_key(sf_dir, "events", "v2:16"))
     store_dir = src.path("store")
     applied_dir = src.path("applied")
 

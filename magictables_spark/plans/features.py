@@ -427,27 +427,17 @@ def hll_sketch_rollup(spark, sf_dir):
     tags=("stats", "sketch", "scale", "warehouse"),
 )
 def hll_rollup_incremental(spark, sf_dir):
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-    n = ev.count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = "hllstore_" + hashlib.md5(
-        f"v1:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("hll"))
-    if not wh.has_table(key):
-        hist = (
-            ev.filter(F.col("ts") < split)
-            .groupBy("event_type")
-            .agg(F.hll_sketch_agg("user_id").alias("sk"))
-        )
-        wh.write_table(hist, key, source_info={"split": "ts<2024-01-16"})
-    stored = wh.read_table(spark, key)
+    stored = Store("hll", sf_dir, "events", "v1").table(
+        spark,
+        "hllstore",
+        lambda: ev.filter(F.col("ts") < split)
+        .groupBy("event_type")
+        .agg(F.hll_sketch_agg("user_id").alias("sk")),
+    )
     batch = (
         ev.filter(F.col("ts") >= split)
         .groupBy("event_type")
@@ -498,19 +488,12 @@ def hll_store_stream(
     sf_dir,
     _crash_after_write: frozenset[int] = frozenset(),
 ):
-    import os
-
     from magictables_spark.streaming.commit import ReplaySource, VersionedStore
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-    src = ReplaySource(
-        "hllstream",
-        "v2:hlls",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
-    )
+    src = ReplaySource("hllstream", *store_key(sf_dir, "events", "v2:hlls"))
 
     def _sketch(df):
         return df.groupBy("event_type").agg(F.hll_sketch_agg("user_id").alias("sk"))

@@ -2537,18 +2537,11 @@ def auc_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
     from magictables_spark.streaming.commit import ReplaySource, VersionedStore
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     emb = _t(spark, sf_dir, "embeddings")
-    src = ReplaySource(
-        "aucstream",
-        "v2:4",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-    )
+    src = ReplaySource("aucstream", *store_key(sf_dir, "embeddings", "v2:4"))
 
     # Versioned store + atomic CURRENT pointer flip as the single
     # commit point (streaming/commit.py — the r8 ADVICE fix: the old

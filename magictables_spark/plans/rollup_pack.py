@@ -487,18 +487,10 @@ _QH_B = 64
     tags=("stats", "sketch", "scale", "warehouse", "events"),
 )
 def quantile_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-    n = ev.count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = "qhist_" + hashlib.md5(
-        f"v1:{_QH_B}x{_QH_W}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
 
     def _hist(df: DataFrame) -> DataFrame:
         b = F.least(
@@ -509,14 +501,9 @@ def quantile_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "bin"
         ).agg(F.count("*").alias("c"))
 
-    wh = Warehouse(store_root("qhist"))
-    if not wh.has_table(key):
-        wh.write_table(
-            _hist(ev.filter(F.col("ts") < split)),
-            key,
-            source_info={"bins": _QH_B, "width": _QH_W},
-        )
-    stored = wh.read_table(spark, key)
+    stored = Store("qhist", sf_dir, "events", f"v1:{_QH_B}x{_QH_W}").table(
+        spark, "qhist", lambda: _hist(ev.filter(F.col("ts") < split))
+    )
     batch = _hist(ev.filter(F.col("ts") >= split))
     merged = (
         stored.unionByName(batch)
@@ -623,18 +610,13 @@ def quantile_hist_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
     from magictables_spark.streaming.commit import ReplaySource, VersionedStore
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
     src = ReplaySource(
-        "qhstream",
-        f"v2:qhs:{_QH_B}x{_QH_W}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+        "qhstream", *store_key(sf_dir, "events", f"v2:qhs:{_QH_B}x{_QH_W}")
     )
     store_schema = "event_type string, bin bigint, c bigint"
     # versioned store + atomic CURRENT flip: the count-merge is not
@@ -774,18 +756,10 @@ _CMS_D, _CMS_W = 4, 256  # depth x width; ~2.7k ints per store
     tags=("stats", "sketch", "scale", "warehouse", "events"),
 )
 def cms_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-    n = ev.count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = "cms_" + hashlib.md5(
-        f"v1:{_CMS_D}x{_CMS_W}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
 
     js = spark.range(_CMS_D).select(F.col("id").alias("j"))
     col_expr = F.expr(
@@ -802,16 +776,11 @@ def cms_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("c"))
         )
 
-    wh = Warehouse(store_root("cms"))
-    if not wh.has_table(key):
-        wh.write_table(
-            _sketch(ev.filter(F.col("ts") < split)),
-            key,
-            source_info={"d": _CMS_D, "w": _CMS_W},
-        )
+    stored = Store("cms", sf_dir, "events", f"v1:{_CMS_D}x{_CMS_W}").table(
+        spark, "cms", lambda: _sketch(ev.filter(F.col("ts") < split))
+    )
     merged = (
-        wh.read_table(spark, key)
-        .unionByName(_sketch(ev.filter(F.col("ts") >= split)))
+        stored.unionByName(_sketch(ev.filter(F.col("ts") >= split)))
         .groupBy("j", "col")
         .agg(F.sum("c").alias("c"))
     )
@@ -873,18 +842,13 @@ def cms_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
     from magictables_spark.streaming.commit import ReplaySource, VersionedStore
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
     src = ReplaySource(
-        "cmsstream",
-        f"v2:cmss:{_CMS_D}x{_CMS_W}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "events.parquet")),
+        "cmsstream", *store_key(sf_dir, "events", f"v2:cmss:{_CMS_D}x{_CMS_W}")
     )
     store_schema = "j bigint, col bigint, c bigint"
     # versioned store + atomic CURRENT flip (streaming/commit.py): the
@@ -984,10 +948,7 @@ def cms_store_stream(
     tags=("tpch", "pipeline", "warehouse", "scale"),
 )
 def join_view_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
@@ -1007,24 +968,14 @@ def join_view_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_hist = cust.filter(F.col("c_custkey") % 10 < 9)
     c_delta = cust.filter(F.col("c_custkey") % 10 == 9)
 
-    # cache key = corpus fingerprint + path only: the fingerprint
-    # already identifies the input bytes, so the warm path (store
-    # exists) never scans the fact table (r8 ADVICE item)
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "orders.parquet"))
-    key = "joinview_" + hashlib.md5(
-        f"v2:5:10:{os.path.realpath(sf_dir)}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("joinview"))
-    if not wh.has_table(key):
-        wh.write_table(
-            _view(o_hist, c_hist),
-            key,
-            source_info={"split": "o%5<4, c%10<9"},
-            bucket_by=["o_orderkey"],
-            n_buckets=32,
-            sort_by=["o_orderkey"],
-        )
-    store = wh.read_table(spark, key)
+    store = Store("joinview", sf_dir, "orders", "v2:5:10").table(
+        spark,
+        "joinview",
+        lambda: _view(o_hist, c_hist),
+        bucket_by=["o_orderkey"],
+        n_buckets=32,
+        sort_by=["o_orderkey"],
+    )
     # delta legs: batch-sized dO against the full dim; history against
     # the broadcast dim delta (map-side — history never shuffles)
     leg_do = _view(o_delta, cust)
@@ -1078,15 +1029,10 @@ def join_view_store_stream(
     import os
 
     from magictables_spark.streaming.commit import ReplaySource
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     orders = _t(spark, sf_dir, "orders")
-    src = ReplaySource(
-        "jvstream",
-        "v1:5",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "orders.parquet")),
-    )
+    src = ReplaySource("jvstream", *store_key(sf_dir, "orders", "v1:5"))
     store_dir = src.path("store")
 
     def _view(o: DataFrame, c: DataFrame) -> DataFrame:

@@ -696,42 +696,31 @@ def _ann_persisted_index(spark: SparkSession, sf_dir: str):
     hot-bucket rank `rb` precomputed at build time, then read back
     through the catalog so the serving join consumes the bucket layout
     with zero index-side exchange AND zero index recompute (plan-
-    asserted in tests/test_ann_persisted.py). Key = (config, corpus
-    path, corpus size, corpus CONTENT fingerprint), so distinct
-    fixtures/configs never collide and a regenerated corpus — even
-    same-size at the same path — forces a rebuild (round-6 advisory;
-    the fingerprint is a driver-side stat of the parquet files, no
-    data read). The warehouse root is per-user / $MTS_WAREHOUSE_DIR."""
-    import hashlib
-    import os
+    asserted in tests/test_ann_persisted.py)."""
 
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
-    n_vec = _t(spark, sf_dir, "embeddings").count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    key = "annlsh_" + hashlib.md5(
-        f"v2:{N_TABLES}:{N_PROBES}:{os.path.realpath(sf_dir)}:{n_vec}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("ann"))
-    if not wh.has_table(key):
+    def _build() -> DataFrame:
         idx, _ = _lsh_index_frame(spark, sf_dir, N_TABLES, N_PROBES)
-        idx = idx.withColumnRenamed("table", "tbl")
         wb = Window.partitionBy("tbl", "bucket").orderBy(
             F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
         )
-        idx = idx.withColumn("rb", F.row_number().over(wb))
-        wh.write_table(
-            idx,
-            key,
-            source_info={"n_vec": n_vec, "config": f"T{N_TABLES}-P{N_PROBES}"},
-            # 32 buckets = one per local[32] core; a cluster sizes this
-            # to total executor slots. 16 measured +5-10% serve latency
-            # at sf1 purely from the halved scan parallelism.
-            bucket_by=["tbl", "bucket"],
-            n_buckets=32,
-            sort_by=["tbl", "bucket", "rb"],
+        return idx.withColumnRenamed("table", "tbl").withColumn(
+            "rb", F.row_number().over(wb)
         )
-    return wh.read_table(spark, key), n_vec
+
+    idx = Store("ann", sf_dir, "embeddings", f"v2:{N_TABLES}:{N_PROBES}").table(
+        spark,
+        "annlsh",
+        _build,
+        # 32 buckets = one per local[32] core; a cluster sizes this
+        # to total executor slots. 16 measured +5-10% serve latency
+        # at sf1 purely from the halved scan parallelism.
+        bucket_by=["tbl", "bucket"],
+        n_buckets=32,
+        sort_by=["tbl", "bucket", "rb"],
+    )
+    return idx, _t(spark, sf_dir, "embeddings").count()
 
 
 @q(
@@ -836,10 +825,7 @@ def _append_oracle() -> str:
     tags=("similarity", "ann", "scale", "warehouse"),
 )
 def ann_lsh_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     B = APPEND_SPLIT
     # demo corpus bounded at APPEND_DEMO_MAX (no-op at sf <= 0.1; keeps
@@ -850,51 +836,42 @@ def ann_lsh_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bucket geometry is a property of the INDEX (fixed at creation
     # from the history size), not of the current corpus
     n_hist = min(B, n_vec)
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"v2:{N_TABLES}:{N_PROBES}:{B}:{os.path.realpath(sf_dir)}:{n_vec}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("ann"))
-    hk, ak = f"annlshH_{tag}", f"annlshA_{tag}"
-
+    store = Store("ann", sf_dir, "embeddings", f"v2:{N_TABLES}:{N_PROBES}:{B}")
+    layout = dict(
+        bucket_by=["tbl", "bucket"], n_buckets=32, sort_by=["tbl", "bucket", "rb"]
+    )
     wb = Window.partitionBy("tbl", "bucket").orderBy(
         F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
     )
-    if not wh.has_table(hk):
-        hist = _lsh_index_core(
-            spark, quant.filter(F.col("vec_id") < B), n_hist, N_TABLES, N_PROBES
+
+    def _rows(vecs: DataFrame) -> DataFrame:
+        # index rows at the PINNED geometry: n_hist, not n_vec
+        return _lsh_index_core(
+            spark, vecs, n_hist, N_TABLES, N_PROBES
         ).withColumnRenamed("table", "tbl")
-        wh.write_table(
-            hist.withColumn("rb", F.row_number().over(wb)),
-            hk,
-            source_info={"n_hist": n_hist, "config": f"T{N_TABLES}-P{N_PROBES}"},
-            bucket_by=["tbl", "bucket"],
-            n_buckets=32,
-            sort_by=["tbl", "bucket", "rb"],
-        )
-    if not wh.has_table(ak):
-        store = wh.read_table(spark, hk)
-        # batch rows at the PINNED geometry: n_hist, not n_vec
-        batch = _lsh_index_core(
-            spark, quant.filter(F.col("vec_id") >= B), n_hist, N_TABLES, N_PROBES
-        ).withColumnRenamed("table", "tbl")
+
+    store.ensure(
+        "annlshH",
+        lambda: _rows(quant.filter(F.col("vec_id") < B)).withColumn(
+            "rb", F.row_number().over(wb)
+        ),
+        **layout,
+    )
+
+    def _append() -> DataFrame:
+        hist = store.read(spark, "annlshH")
+        batch = _rows(quant.filter(F.col("vec_id") >= B))
         touched = batch.select("tbl", "bucket").distinct()
-        untouched = store.join(touched, ["tbl", "bucket"], "left_anti")
+        untouched = hist.join(touched, ["tbl", "bucket"], "left_anti")
         merged = (
-            store.join(touched, ["tbl", "bucket"], "left_semi")
+            hist.join(touched, ["tbl", "bucket"], "left_semi")
             .drop("rb")
             .unionByName(batch)
             .withColumn("rb", F.row_number().over(wb))
         )
-        wh.write_table(
-            untouched.unionByName(merged),
-            ak,
-            source_info={"n_vec": n_vec, "appended_from": hk},
-            bucket_by=["tbl", "bucket"],
-            n_buckets=32,
-            sort_by=["tbl", "bucket", "rb"],
-        )
-    T = wh.read_table(spark, ak)
+        return untouched.unionByName(merged)
+
+    T = store.table(spark, "annlshA", _append, **layout)
     a = T.select(
         F.col("tbl").alias("table"),
         F.explode(
@@ -946,7 +923,7 @@ def lsh_store_stream(
     import os
 
     from magictables_spark.streaming.commit import ReplaySource
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     B = APPEND_SPLIT
     NPG = 16  # bucket-group partitions (the overwrite/pruning unit)
@@ -956,10 +933,7 @@ def lsh_store_stream(
     emb = _t(spark, sf_dir, "embeddings")
     src = ReplaySource(
         "lshstream",
-        f"v2:lshstream:{N_TABLES}:{N_PROBES}:{B}",
-        os.path.realpath(sf_dir),
-        n_vec,
-        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+        *store_key(sf_dir, "embeddings", f"v2:lshstream:{N_TABLES}:{N_PROBES}:{B}"),
     )
     store_dir = src.path("store")
     applied_dir = src.path("applied")
@@ -1252,6 +1226,12 @@ def _minhash_tables(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     hs = raw.select(
         "doc_id", F.expr(f"transform(sh, s -> {_h60_spark('s')})").alias("hs")
     )
+    return hs, _minhash_bands(hs)
+
+
+def _minhash_bands(hs: DataFrame) -> DataFrame:
+    """The banded LSH index (doc_id, band, bh) of a hashed-shingle set
+    frame (``_minhash_tables``)."""
     # h % P31 reduced once per token, not per permutation — value-
     # identical signatures (see dedup_minhash's mh note)
     mh = hs.select(
@@ -1273,7 +1253,7 @@ def _minhash_tables(df: DataFrame) -> tuple[DataFrame, DataFrame]:
             f" + sig[{i2}]) % {P31}) * 31 + sig[{i3}]) % {P31}"
         )
 
-    bands = mh.select(
+    return mh.select(
         "doc_id",
         F.explode(
             F.array(
@@ -1284,7 +1264,6 @@ def _minhash_tables(df: DataFrame) -> tuple[DataFrame, DataFrame]:
             )
         ).alias("b"),
     ).select("doc_id", "b.band", "b.bh")
-    return hs, bands
 
 
 @q(
@@ -1348,40 +1327,25 @@ def _minhash_tables(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     tags=("text", "dedup", "scale", "warehouse"),
 )
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import (
-        Warehouse,
-        corpus_fingerprint as _wh_corpus_fingerprint,
-        store_root,
-    )
+    from magictables_spark.warehouse import Store
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    n = docs.count()  # parquet-footer count: cache key + invalidation
-    cfp = _wh_corpus_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"v2:{B}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    _mh_tables = _minhash_tables
+    store = Store("minhash", sf_dir, "documents", f"v2:{B}")
+    store_hs = store.table(
+        spark,
+        "mh_hs",
+        lambda: _minhash_tables(docs.filter(F.col("doc_id") < B))[0],
+        bucket_by=["doc_id"], n_buckets=16, sort_by=["doc_id"],
+    )
+    store_bands = store.table(
+        spark,
+        "mh_bands",
+        lambda: _minhash_bands(store_hs),
+        bucket_by=["band", "bh"], n_buckets=16, sort_by=["band", "bh"],
+    )
 
-    hk, bk = f"mh_hs_{key}", f"mh_bands_{key}"
-    wh = Warehouse(store_root("minhash"))
-    if not (wh.has_table(hk) and wh.has_table(bk)):
-        hs_h, bands_h = _mh_tables(docs.filter(F.col("doc_id") < B))
-        wh.write_table(
-            hs_h, hk, source_info={"n_docs": n, "split": B},
-            bucket_by=["doc_id"], n_buckets=16, sort_by=["doc_id"],
-        )
-        wh.write_table(
-            bands_h, bk, source_info={"n_docs": n, "split": B},
-            bucket_by=["band", "bh"], n_buckets=16, sort_by=["band", "bh"],
-        )
-    store_hs = wh.read_table(spark, hk)
-    store_bands = wh.read_table(spark, bk)
-
-    hs_b, bands_b = _mh_tables(docs.filter(F.col("doc_id") >= B))
+    hs_b, bands_b = _minhash_tables(docs.filter(F.col("doc_id") >= B))
     # candidate generation is ID-only (bands carry no text); the store
     # side arrives pre-bucketed on (band, bh) so only the batch pays an
     # exchange here
@@ -1661,49 +1625,43 @@ def _ivf_assign(norms: DataFrame, cents: DataFrame) -> DataFrame:
 
 def _ivf_persisted_index(spark: SparkSession, sf_dir: str, hist_limit: int | None = None):
     """Build-once IVF index in the warehouse: coarse quantizer
-    (centroid table, tiny) + cell lists (bucketed on `cell`, the probe
-    join key). Returns (wh, cents_key, cells_key, tag, n_vec). With
+    (centroid table ``ivfC``, tiny) + cell lists (``ivfL``, bucketed on
+    `cell`, the probe join key). Returns the ``Store``. With
     ``hist_limit`` the quantizer is derived from — and seeded by — the
-    history corpus only (the pinned geometry the append path serves).
-    Key = (config, corpus path, size, content fingerprint): round-6
-    advisory — a regenerated same-size corpus forces a rebuild."""
-    import hashlib
+    history corpus only (the pinned geometry the append path serves)."""
     import math
-    import os
 
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
-    n_vec = _t(spark, sf_dir, "embeddings").count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     scope = f"h{hist_limit}" if hist_limit is not None else "full"
-    tag = hashlib.md5(
-        f"v1:ivf:{scope}:{os.path.realpath(sf_dir)}:{n_vec}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("ann"))
-    ck, lk = f"ivfC_{tag}", f"ivfL_{tag}"
-    if not (wh.has_table(ck) and wh.has_table(lk)):
+    store = Store("ann", sf_dir, "embeddings", "v1:ivf", scope)
+
+    def _seed() -> DataFrame:
         norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
-        seed = norms if hist_limit is None else norms.filter(F.col("vec_id") < hist_limit)
+        if hist_limit is None:
+            return norms
+        return norms.filter(F.col("vec_id") < hist_limit)
+
+    def _cents() -> DataFrame:
+        n_vec = _t(spark, sf_dir, "embeddings").count()
         n_seed = n_vec if hist_limit is None else min(hist_limit, n_vec)
         stride = max(31, round(math.sqrt(max(1, n_seed))))
-        cents = seed.filter(F.col("vec_id") % stride == 0).select(
+        return _seed().filter(F.col("vec_id") % stride == 0).select(
             F.col("vec_id").alias("cent_id"), F.col("q").alias("cq")
         )
-        wh.write_table(
-            cents, ck, source_info={"n_seed": n_seed, "stride": stride}
-        )
-        wh.write_table(
-            _ivf_assign(seed, cents),
-            lk,
-            source_info={"n_seed": n_seed, "stride": stride},
-            # 32 buckets on the probe join key = one per local[32] core;
-            # a cluster sizes this to executor slots (same sizing lesson
-            # the sf1 probe taught the LSH index)
-            bucket_by=["cell"],
-            n_buckets=32,
-            sort_by=["cell", "neighbor_id"],
-        )
-    return wh, ck, lk, tag, n_vec
+
+    store.ensure("ivfC", _cents)
+    store.ensure(
+        "ivfL",
+        lambda: _ivf_assign(_seed(), store.read(spark, "ivfC")),
+        # 32 buckets on the probe join key = one per local[32] core;
+        # a cluster sizes this to executor slots (same sizing lesson
+        # the sf1 probe taught the LSH index)
+        bucket_by=["cell"],
+        n_buckets=32,
+        sort_by=["cell", "neighbor_id"],
+    )
+    return store
 
 
 def _ivf_serve(spark: SparkSession, sf_dir: str, cents: DataFrame, cells: DataFrame) -> DataFrame:
@@ -1773,8 +1731,10 @@ def _ivf_serve(spark: SparkSession, sf_dir: str, cents: DataFrame, cells: DataFr
     tags=("similarity", "ann", "scale", "warehouse"),
 )
 def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wh, ck, lk, _tag, _n = _ivf_persisted_index(spark, sf_dir)
-    return _ivf_serve(spark, sf_dir, wh.read_table(spark, ck), wh.read_table(spark, lk))
+    store = _ivf_persisted_index(spark, sf_dir)
+    return _ivf_serve(
+        spark, sf_dir, store.read(spark, "ivfC"), store.read(spark, "ivfL")
+    )
 
 
 @q(
@@ -1802,25 +1762,26 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     B = APPEND_SPLIT
-    wh, ck, lk, tag, n_vec = _ivf_persisted_index(spark, sf_dir, hist_limit=B)
-    ak = f"ivfA_{tag}"
-    if not wh.has_table(ak):
-        cents = wh.read_table(spark, ck)
+    store = _ivf_persisted_index(spark, sf_dir, hist_limit=B)
+    cents = store.read(spark, "ivfC")
+
+    def _append() -> DataFrame:
         batch = (
             _quantized(spark, sf_dir)
             .filter(F.col("vec_id") >= B)
             .withColumn("nrm", _dot("q", "q"))
         )
-        merged = wh.read_table(spark, lk).unionByName(_ivf_assign(batch, cents))
-        wh.write_table(
-            merged,
-            ak,
-            source_info={"n_vec": n_vec, "appended_from": lk},
-            bucket_by=["cell"],
-            n_buckets=32,
-            sort_by=["cell", "neighbor_id"],
-        )
-    return _ivf_serve(spark, sf_dir, wh.read_table(spark, ck), wh.read_table(spark, ak))
+        return store.read(spark, "ivfL").unionByName(_ivf_assign(batch, cents))
+
+    appended = store.table(
+        spark,
+        "ivfA",
+        _append,
+        bucket_by=["cell"],
+        n_buckets=32,
+        sort_by=["cell", "neighbor_id"],
+    )
+    return _ivf_serve(spark, sf_dir, cents, appended)
 
 
 @q(
@@ -1860,17 +1821,13 @@ def ivf_store_stream(
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     B = APPEND_SPLIT
-    wh, ck, lk, tag, _n = _ivf_persisted_index(spark, sf_dir, hist_limit=B)
-    cents = wh.read_table(spark, ck)
+    store = _ivf_persisted_index(spark, sf_dir, hist_limit=B)
     emb = _t(spark, sf_dir, "embeddings")
     src = ReplaySource(
-        "ivfstream",
-        f"v2:ivfstream:{B}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+        "ivfstream", *store_key(sf_dir, "embeddings", f"v2:ivfstream:{B}")
     )
     cells_dir = src.path("cells")
 
@@ -1878,7 +1835,7 @@ def ivf_store_stream(
         # seed the cell store with the HISTORY index (same rows the
         # persisted bucketed table holds; plain parquet here because the
         # store is append-maintained between batches)
-        wh.read_table(spark, lk).write.mode("overwrite").parquet(
+        store.read(spark, "ivfL").write.mode("overwrite").parquet(
             os.path.join(cells_dir, "seed")
         )
         return [
@@ -1896,7 +1853,7 @@ def ivf_store_stream(
         # pinned quantizer: re-read the tiny centroid table (broadcast);
         # per-batch subdir overwrite = idempotent replay (a replayed
         # batch rewrites its own subdir instead of appending twice)
-        _ivf_assign(batch, wh.read_table(sp, ck)).write.mode(
+        _ivf_assign(batch, store.read(sp, "ivfC")).write.mode(
             "overwrite"
         ).parquet(batch_subdir(cells_dir, bid))
         if bid in _crash_after_write:
@@ -1904,7 +1861,7 @@ def ivf_store_stream(
 
     src.drain(spark, emb.schema, _assign_append)
     cells = spark.read.parquet(*subdir_store_paths(cells_dir))
-    return _ivf_serve(spark, sf_dir, cents, cells)
+    return _ivf_serve(spark, sf_dir, store.read(spark, "ivfC"), cells)
 
 
 @q(
@@ -2000,23 +1957,24 @@ def _ivf_labeled_cells(spark: SparkSession, sf_dir: str):
     label, re-bucketed on `cell`. Carrying the vote payload IN the
     index is the serving-shape point — a query must never re-join the
     corpus to recover labels (that scan would be O(corpus) per query
-    at 100 TB)."""
-    wh, ck, lk, tag, n_vec = _ivf_persisted_index(spark, sf_dir)
-    vk = f"ivfVL_{tag}"
-    if not wh.has_table(vk):
+    at 100 TB). Returns (cents, labeled cells)."""
+    store = _ivf_persisted_index(spark, sf_dir)
+
+    def _labeled() -> DataFrame:
         labels = _t(spark, sf_dir, "embeddings").select(
             F.col("vec_id").alias("neighbor_id"), "label"
         )
-        labeled = wh.read_table(spark, lk).join(labels, "neighbor_id")
-        wh.write_table(
-            labeled,
-            vk,
-            source_info={"n_vec": n_vec, "labeled_from": lk},
-            bucket_by=["cell"],
-            n_buckets=32,
-            sort_by=["cell", "neighbor_id"],
-        )
-    return wh, ck, vk
+        return store.read(spark, "ivfL").join(labels, "neighbor_id")
+
+    labeled = store.table(
+        spark,
+        "ivfVL",
+        _labeled,
+        bucket_by=["cell"],
+        n_buckets=32,
+        sort_by=["cell", "neighbor_id"],
+    )
+    return store.read(spark, "ivfC"), labeled
 
 
 @q(
@@ -2107,9 +2065,7 @@ def _ivf_labeled_cells(spark: SparkSession, sf_dir: str):
 def knn_label_vote_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    wh, ck, vk = _ivf_labeled_cells(spark, sf_dir)
-    cents = wh.read_table(spark, ck)
-    cells = wh.read_table(spark, vk)
+    cents, cells = _ivf_labeled_cells(spark, sf_dir)
     n_vec = _t(spark, sf_dir, "embeddings").count()
     kstride = max(20, math.floor(math.sqrt(max(1, n_vec))))
     qs = (
@@ -3107,33 +3063,27 @@ def _pq_persisted_index(
     re-derives from codes ⊗ codebook at serve time, which is the whole
     point of the format. With ``hist_limit`` both training and the
     stored codes cover the history corpus only (the pinned quantizer
-    the append path extends). Returns (wh, cb_key, codes_key, tag,
-    n_vec)."""
-    import hashlib
-    import os
+    the append path extends). Returns the ``Store`` (tables ``pqC`` and
+    ``pqE``)."""
 
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
-    n_vec = _t(spark, sf_dir, "embeddings").count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     scope = f"h{hist_limit}" if hist_limit is not None else "full"
-    tag = hashlib.md5(
-        f"v1:pq:{_PQ_M}x{_PQ_K}i{_PQ_ITERS}:{scope}:"
-        f"{os.path.realpath(sf_dir)}:{n_vec}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("ann"))
-    ck, ek = f"pqC_{tag}", f"pqE_{tag}"
-    if not (wh.has_table(ck) and wh.has_table(ek)):
+    geometry = f"v1:pq:{_PQ_M}x{_PQ_K}i{_PQ_ITERS}"
+    store = Store("ann", sf_dir, "embeddings", geometry, scope)
+
+    def _indexed() -> DataFrame:
         e = _quantized(spark, sf_dir)
-        e_idx = e if hist_limit is None else e.filter(F.col("vec_id") < hist_limit)
-        cb = _pq_codebook(spark, e_idx)
-        wh.write_table(cb, ck, source_info={"scope": scope, "k": _PQ_K})
-        wh.write_table(
-            _pq_encode_at(_pq_subs(e_idx), cb).select("vec_id", "codes"),
-            ek,
-            source_info={"scope": scope, "m": _PQ_M},
-        )
-    return wh, ck, ek, tag, n_vec
+        return e if hist_limit is None else e.filter(F.col("vec_id") < hist_limit)
+
+    store.ensure("pqC", lambda: _pq_codebook(spark, _indexed()))
+    store.ensure(
+        "pqE",
+        lambda: _pq_encode_at(
+            _pq_subs(_indexed()), store.read(spark, "pqC")
+        ).select("vec_id", "codes"),
+    )
+    return store
 
 
 def _pq_serve(
@@ -3249,10 +3199,8 @@ def _pq_serve(
     tags=("similarity", "ann", "scale", "warehouse"),
 )
 def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wh, ck, ek, _tag, _n = _pq_persisted_index(spark, sf_dir)
-    return _pq_serve(
-        spark, sf_dir, wh.read_table(spark, ck), wh.read_table(spark, ek)
-    )
+    store = _pq_persisted_index(spark, sf_dir)
+    return _pq_serve(spark, sf_dir, store.read(spark, "pqC"), store.read(spark, "pqE"))
 
 
 @q(
@@ -3284,18 +3232,16 @@ def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     B = APPEND_SPLIT
-    wh, ck, ek, tag, _n = _pq_persisted_index(spark, sf_dir, hist_limit=B)
-    ak = f"pqA_{tag}"
-    if not wh.has_table(ak):
-        cb = wh.read_table(spark, ck)
+    store = _pq_persisted_index(spark, sf_dir, hist_limit=B)
+    cb = store.read(spark, "pqC")
+
+    def _append() -> DataFrame:
         batch = _quantized(spark, sf_dir).filter(F.col("vec_id") >= B)
-        merged = wh.read_table(spark, ek).unionByName(
+        return store.read(spark, "pqE").unionByName(
             _pq_encode_at(_pq_subs(batch), cb).select("vec_id", "codes")
         )
-        wh.write_table(merged, ak, source_info={"appended_from": ek})
-    return _pq_serve(
-        spark, sf_dir, wh.read_table(spark, ck), wh.read_table(spark, ak)
-    )
+
+    return _pq_serve(spark, sf_dir, cb, store.table(spark, "pqA", _append))
 
 
 @q(
@@ -3337,24 +3283,19 @@ def pq_store_stream(
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     B = APPEND_SPLIT
-    wh, ck, ek, tag, _n = _pq_persisted_index(spark, sf_dir, hist_limit=B)
+    store = _pq_persisted_index(spark, sf_dir, hist_limit=B)
     emb = _t(spark, sf_dir, "embeddings")
-    src = ReplaySource(
-        "pqstream",
-        f"v2:pqstream:{B}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-    )
+    src = ReplaySource("pqstream", *store_key(sf_dir, "embeddings", f"v2:pqstream:{B}"))
     codes_dir = src.path("codes")
 
     def _seed():
         # seed the code store with the HISTORY encode (same rows the
         # persisted table holds; plain parquet because the store is
         # append-maintained between batches)
-        wh.read_table(spark, ek).write.mode("overwrite").parquet(
+        store.read(spark, "pqE").write.mode("overwrite").parquet(
             os.path.join(codes_dir, "seed")
         )
         return [
@@ -3370,7 +3311,7 @@ def pq_store_stream(
         # pinned codebook: re-read the tiny table (broadcast in encode);
         # per-batch subdir overwrite = idempotent replay
         (
-            _pq_encode_at(_pq_subs(batch), wh.read_table(sp, ck))
+            _pq_encode_at(_pq_subs(batch), store.read(sp, "pqC"))
             .select("vec_id", "codes")
             .write.mode("overwrite")
             .parquet(batch_subdir(codes_dir, bid))
@@ -3380,7 +3321,7 @@ def pq_store_stream(
 
     src.drain(spark, emb.schema, _encode_append)
     return _pq_serve(
-        spark, sf_dir, wh.read_table(spark, ck),
+        spark, sf_dir, store.read(spark, "pqC"),
         spark.read.parquet(*subdir_store_paths(codes_dir)),
     )
 
@@ -3413,19 +3354,14 @@ def pq_store_stream(
     tags=("similarity", "ann", "streaming", "scale", "warehouse"),
 )
 def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from magictables_spark.streaming.commit import ReplaySource
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     NP = 15  # streamed probe set; 3 micro-batches of 5
-    wh, ck, ek, _tag, _n = _pq_persisted_index(spark, sf_dir)
+    store = _pq_persisted_index(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     src = ReplaySource(
-        "annserve",
-        f"v1:annserve:{NP}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
+        "annserve", *store_key(sf_dir, "embeddings", f"v1:annserve:{NP}")
     )
     out_dir = src.path("results")
     out_schema = "query_id bigint, neighbor_id bigint, cosine double"
@@ -3448,8 +3384,8 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pq_serve(
                 sp,
                 sf_dir,
-                wh.read_table(sp, ck),
-                wh.read_table(sp, ek),
+                store.read(sp, "pqC"),
+                store.read(sp, "pqE"),
                 probes=probes,
             )
             .write.mode("append")
@@ -3719,31 +3655,36 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
     bucketed+sorted on `cell` — the probe join key, so serving reads
     ONLY the probed cells' buckets/row-groups (the ann_ivf_persisted
     pruning) and each candidate costs 8 logical bytes (the PQ
-    compression). Returns (wh, cents_key, cb_key, codes_key, tag,
-    n_vec)."""
-    import hashlib
-    import math
-    import os
+    compression). Returns (store, n_vec); the tables are ``ivfpqC``,
+    ``ivfpqB`` and ``ivfpqE``."""
 
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    import functools
+    import math
+
+    from magictables_spark.warehouse import Store
 
     n_vec = _t(spark, sf_dir, "embeddings").count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"v1:ivfpq:{_PQ_M}x{_PQ_K}i{_PQ_ITERS}:"
-        f"{os.path.realpath(sf_dir)}:{n_vec}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("ann"))
-    ck, bk, ek = f"ivfpqC_{tag}", f"ivfpqB_{tag}", f"ivfpqE_{tag}"
-    if not (wh.has_table(ck) and wh.has_table(bk) and wh.has_table(ek)):
-        e = _quantized(spark, sf_dir)
-        norms = e.withColumn("nrm", _dot("q", "q"))
-        stride = max(31, round(math.sqrt(max(1, n_vec))))
-        cents = norms.filter(F.col("vec_id") % stride == 0).select(
+    store = Store("ann", sf_dir, "embeddings", f"v1:ivfpq:{_PQ_M}x{_PQ_K}i{_PQ_ITERS}")
+
+    def _norms() -> DataFrame:
+        return _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
+
+    stride = max(31, round(math.sqrt(max(1, n_vec))))
+    store.ensure(
+        "ivfpqC",
+        lambda: _norms().filter(F.col("vec_id") % stride == 0).select(
             F.col("vec_id").alias("cent_id"), F.col("q").alias("cq")
-        )
-        cells = _ivf_assign(norms, cents)
-        resid = (
+        ),
+    )
+    vw = spread_n_bytes(spark, n_vec * 640)  # join-inflated stats
+
+    @functools.cache
+    def _resid() -> DataFrame:
+        # residuals against the stored centroids, shared by the codebook
+        # and code builds
+        cents = store.read(spark, "ivfpqC")
+        cells = _ivf_assign(_norms(), cents)
+        return (
             cells.join(F.broadcast(cents), cells["cell"] == cents["cent_id"])
             .select(
                 F.col("neighbor_id").alias("vec_id"),
@@ -3752,25 +3693,26 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
             )
             .localCheckpoint(eager=True)
         )
-        vw = spread_n_bytes(spark, n_vec * 640)  # join-inflated stats
-        cb = _pq_codebook(spark, resid.select("vec_id", "q"), width=vw)
-        wh.write_table(cents, ck, source_info={"stride": stride})
-        wh.write_table(cb, bk, source_info={"k": _PQ_K, "m": _PQ_M})
-        codes = _pq_encode_at(_pq_subs(resid.select("vec_id", "q"), vw), cb).join(
-            resid.select("vec_id", "cell"), "vec_id"
-        ).select("cell", "vec_id", "codes")
-        wh.write_table(
-            codes,
-            ek,
-            source_info={"stride": stride},
-            # probe-key bucketing: a query's IN(cell,...) filter prunes
-            # to SelectedBucketsCount k out of 32 (the IVF-persisted
-            # serving lesson), and each surviving row is 8 bytes of code
-            bucket_by=["cell"],
-            n_buckets=32,
-            sort_by=["cell", "vec_id"],
+
+    store.ensure(
+        "ivfpqB",
+        lambda: _pq_codebook(spark, _resid().select("vec_id", "q"), width=vw),
+    )
+    store.ensure(
+        "ivfpqE",
+        lambda: _pq_encode_at(
+            _pq_subs(_resid().select("vec_id", "q"), vw), store.read(spark, "ivfpqB")
         )
-    return wh, ck, bk, ek, tag, n_vec
+        .join(_resid().select("vec_id", "cell"), "vec_id")
+        .select("cell", "vec_id", "codes"),
+        # probe-key bucketing: a query's IN(cell,...) filter prunes
+        # to SelectedBucketsCount k out of 32 (the IVF-persisted
+        # serving lesson), and each surviving row is 8 bytes of code
+        bucket_by=["cell"],
+        n_buckets=32,
+        sort_by=["cell", "vec_id"],
+    )
+    return store, n_vec
 
 
 @q(
@@ -3797,10 +3739,10 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
     tags=("similarity", "ann", "scale", "warehouse"),
 )
 def ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wh, ck, bk, ek, _tag, n_vec = _ivfpq_persisted_index(spark, sf_dir)
-    cents = wh.read_table(spark, ck)
-    cb = wh.read_table(spark, bk)
-    codes = wh.read_table(spark, ek)
+    store, n_vec = _ivfpq_persisted_index(spark, sf_dir)
+    cents = store.read(spark, "ivfpqC")
+    cb = store.read(spark, "ivfpqB")
+    codes = store.read(spark, "ivfpqE")
 
     rows = cb.collect()  # 256 rows — bounded driver roundtrip by design
     if not rows:
@@ -4304,39 +4246,24 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "dedup", "fingerprint", "similarity", "scale", "warehouse"),
 )
 def simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import (
-        Warehouse,
-        corpus_fingerprint as _cfp,
-        store_root,
-    )
+    from magictables_spark.warehouse import Store
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    n = docs.count()
-    cfp = _cfp(os.path.join(sf_dir, "documents.parquet"))
-    key = "shstore_" + hashlib.md5(
-        f"v1:{B}:{_SH_BANDS}x{_SH_BITS}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("simhash"))
-    if not wh.has_table(key):
-        hist_bands = _simhash_bands(
-            _simhash_sig_frame(docs.filter(F.col("doc_id") < B))
-        )
-        wh.write_table(
-            hist_bands, key, source_info={"split": B, "bands": _SH_BANDS},
-            bucket_by=["band", "key"], n_buckets=16, sort_by=["band", "key"],
-        )
-    store = wh.read_table(spark, key).select(
-        "band", "key", F.col("doc_id").alias("dup_of"), F.col("s").alias("sa")
-    )
+    store = Store("simhash", sf_dir, "documents", f"v1:{B}:{_SH_BANDS}x{_SH_BITS}")
+    stored = store.table(
+        spark,
+        "shstore",
+        lambda: _simhash_bands(_simhash_sig_frame(docs.filter(F.col("doc_id") < B))),
+        bucket_by=["band", "key"],
+        n_buckets=16,
+        sort_by=["band", "key"],
+    ).select("band", "key", F.col("doc_id").alias("dup_of"), F.col("s").alias("sa"))
     batch = _simhash_bands(
         _simhash_sig_frame(docs.filter(F.col("doc_id") >= B))
     ).select("band", "key", "doc_id", F.col("s").alias("sb"))
     return (
-        store.join(batch, ["band", "key"])
+        stored.join(batch, ["band", "key"])
         .select(
             "doc_id", "dup_of",
             F.expr("CAST(bit_count(sa ^ sb) AS INT)").alias("hamming"),
@@ -4410,15 +4337,12 @@ def simhash_store_stream(
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
     src = ReplaySource(
-        "shstream",
-        f"v2:{B}:{_SH_BANDS}x{_SH_BITS}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+        "shstream", *store_key(sf_dir, "documents", f"v2:{B}:{_SH_BANDS}x{_SH_BITS}")
     )
     store_dir = src.path("store")
     hits_dir = src.path("hits")
@@ -4566,16 +4490,11 @@ def minhash_store_stream(
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    src = ReplaySource(
-        "mhstream",
-        f"v2:{B}:mh16x4",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-    )
+    src = ReplaySource("mhstream", *store_key(sf_dir, "documents", f"v2:{B}:mh16x4"))
     bands_dir = src.path("bands")
     hs_dir = src.path("hs")
     hits_dir = src.path("hits")

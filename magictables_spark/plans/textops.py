@@ -189,32 +189,20 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "dedup", "scale", "warehouse"),
 )
 def dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    n = docs.count()  # parquet-footer count: cache key + invalidation
-    # content fingerprint: a regenerated same-size corpus at the same
-    # path invalidates the store (round-6 advisory)
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    key = "fpstore_" + hashlib.md5(
-        f"v2:{B}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("fingerprints"))
-    if not wh.has_table(key):
-        base = (
-            docs.filter(F.col("doc_id") < B)
-            .select(F.md5("text").alias("fp"))
-            .distinct()
-        )
-        wh.write_table(
-            base, key, source_info={"n_docs": n, "split": B},
-            bucket_by=["fp"], n_buckets=32, sort_by=["fp"],
-        )
-    store = wh.read_table(spark, key)
+    store = Store("fingerprints", sf_dir, "documents", f"v2:{B}").table(
+        spark,
+        "fpstore",
+        lambda: docs.filter(F.col("doc_id") < B)
+        .select(F.md5("text").alias("fp"))
+        .distinct(),
+        bucket_by=["fp"],
+        n_buckets=32,
+        sort_by=["fp"],
+    )
     batch = docs.filter(F.col("doc_id") >= B).select(
         F.md5("text").alias("fp"), "doc_id"
     )
@@ -278,16 +266,11 @@ def dedup_store_stream(
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     B = 250
     docs = _t(spark, sf_dir, "documents")
-    src = ReplaySource(
-        "fpstream",
-        f"v2:{B}:fps",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-    )
+    src = ReplaySource("fpstream", *store_key(sf_dir, "documents", f"v2:{B}:fps"))
     store_dir = src.path("store")
     admit_dir = src.path("admitted")
     out_schema = "doc_id bigint, fp string"
@@ -1063,20 +1046,11 @@ _LPA_HIST_SPLIT = 150  # history/batch doc boundary for the incremental demo
     tags=("text", "dedup", "graph", "scale", "warehouse"),
 )
 def label_propagation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
     H = _LPA_HIST_SPLIT
     docs = _t(spark, sf_dir, "documents")
-    n = docs.count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"v1:lpa:{H}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("lpa"))
-    lk, ek, dk = f"lpaL_{tag}", f"lpaE_{tag}", f"lpaD_{tag}"
+    store = Store("lpa", sf_dir, "documents", f"v1:lpa:{H}")
 
     def _sym(p: DataFrame) -> DataFrame:
         return p.unionByName(
@@ -1084,26 +1058,28 @@ def label_propagation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    if not (wh.has_table(lk) and wh.has_table(ek)):
-        hist_pairs = pairs.filter((F.col("doc_a") < H) & (F.col("doc_b") < H))
-        hist_edges = _sym(hist_pairs).localCheckpoint()
-        seeds = docs.filter(F.col("doc_id") < H).select(
-            F.col("doc_id").alias("v"), F.col("doc_id").alias("lab")
-        )
-        wh.write_table(
-            _lpa3(hist_edges, seeds), lk, source_info={"split": H},
-            bucket_by=["v"], n_buckets=16, sort_by=["v"],
-        )
-        wh.write_table(
-            hist_edges, ek, source_info={"split": H},
-            bucket_by=["a"], n_buckets=16, sort_by=["a", "b"],
-        )
+    store.ensure(
+        "lpaE",
+        lambda: _sym(pairs.filter((F.col("doc_a") < H) & (F.col("doc_b") < H))),
+        bucket_by=["a"], n_buckets=16, sort_by=["a", "b"],
+    )
+    seeds = docs.filter(F.col("doc_id") < H).select(
+        F.col("doc_id").alias("v"), F.col("doc_id").alias("lab")
+    )
+    stored = store.table(
+        spark,
+        "lpaL",
+        lambda: _lpa3(store.read(spark, "lpaE"), seeds),
+        bucket_by=["v"], n_buckets=16, sort_by=["v"],
+    )
 
-    if not wh.has_table(dk):
+    def _delta() -> DataFrame:
         new_edges = _sym(
             pairs.filter((F.col("doc_a") >= H) | (F.col("doc_b") >= H))
         ).localCheckpoint()
-        all_edges = wh.read_table(spark, ek).unionByName(new_edges).localCheckpoint()
+        all_edges = (
+            store.read(spark, "lpaE").unionByName(new_edges).localCheckpoint()
+        )
         # affected = adjacency closure of the new edges' endpoints over
         # the union graph = every node of every component that gained an
         # edge. Iterate-until-stable frontier expansion: each round one
@@ -1126,19 +1102,15 @@ def label_propagation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         aff_edges = all_edges.join(
             affected.withColumnRenamed("v", "a"), "a", "left_semi"
         )
-        # identity seeds over the touched components (incl. batch nodes)
-        labels = _lpa3(aff_edges, affected.withColumn("lab", F.col("v")))
+        # identity seeds over the touched components (incl. batch nodes);
         # the O(touched) delta — the write scales with the increment's
         # neighborhood, never the stored graph (asserted in tests)
-        wh.write_table(
-            labels, dk, source_info={"split": H, "kind": "delta"},
-            bucket_by=["v"], n_buckets=16, sort_by=["v"],
-        )
+        return _lpa3(aff_edges, affected.withColumn("lab", F.col("v")))
 
-    delta = wh.read_table(spark, dk)
-    merged = (
-        wh.read_table(spark, lk).join(delta, "v", "left_anti").unionByName(delta)
+    delta = store.table(
+        spark, "lpaD", _delta, bucket_by=["v"], n_buckets=16, sort_by=["v"]
     )
+    merged = stored.join(delta, "v", "left_anti").unionByName(delta)
     return _lpa_communities(merged)
 
 
@@ -1187,15 +1159,12 @@ def lpa_store_stream(
         batch_subdir,
         subdir_store_paths,
     )
-    from magictables_spark.warehouse import corpus_fingerprint
+    from magictables_spark.warehouse import store_key
 
     H = _LPA_HIST_SPLIT
     docs = _t(spark, sf_dir, "documents")
     src = ReplaySource(
-        "lpastream",
-        f"v2:lpastream:{H}",
-        os.path.realpath(sf_dir),
-        corpus_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+        "lpastream", *store_key(sf_dir, "documents", f"v2:lpastream:{H}")
     )
     edges_dir = src.path("edges")
     base_dir = src.path("base")

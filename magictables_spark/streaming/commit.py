@@ -5,10 +5,10 @@ Every maintainer runs the same replay lifecycle, owned here by
 ``ReplaySource``; a maintainer supplies only its seed, its shard
 frames and its foreachBatch merge body.
 
-- ROOT: ``store_root(f"{prefix}_{md5(':'.join(key))[:12]}")``. The key
-  carries the maintainer's version tag and geometry, the corpus path
-  and the corpus fingerprint, so changed inputs get a fresh root and a
-  warm call reuses the old one.
+- ROOT: ``store_root(f"{prefix}_{store_tag(*key)}")``; maintainers pass
+  ``key = store_key(sf_dir, table, *parts)``, the shared persisted-store
+  identity (``warehouse.py`` module doc), so changed inputs get a fresh
+  root and a warm call reuses the old one.
 - PREPARE, guarded by ``<root>/_READY``: wipe the root, write the
   seed state, write the shards, then the marker. A root without the
   marker (a crash mid-prepare) is never trusted; it is wiped and
@@ -73,14 +73,13 @@ never reads it.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from magictables_spark.warehouse import store_root
+from magictables_spark.warehouse import store_root, store_tag
 
 __all__ = [
     "ReplaySource",
@@ -110,7 +109,7 @@ class ReplaySource:
     ``availableNow`` foreachBatch drain (module doc)."""
 
     def __init__(self, prefix: str, *key):
-        tag = hashlib.md5(":".join(map(str, key)).encode()).hexdigest()[:12]
+        tag = store_tag(*key)
         self.root = store_root(f"{prefix}_{tag}")
         self.name = f"mts_{prefix}_{tag}"
 

@@ -261,15 +261,16 @@ def test_ivf_append_equals_pinned_from_scratch_and_is_idempotent(spark):
     from magictables_spark.warehouse import store_root
 
     r1 = sorted(tuple(r) for r in ann_ivf_index_append(spark, SF).collect())
-    wh, ck, lk, tag, n_vec = _ivf_persisted_index(spark, SF, hist_limit=APPEND_SPLIT)
-    cents = wh.read_table(spark, ck)
+    store = _ivf_persisted_index(spark, SF, hist_limit=APPEND_SPLIT)
+    cents = store.read(spark, "ivfC")
+    n_vec = spark.read.parquet(os.path.join(SF, "embeddings.parquet")).count()
     cent_ids = [r["cent_id"] for r in cents.collect()]
     stride = max(31, round(math.sqrt(min(APPEND_SPLIT, n_vec))))
     assert all(c < APPEND_SPLIT and c % stride == 0 for c in cent_ids)
 
     stored = sorted(
         (r["cell"], r["neighbor_id"])
-        for r in wh.read_table(spark, f"ivfA_{tag}").select("cell", "neighbor_id").collect()
+        for r in store.read(spark, "ivfA").select("cell", "neighbor_id").collect()
     )
     norms = _quantized(spark, SF).withColumn("nrm", _dot("q", "q"))
     scratch = sorted(
@@ -286,6 +287,36 @@ def test_ivf_append_equals_pinned_from_scratch_and_is_idempotent(spark):
     v2 = {k: m["version"] for k, m in wh_ann.list_tables().items() if k.startswith("ivf")}
     assert r1 == r2 and len(r1) > 0
     assert v1 == v2  # idempotent: no re-append, no rebuild
+
+
+def test_ivf_rebuilds_only_the_missing_table(
+    spark, sf_dir, duck, tmp_path, monkeypatch
+):
+    """A crash between the centroid and cell-list writes leaves the
+    centroid table without its cell lists. The next call must rebuild
+    only the cell lists, from the stored centroids, and still serve the
+    oracle's rows."""
+    import shutil
+
+    from magictables_spark.plans.queries import REGISTRY
+    from magictables_spark.plans.similarity import _ivf_persisted_index
+
+    from .parity import compare
+
+    monkeypatch.setenv("MTS_WAREHOUSE_DIR", str(tmp_path / "stores"))
+    spec = REGISTRY["ann_ivf_persisted"]
+    spec.fn(spark, sf_dir).collect()
+    store = _ivf_persisted_index(spark, sf_dir)
+    wh, ck, lk = store.warehouse, store.table_id("ivfC"), store.table_id("ivfL")
+    cents_versions = wh.list_versions(ck)
+    assert len(cents_versions) == 1
+    shutil.rmtree(os.path.join(wh.root, "tables", lk))
+    assert not wh.has_table(lk)
+
+    ok, msg = compare(spec.fn(spark, sf_dir), duck.sql(spec.oracle))
+    assert ok, msg
+    assert wh.list_versions(ck) == cents_versions  # centroids not rewritten
+    assert wh.has_table(lk)
 
 
 def test_knn_indexed_vote_plan_pruned_scan_no_index_exchange(spark):

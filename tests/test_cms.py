@@ -39,28 +39,18 @@ def test_one_sided_error_and_top_overlap(spark, sf_dir):
 
 
 def test_history_store_is_reused(spark, sf_dir):
-    import hashlib
-    import os
-
     from magictables_spark.plans.rollup_pack import _CMS_D, _CMS_W
-    from magictables_spark.warehouse import (
-        Warehouse,
-        corpus_fingerprint,
-        store_root,
-    )
+    from magictables_spark.warehouse import Store
 
     r1 = sorted(
         tuple(r) for r in REGISTRY["cms_topk_incremental"].fn(spark, sf_dir).collect()
     )
-    n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = "cms_" + hashlib.md5(
-        f"v1:{_CMS_D}x{_CMS_W}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("cms"))
-    v1 = [v["version"] for v in wh.list_versions(key)]
+    store = Store("cms", sf_dir, "events", f"v1:{_CMS_D}x{_CMS_W}")
+    key = store.table_id("cms")
+    v1 = store.warehouse.list_versions(key)
+    assert len(v1) == 1 and v1[0]["live"]  # the key names the built store
     r2 = sorted(
         tuple(r) for r in REGISTRY["cms_topk_incremental"].fn(spark, sf_dir).collect()
     )
     assert r1 == r2
-    assert [v["version"] for v in wh.list_versions(key)] == v1
+    assert store.warehouse.list_versions(key) == v1

@@ -10,23 +10,17 @@ recompute's communities in-session, and a second call serves warm.
 
 from __future__ import annotations
 
-import hashlib
 import json
-import os
 
 SF = "/root/testdata/sf0.001"
 
 
-def _store(spark, sf_dir):
+def _store(sf_dir):
     from magictables_spark.plans.textops import _LPA_HIST_SPLIT
-    from magictables_spark.warehouse import Warehouse, corpus_fingerprint, store_root
+    from magictables_spark.warehouse import Store
 
-    n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"v1:lpa:{_LPA_HIST_SPLIT}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    return Warehouse(store_root("lpa")), tag
+    store = Store("lpa", sf_dir, "documents", f"v1:lpa:{_LPA_HIST_SPLIT}")
+    return store.warehouse, store.tag
 
 
 def test_delta_is_o_touched_and_closed_under_adjacency(spark):
@@ -43,7 +37,7 @@ def test_delta_is_o_touched_and_closed_under_adjacency(spark):
     full = sorted(tuple(r) for r in label_propagation_communities(spark, SF).collect())
     assert inc == full and len(inc) > 0  # incremental ≡ full recompute
 
-    wh, tag = _store(spark, SF)
+    wh, tag = _store(SF)
     stored_n = wh.read_table(spark, f"lpaL_{tag}").count()
     delta = wh.read_table(spark, f"lpaD_{tag}")
     delta_n = delta.count()
@@ -81,9 +75,10 @@ def test_second_call_serves_warm(spark):
     from magictables_spark.plans.textops import label_propagation_incremental
 
     r1 = sorted(tuple(r) for r in label_propagation_incremental(spark, SF).collect())
-    wh, tag = _store(spark, SF)
+    wh, tag = _store(SF)
     v1 = {k: m["version"] for k, m in wh.list_tables().items() if tag in k}
     assert len(v1) == 3  # labels + edges + delta
+    assert all(len(wh.list_versions(k)) == 1 for k in v1)
     r2 = sorted(tuple(r) for r in label_propagation_incremental(spark, SF).collect())
     v2 = {k: m["version"] for k, m in wh.list_tables().items() if tag in k}
     assert r1 == r2

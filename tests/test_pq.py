@@ -60,7 +60,8 @@ def test_pq_persisted_serves_identically_and_warm(spark, sf_dir):
     )
     assert served == direct
 
-    wh, ck, ek, _tag, _n = _pq_persisted_index(spark, sf_dir)
+    store = _pq_persisted_index(spark, sf_dir)
+    wh, ck, ek = store.warehouse, store.table_id("pqC"), store.table_id("pqE")
 
     def versions():
         return (
@@ -83,11 +84,10 @@ def test_pq_append_store_covers_the_grown_corpus(spark, sf_dir):
     )
 
     REGISTRY["ann_pq_index_append"].fn(spark, sf_dir).collect()
-    wh, ck, ek, tag, n_vec = _pq_persisted_index(
-        spark, sf_dir, hist_limit=APPEND_SPLIT
-    )
-    hist = wh.read_table(spark, ek)
-    appended = wh.read_table(spark, f"pqA_{tag}")
+    store = _pq_persisted_index(spark, sf_dir, hist_limit=APPEND_SPLIT)
+    n_vec = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    hist = store.read(spark, "pqE")
+    appended = store.read(spark, "pqA")
     assert hist.count() == min(APPEND_SPLIT, n_vec)
     assert appended.count() == n_vec
     assert appended.select("vec_id").distinct().count() == n_vec
@@ -228,11 +228,13 @@ def test_ivfpq_persisted_serves_identically_and_warm(spark, sf_dir):
     )
     assert served == direct
 
-    wh, ck, bk, ek, _tag, _n = _ivfpq_persisted_index(spark, sf_dir)
+    store, _n = _ivfpq_persisted_index(spark, sf_dir)
+    wh = store.warehouse
 
     def versions():
         return [
-            [v["version"] for v in wh.list_versions(k)] for k in (ck, bk, ek)
+            [v["version"] for v in wh.list_versions(store.table_id(p))]
+            for p in ("ivfpqC", "ivfpqB", "ivfpqE")
         ]
 
     v1 = versions()

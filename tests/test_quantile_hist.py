@@ -44,30 +44,20 @@ def test_estimates_within_bin_width_of_exact(spark, sf_dir):
 
 
 def test_history_store_is_reused(spark, sf_dir):
-    import hashlib
-    import os
-
     from magictables_spark.plans.rollup_pack import _QH_B, _QH_W
-    from magictables_spark.warehouse import (
-        Warehouse,
-        corpus_fingerprint,
-        store_root,
-    )
+    from magictables_spark.warehouse import Store
 
     r1 = sorted(
         tuple(r)
         for r in REGISTRY["quantile_hist_incremental"].fn(spark, sf_dir).collect()
     )
-    n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    cfp = corpus_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = "qhist_" + hashlib.md5(
-        f"v1:{_QH_B}x{_QH_W}:{os.path.realpath(sf_dir)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("qhist"))
-    v1 = [v["version"] for v in wh.list_versions(key)]
+    store = Store("qhist", sf_dir, "events", f"v1:{_QH_B}x{_QH_W}")
+    key = store.table_id("qhist")
+    v1 = store.warehouse.list_versions(key)
+    assert len(v1) == 1 and v1[0]["live"]  # the key names the built store
     r2 = sorted(
         tuple(r)
         for r in REGISTRY["quantile_hist_incremental"].fn(spark, sf_dir).collect()
     )
     assert r1 == r2
-    assert [v["version"] for v in wh.list_versions(key)] == v1
+    assert store.warehouse.list_versions(key) == v1

@@ -253,8 +253,7 @@ def test_knn_indexed_vote_recall_and_agreement(spark, sf_dir):
         _quantized,
     )
 
-    wh, ck, vk = _ivf_labeled_cells(spark, sf_dir)
-    cents, cells = wh.read_table(spark, ck), wh.read_table(spark, vk)
+    cents, cells = _ivf_labeled_cells(spark, sf_dir)
     qs = (
         _quantized(spark, sf_dir)
         .filter(F.col("vec_id") % stride == 0)

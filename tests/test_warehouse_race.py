@@ -217,10 +217,6 @@ def test_scd2_incremental_store_reuses_and_writes_o_touched(spark):
     (b) warm second call serves the same store versions, (c) the delta
     covers exactly the batch's touched users — O(touched), never
     O(dimension)."""
-    import hashlib
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
     from magictables_spark.plans.events_pack import (
@@ -229,11 +225,7 @@ def test_scd2_incremental_store_reuses_and_writes_o_touched(spark):
         scd2_incremental_store,
     )
     from magictables_spark.plans.registry import _t
-    from magictables_spark.warehouse import (
-        Warehouse,
-        corpus_fingerprint,
-        store_root,
-    )
+    from magictables_spark.warehouse import Store
 
     sf = "/root/testdata/sf0.001"
     inc = sorted(tuple(r) for r in scd2_incremental_store(spark, sf).collect())
@@ -241,12 +233,8 @@ def test_scd2_incremental_store_reuses_and_writes_o_touched(spark):
     assert inc == full and len(inc) > 0
 
     ev = _t(spark, sf, "events")
-    n = ev.count()
-    cfp = corpus_fingerprint(os.path.join(sf, "events.parquet"))
-    tag = hashlib.md5(
-        f"v1:scd2:{_SCD2_SPLIT_TS}:{os.path.realpath(sf)}:{n}:{cfp}".encode()
-    ).hexdigest()[:16]
-    wh = Warehouse(store_root("scd2"))
+    store = Store("scd2", sf, "events", f"v1:scd2:{_SCD2_SPLIT_TS}")
+    tag, wh = store.tag, store.warehouse
     split = F.lit(_SCD2_SPLIT_TS).cast("timestamp")
     batch_users = {
         r["user_id"]
@@ -268,6 +256,9 @@ def test_scd2_incremental_store_reuses_and_writes_o_touched(spark):
     assert delta_n <= touched_runs + batch_rows
 
     v1 = {k: m["version"] for k, m in wh.list_tables().items() if tag in k}
+    # the key names the built store: both tables, one live version each
+    assert set(v1) == {f"scd2H_{tag}", f"scd2D_{tag}"}
+    assert all(len(wh.list_versions(k)) == 1 for k in v1)
     r2 = sorted(tuple(r) for r in scd2_incremental_store(spark, sf).collect())
     v2 = {k: m["version"] for k, m in wh.list_tables().items() if tag in k}
     assert r2 == inc

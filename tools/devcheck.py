@@ -1,8 +1,13 @@
-"""Fast oracle-parity iteration: python tools/devcheck.py [slug ...] [--sf DIR]
+"""Fast oracle-parity iteration: python tools/devcheck.py [slug ...] [--sf=DIR]
 
 Runs the given slugs (default: all) against the DuckDB oracle in one
 Spark session, printing OK/MISMATCH per slug — the same comparison the
 driver gate applies (tests/parity.py), without pytest overhead.
+
+Slugs tagged ``warehouse`` serve from a persisted store, so each runs
+twice: cold (the call that may build the store), then warm (served from
+it). The warm run is checked against the oracle too; a rows-only slug
+must return the same row count both times.
 """
 
 from __future__ import annotations
@@ -38,24 +43,33 @@ def main() -> int:
         )
 
     slugs = args or sorted(REGISTRY)
-    n_fail = 0
+    n_runs = n_fail = 0
     for slug in slugs:
         spec = REGISTRY[slug]
-        t0 = time.perf_counter()
-        try:
-            sdf = spec.fn(spark, sf_dir)
-            if spec.oracle is None:
-                n = sdf.count()
-                print(f"ROWS-ONLY {slug}: {n} rows  [{time.perf_counter()-t0:.1f}s]")
-                continue
-            ok, msg = compare(sdf, con.sql(spec.oracle))
-        except Exception as e:  # noqa: BLE001
-            ok, msg = False, f"{type(e).__name__}: {str(e)[:400]}"
-        status = "OK" if ok else "MISMATCH"
-        if not ok:
-            n_fail += 1
-        print(f"{status} {slug}: {msg[:500]}  [{time.perf_counter()-t0:.1f}s]")
-    print(f"\n{len(slugs)-n_fail}/{len(slugs)} ok")
+        runs = ("cold", "warm") if "warehouse" in spec.tags else ("",)
+        cold_rows = None
+        for run in runs:
+            label = f"{slug} ({run})" if run else slug
+            t0 = time.perf_counter()
+            try:
+                sdf = spec.fn(spark, sf_dir)
+                if spec.oracle is None:
+                    n = sdf.count()
+                    ok = cold_rows in (None, n)
+                    msg = f"{n} rows" if ok else f"warm {n} rows != cold {cold_rows}"
+                    cold_rows = n
+                else:
+                    ok, msg = compare(sdf, con.sql(spec.oracle))
+            except Exception as e:  # noqa: BLE001
+                ok, msg = False, f"{type(e).__name__}: {str(e)[:400]}"
+            n_runs += 1
+            if ok:
+                status = "OK" if spec.oracle is not None else "ROWS-ONLY"
+            else:
+                status = "MISMATCH"
+                n_fail += 1
+            print(f"{status} {label}: {msg[:500]}  [{time.perf_counter()-t0:.1f}s]")
+    print(f"\n{n_runs-n_fail}/{n_runs} ok")
     return 1 if n_fail else 0
 
 
