@@ -13,14 +13,23 @@ Spark-first flow (everything stays distributed):
        reference deduped via its per-URL cache; here dedup also makes
        task retries/speculation idempotent);
     3. per-URL cache probe against the warehouse (_url_cache parquet,
-       infinite TTL — magictable.py:355-386 semantics);
-    4. misses fetched inside ``mapInPandas`` with a thread pool per
-       partition (the asyncio.gather moves into each task; retry/backoff
-       per URL per magictable.py:317-347; failures -> null payload, not
+       read with its fixed schema, infinite TTL — magictable.py:355-386
+       semantics); one small job counts the misses (kept for the fetch),
+       and with none the fetch and the cache append are skipped;
+    4. misses fetched inside ``mapInPandas`` under ONE in-flight budget
+       per chain, ``FETCH_IN_FLIGHT`` requests whatever the cluster
+       width: the misses are spread round-robin over ``tasks`` fetch
+       tasks (from the miss count and ``defaultParallelism``), each
+       running a thread pool of ``FETCH_IN_FLIGHT // tasks`` threads
+       (the asyncio.gather moves into each task; retry/backoff per URL
+       per magictable.py:317-347; network failures -> null payload, not
        task failure);
     5. fetched payloads appended to the cache, then ALL payloads joined
        back to the original rows on the url column (a re-chain after a
-       task retry re-reads the cache — no double fetch);
+       task retry re-reads the cache — no double fetch). Without a
+       warehouse the fetched payloads are persisted and counted once
+       (bounded by the distinct misses), so later actions on the result
+       never re-send a request;
     6. payload JSON parsed (``schema_of_json`` on a sample),
        list-payloads exploded (outer — Polars semantics keep empty
        results as null rows), struct fields projected with sorted
@@ -38,6 +47,7 @@ import re
 from typing import Iterator
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +56,9 @@ from magictables_spark.sources import Fetcher, default_fetcher
 from magictables_spark.warehouse import ChainRecord, Warehouse
 
 PLACEHOLDER_RE = re.compile(r"\{(\w+)\}")
+URL_CACHE_SCHEMA = "__url string, __payload string"
+# requests one chain keeps in flight, summed over all of its fetch tasks
+FETCH_IN_FLIGHT = 64
 
 
 def _quoted(name: str) -> str:
@@ -102,27 +115,44 @@ def resolve_keys(
     return mapping
 
 
-def _fetch_partition(fetcher: Fetcher, max_threads: int = 8):
-    """mapInPandas worker: fetch every URL in the batch with a thread
-    pool (I/O-bound; threads, not asyncio, to stay picklable)."""
+def _fetch_partition(fetcher: Fetcher, threads: int):
+    """mapInPandas worker: fetch every URL of the task's partition with
+    one pool of ``threads`` threads (I/O-bound; threads, not asyncio, to
+    stay picklable). ``fetch_urls`` sizes ``threads`` so that the pools
+    of all fetch tasks together hold at most ``FETCH_IN_FLIGHT``
+    requests in flight.
+
+    The misses reach this worker through a round-robin
+    ``repartition(tasks)``, never a hash repartition on ``__url``: the
+    ``distinct`` upstream is already hashed on ``__url``, so the planner
+    drops such an exchange as redundant and AQE then coalesces the small
+    miss set into ONE task."""
     import json as _json
     from concurrent.futures import ThreadPoolExecutor
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = pdf["__url"].tolist()
-            with ThreadPoolExecutor(max_workers=max_threads) as pool:
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            for pdf in batches:
+                urls = pdf["__url"].tolist()
                 payloads = list(pool.map(lambda u: fetcher(u, None), urls))
-            yield pd.DataFrame(
-                {
-                    "__url": urls,
-                    "__payload": [
-                        p if isinstance(p, str) else _json.dumps(p) for p in payloads
-                    ],
-                }
-            )
+                yield pd.DataFrame(
+                    {
+                        "__url": urls,
+                        "__payload": [
+                            p if isinstance(p, str) else _json.dumps(p) for p in payloads
+                        ],
+                    }
+                )
 
     return run
+
+
+def _fetch_tasks(n_misses: int, parallelism: int) -> int:
+    """Fetch tasks for ``n_misses`` URLs: at most one per task slot and
+    never more than ``FETCH_IN_FLIGHT``, and only as many as keep every
+    task's pool full (``FETCH_IN_FLIGHT // width`` URLs per task)."""
+    width = min(parallelism, FETCH_IN_FLIGHT)
+    return min(width, -(-n_misses // (FETCH_IN_FLIGHT // width)))
 
 
 def fetch_urls(
@@ -144,7 +174,9 @@ def fetch_urls(
     the join side statically — broadcast when the cache is small, plain
     shuffle join when it isn't, which is the right call either way at
     100 TB. Rows for URLs that failed THIS run are simply absent (the
-    caller's left join surfaces them as null payloads)."""
+    caller's left join surfaces them as null payloads). Without a
+    warehouse it returns the persisted payloads of this run. Null URLs
+    are never fetched."""
     import os
 
     fetcher = fetcher or default_fetcher
@@ -156,7 +188,7 @@ def fetch_urls(
             f.endswith(".parquet") for f in os.listdir(path)
         ):
             return None
-        return spark.read.parquet(path).dropDuplicates(["__url"])
+        return spark.read.schema(URL_CACHE_SCHEMA).parquet(path).dropDuplicates(["__url"])
 
     cached = None
     cache_dir = None
@@ -164,35 +196,48 @@ def fetch_urls(
         cache_dir = os.path.join(warehouse.root, "_url_cache")
         cached = _read_cache(cache_dir)
 
+    # a null key gives a null URL: nothing to fetch, and the caller's
+    # left join gives its rows a null payload. The misses are kept for
+    # the fetch after the count, which then does not recompute them.
+    misses = urls.filter(F.col("__url").isNotNull())
     if cached is not None:
-        misses = urls.join(cached, "__url", "left_anti")
-    else:
-        misses = urls
-
-    fetched = misses.mapInPandas(
-        _fetch_partition(fetcher), schema="__url string, __payload string"
-    )
-
-    if cache_dir is not None:
-        # persist fresh responses before use: a downstream task retry
-        # re-reads the cache instead of re-fetching (idempotency).
-        # FAILURE payloads are NOT cached: default_fetcher returns {}
-        # after final failure, so an empty payload means "fetch failed
-        # or API returned nothing" — caching it would poison every
-        # future chain with an infinite-TTL empty row (reference only
-        # stores non-empty data: magictable.py 'if data:'). Failed URLs
-        # come back null THIS run and are re-fetched on the next one.
-        cacheable = fetched.filter(
-            F.col("__payload").isNotNull()
-            & ~F.col("__payload").isin("", "null", "{}", "[]", '""')
-        )
-        cacheable.write.mode("append").parquet(cache_dir)
-        all_payloads = _read_cache(cache_dir)
-        if all_payloads is not None:
-            if for_join:
-                return all_payloads
-            return urls.join(all_payloads, "__url", "left")
-    return urls.join(fetched, "__url", "left")
+        misses = misses.join(cached, "__url", "left_anti")
+    misses = misses.persist()
+    try:
+        n_misses = misses.count()
+        payloads = cached
+        if n_misses:
+            tasks = _fetch_tasks(n_misses, spark.sparkContext.defaultParallelism)
+            fetched = misses.repartition(tasks).mapInPandas(
+                _fetch_partition(fetcher, FETCH_IN_FLIGHT // tasks), schema=URL_CACHE_SCHEMA
+            )
+            if cache_dir is None:
+                # every action on an unmaterialized fetch plan would send
+                # every request again: fetch once, keep the payloads
+                # (bounded by the distinct misses) on the executors. A
+                # lost executor re-fetches only its own partitions.
+                payloads = fetched.persist(StorageLevel.MEMORY_AND_DISK)
+                payloads.count()
+            else:
+                # persist fresh responses before use: a downstream task
+                # retry re-reads the cache instead of re-fetching
+                # (idempotency). FAILURE payloads are NOT cached:
+                # default_fetcher returns {} after final failure, so an
+                # empty payload means "fetch failed or API returned
+                # nothing" — caching it would poison every future chain
+                # with an infinite-TTL empty row (reference only stores
+                # non-empty data: magictable.py 'if data:'). Failed URLs
+                # come back null THIS run and are re-fetched on the next.
+                fetched.filter(
+                    F.col("__payload").isNotNull()
+                    & ~F.col("__payload").isin("", "null", "{}", "[]", '""')
+                ).write.mode("append").parquet(cache_dir)
+                payloads = _read_cache(cache_dir)
+    finally:
+        misses.unpersist()
+    if payloads is None:  # no cache, and nothing was fetched into one
+        return urls.withColumn("__payload", F.lit(None).cast("string"))
+    return payloads if for_join else urls.join(payloads, "__url", "left")
 
 
 def parse_payload(df: DataFrame, payload_col: str = "__payload") -> DataFrame:

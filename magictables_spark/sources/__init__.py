@@ -16,27 +16,52 @@ source id (magictable.py:55-67).
 from __future__ import annotations
 
 import abc
+import http.client
 import json
 import random
 import time
 import urllib.request
 from typing import Any, Callable
+from urllib.parse import quote, urlsplit, urlunsplit
 
 from magictables_spark.identity import raw_data_id, source_id
 
 Fetcher = Callable[[str, dict | None], Any]  # (url, params) -> parsed JSON / text
+# what a GET may raise from the network or the server: OSError covers
+# URLError, HTTPError (429/5xx) and socket timeouts
+NETWORK_ERRORS = (OSError, http.client.HTTPException)
+# characters a URL keeps as they are: RFC 3986 reserved ones and "%"
+URL_SAFE = "!#$%&'()*+,/:;=?@[]~"
+
+
+def _sendable(url: str) -> str:
+    """``url`` with what http.client cannot send (non-ASCII characters,
+    spaces, control characters) percent-encoded as UTF-8 in the path,
+    query and fragment. Reserved characters and existing ``%XX`` escapes
+    are kept; the host is left to http.client's IDNA encoding."""
+    p = urlsplit(url)
+    return urlunsplit(
+        p._replace(
+            path=quote(p.path, safe=URL_SAFE),
+            query=quote(p.query, safe=URL_SAFE),
+            fragment=quote(p.fragment, safe=URL_SAFE),
+        )
+    )
 
 
 def default_fetcher(url: str, params: dict | None = None, *, max_retries: int = 5) -> Any:
     """Retrying GET: 5 attempts, exponential backoff 2^n seconds + jitter
     (reference magictable.py:317-347). Returns parsed JSON when possible,
     raw text otherwise; {} after final failure (failed rows become null
-    payloads, never task failures)."""
+    payloads, never task failures). Only network and HTTP errors are
+    retried; a host no encoding can send fails at once with {}; anything
+    else (a URL with no scheme, a bug) raises at once."""
     if params:
         from urllib.parse import urlencode
 
         sep = "&" if "?" in url else "?"
         url = f"{url}{sep}{urlencode(params)}"
+    url = _sendable(url)
     for attempt in range(max_retries):
         try:
             with urllib.request.urlopen(url, timeout=30) as resp:
@@ -45,10 +70,12 @@ def default_fetcher(url: str, params: dict | None = None, *, max_retries: int = 
                     return json.loads(body)
                 except json.JSONDecodeError:
                     return body
-        except Exception:  # noqa: BLE001 - includes HTTP 429/5xx
+        except NETWORK_ERRORS:  # includes HTTP 429/5xx
             if attempt == max_retries - 1:
                 return {}
             time.sleep(2**attempt + random.random())
+        except UnicodeError:  # bad data in the host: no retry can fix it
+            return {}
     return {}
 
 
@@ -148,14 +175,17 @@ def bytes_fetcher(url: str, params: dict | None = None, *, max_retries: int = 5)
     """Raw-bytes GET with the same retry policy as default_fetcher —
     binary payloads (PDFs, media) must never round-trip through a text
     decode. b'' after final failure."""
+    url = _sendable(url)
     for attempt in range(max_retries):
         try:
             with urllib.request.urlopen(url, timeout=30) as resp:
                 return resp.read()
-        except Exception:  # noqa: BLE001
+        except NETWORK_ERRORS:
             if attempt == max_retries - 1:
                 return b""
             time.sleep(2**attempt + random.random())
+        except UnicodeError:
+            return b""
     return b""
 
 

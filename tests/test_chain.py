@@ -20,22 +20,44 @@ from magictables_spark.warehouse import Warehouse
 class MockFetcher:
     """Picklable fetcher that logs every call to a file — the fetch runs
     inside executor worker processes, so an in-memory list on the driver
-    would never see the calls; the shared filesystem does."""
+    would never see the calls; the shared filesystem does. Each line is
+    ``url, partition id, start, end``; ``delay`` seconds of sleep per
+    call model a slow API, as ``perfbench/enrich.py`` does."""
 
-    def __init__(self, log_file: str):
+    def __init__(self, log_file: str, delay: float = 0.0):
         self.log_file = log_file
+        self.delay = delay
 
-    def calls(self) -> list[str]:
+    def timed_calls(self) -> list[tuple[str, int, float, float]]:
         import os
 
         if not os.path.exists(self.log_file):
             return []
         with open(self.log_file) as f:
-            return [line.strip() for line in f if line.strip()]
+            rows = [line.rstrip("\n").split("\t") for line in f if line.strip()]
+        return [(u, int(p), float(a), float(b)) for u, p, a, b in rows]
+
+    def calls(self) -> list[str]:
+        return [c[0] for c in self.timed_calls()]
+
+    def log(self, url: str, start: float) -> None:
+        import time
+
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        part = ctx.partitionId() if ctx is not None else -1
+        with open(self.log_file, "a") as f:
+            f.write(f"{url}\t{part}\t{start}\t{time.time()}\n")
 
     def __call__(self, url: str, params=None):
-        with open(self.log_file, "a") as f:
-            f.write(url + "\n")
+        import time
+
+        start = time.time()
+        time.sleep(self.delay)
+        self.log(url, start)
+        if "/item/" in url:
+            return {"id": url.rsplit("/", 1)[-1]}
         if "/user/" in url:
             uid = int(url.rsplit("/", 1)[-1])
             return {"uid": uid, "score": uid * 10, "tier": "gold" if uid % 2 else "silver"}
@@ -110,8 +132,9 @@ class RecoveringFetcher(MockFetcher):
     the API coming back after an outage."""
 
     def __call__(self, url: str, params=None):
-        with open(self.log_file, "a") as f:
-            f.write(url + "\n")
+        import time
+
+        self.log(url, time.time())
         return {"recovered": url.rsplit("/", 1)[-1]}
 
 
@@ -261,6 +284,49 @@ def test_chain_enrich_full_pipeline_real_http(spark, wh):
         srv.shutdown()
 
 
+def test_chain_null_and_non_ascii_keys_over_real_http(spark, wh):
+    """Bad key data never fails the chain: a null key sends no request
+    and gets null api_ columns; a key with non-ASCII characters and a
+    space is percent-encoded by default_fetcher and answered; both with
+    and without a warehouse."""
+    import http.server
+    import json as _json
+    import threading
+    from urllib.parse import unquote
+
+    paths: list[str] = []
+    lock = threading.Lock()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def log_message(self, *args):
+            pass
+
+        def do_GET(self):
+            with lock:
+                paths.append(self.path)
+            body = _json.dumps({"name": unquote(self.path.rsplit("/", 1)[-1])}).encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    template = f"http://127.0.0.1:{srv.server_address[1]}/city/{{city}}"
+    df = spark.createDataFrame([("Zürich",), (None,), ("São Paulo",)], "city string")
+    try:
+        for warehouse in (wh, None):
+            with lock:
+                paths.clear()
+            out = chain_enrich(df, template, warehouse=warehouse)
+            got = sorted((r.city or "", r.api_name or "") for r in out.collect())
+            assert got == [("", ""), ("São Paulo", "São Paulo"), ("Zürich", "Zürich")]
+            with lock:
+                assert sorted(paths) == ["/city/S%C3%A3o%20Paulo", "/city/Z%C3%BCrich"]
+    finally:
+        srv.shutdown()
+
+
 def test_chain_with_magicframe_target(spark, tmp_path):
     """Reference parity for chain(other: MagicTable): the other frame's
     source identifier (its URL template) becomes the chain target."""
@@ -333,3 +399,81 @@ def test_chain_llm_key_inference(spark):
     named = MagicFrame.from_raw(spark, [{"uid": 7}])
     out2 = named.chain("http://mock/u/{uid}", llm=MockLLM([]), fetcher=fetcher)
     assert out2.df.count() == 1
+
+
+def _peak_overlap(calls) -> int:
+    events = sorted([(a, 1) for _, _, a, _ in calls] + [(b, -1) for _, _, _, b in calls])
+    peak = cur = 0
+    for _, step in events:
+        cur += step
+        peak = max(peak, cur)
+    return peak
+
+
+def test_fetch_budget_spreads_misses_over_tasks(spark, wh, tmp_path):
+    """300 slow misses are fetched once each, by as many tasks as the
+    budget asks for (more than one when there is more than one task
+    slot), with more requests in flight than one 8-thread pool and never
+    more than the chain's budget."""
+    from magictables_spark.operators.chain import FETCH_IN_FLIGHT, _fetch_tasks, fetch_urls
+
+    fetcher = MockFetcher(str(tmp_path / "calls.log"), delay=0.02)
+    urls = spark.createDataFrame([(f"http://api/item/{i}",) for i in range(300)], "u string")
+    out = fetch_urls(spark, urls, fetcher, wh)
+    assert out.count() == 300
+
+    calls = fetcher.timed_calls()
+    assert sorted(c[0] for c in calls) == sorted(f"http://api/item/{i}" for i in range(300))
+    parallelism = spark.sparkContext.defaultParallelism
+    partitions = {c[1] for c in calls}
+    assert len(partitions) == _fetch_tasks(300, parallelism)
+    if parallelism > 1:
+        assert len(partitions) > 1
+    assert 8 < _peak_overlap(calls) <= FETCH_IN_FLIGHT
+
+
+def test_chain_all_cached_urls_skip_fetch_and_append(spark, wh, mock_fetcher):
+    """A chain with new provenance whose URLs are all in the per-URL
+    cache fetches nothing and appends nothing to the cache."""
+    import os
+
+    df = spark.createDataFrame([(1,), (2,)], "user_id int")
+    chain_enrich(df, "http://api/user/{user_id}", fetcher=mock_fetcher, warehouse=wh, sources=["a"])
+    n_calls = len(mock_fetcher.calls())
+    cache_dir = os.path.join(wh.root, "_url_cache")
+    files = sorted(os.listdir(cache_dir))
+
+    out = chain_enrich(
+        df, "http://api/user/{user_id}", fetcher=mock_fetcher, warehouse=wh, sources=["b"]
+    )
+    assert sorted((r.user_id, r.api_score) for r in out.collect()) == [(1, 10), (2, 20)]
+    assert len(mock_fetcher.calls()) == n_calls
+    assert sorted(os.listdir(cache_dir)) == files
+
+
+def test_chain_without_warehouse_fetches_once(spark, mock_fetcher):
+    """Without a warehouse the fetched payloads are materialized once:
+    later actions on the chain result send no request again."""
+    df = spark.createDataFrame([(i % 50,) for i in range(200)], "user_id int")
+    out = chain_enrich(df, "http://api/user/{user_id}", fetcher=mock_fetcher)
+    assert out.count() == 200
+    assert len(out.collect()) == 200
+    assert sorted(mock_fetcher.calls()) == sorted(f"http://api/user/{i}" for i in range(50))
+
+
+def test_default_fetcher_raises_programming_errors_at_once(monkeypatch):
+    """Only network and HTTP errors are retried: a malformed URL raises
+    its ValueError at once instead of backing off into a null row, and a
+    host that IDNA cannot encode (bad data) is an empty payload at once."""
+    import time
+
+    from magictables_spark.sources import bytes_fetcher, default_fetcher
+
+    def no_sleep(s):
+        raise AssertionError(f"backed off {s} s on a programming error")
+
+    monkeypatch.setattr(time, "sleep", no_sleep)
+    for fetch in (default_fetcher, bytes_fetcher):
+        with pytest.raises(ValueError, match="unknown url type"):
+            fetch("not-a-url")
+        assert not fetch("http://" + "ü" * 70 + ".invalid/x")
