@@ -12,11 +12,40 @@ lazy (nothing executes until an action).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from magictables_spark.identity import table_name
+
+
+# This process's ingest dir: made on first use, removed at interpreter exit.
+_INGEST_DIR: str | None = None
+
+
+def _ingest(spark: SparkSession, rows: list[dict]) -> tuple[DataFrame, str | None]:
+    """:func:`rows_to_df` plus the path of the JSONL file the frame scans
+    (None for no rows); the file lives until the caller removes it or the
+    process exits."""
+    import json as _json
+
+    from magictables_spark.operators.flatten import flatten
+
+    if not rows:
+        return spark.createDataFrame([], "placeholder string").limit(0), None
+    global _INGEST_DIR
+    if _INGEST_DIR is None:
+        _INGEST_DIR = tempfile.mkdtemp(prefix="mts_ingest_")
+        atexit.register(shutil.rmtree, _INGEST_DIR, True)
+    fd, path = tempfile.mkstemp(suffix=".jsonl", dir=_INGEST_DIR)
+    with os.fdopen(fd, "w", encoding="utf-8") as f:
+        for r in rows:
+            f.write(_json.dumps(r, default=str) + "\n")
+    return flatten(spark.read.json(path)), path
 
 
 def rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -27,23 +56,10 @@ def rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     flattening, sources.py:74-76).
 
     Ingest rows are driver-sized by definition (they came from a
-    source's fetch_data()); they ride to the scan through a temp JSONL
-    file rather than the deprecated RDD[str] json() overload — no
-    ``.rdd`` anywhere, Spark-4-clean."""
-    import json as _json
-    import os
-    import tempfile
-
-    from magictables_spark.operators.flatten import flatten
-
-    if not rows:
-        return spark.createDataFrame([], "placeholder string").limit(0)
-    d = tempfile.mkdtemp(prefix="mts_ingest_")
-    path = os.path.join(d, "rows.jsonl")
-    with open(path, "w", encoding="utf-8") as f:
-        for r in rows:
-            f.write(_json.dumps(r, default=str) + "\n")
-    return flatten(spark.read.json(path))
+    source's fetch_data()); they ride to the scan through a JSONL file
+    in the process's ingest dir rather than the deprecated RDD[str]
+    json() overload — no ``.rdd`` anywhere, Spark-4-clean."""
+    return _ingest(spark, rows)[0]
 
 
 class MagicFrame:
@@ -94,11 +110,13 @@ class MagicFrame:
             )
 
         rows = source.fetch_data()
-        df = rows_to_df(spark, rows)
+        df, path = _ingest(spark, rows)
         if warehouse is not None:
             warehouse.write_table(
                 df, sid, {"type": source.get_type(), "identifier": source.get_identifier()}
             )
+            if path:  # the returned frame reads the warehouse copy
+                os.remove(path)
             df = warehouse.read_table(spark, sid)
         return cls(df, sources=[sid], last_identifier=source.get_identifier())
 

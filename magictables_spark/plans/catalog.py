@@ -1,17 +1,28 @@
 """Catalog of the fixture tables (TESTDATA.md) + scan helpers.
 
 Every query path goes through :func:`load_table` so scans stay uniform:
-plain ``spark.read.parquet`` — declarative, so Catalyst keeps predicate
-pushdown / column pruning / row-group skipping on the scan. At 100 TB
-the same call reads a partitioned directory tree and partition pruning
-applies unchanged.
+``spark.read.schema(...).parquet`` — declarative, so Catalyst keeps
+predicate pushdown / column pruning / row-group skipping on the scan.
+At 100 TB the same call reads a partitioned directory tree and
+partition pruning applies unchanged.
+
+A table's schema is resolved once per corpus fingerprint
+(:func:`fixture_schema`, keyed like ``warehouse.store_key``): the
+footer-derived schema is remembered, so a later scan of the same files
+launches no schema-inference job, and a regenerated corpus moves the
+fingerprint and is inferred again. Only the schema is remembered: every
+query still lists and scans the files.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from magictables_spark.warehouse import corpus_fingerprint
 
 TABLES = (
     "region",
@@ -30,11 +41,16 @@ TABLES = (
 # cardinality is fixed by the schema (region=5, nation=25), not by SF.
 BROADCAST_TABLES = {"region", "nation"}
 
+# (realpath, corpus fingerprint) -> the file's inferred schema; one entry
+# per distinct table file the process reads.
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table. Column pruning/pushdown happen via Catalyst
-    on top of this — callers `select`/`filter` and the parquet reader
-    receives PushedFilters + ReadSchema automatically."""
+
+def fixture_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """File schema of ``<sf_dir>/<name>.parquet`` (before ``load_table``
+    converts a nanos ``events.ts``), inferred only on the first call per
+    corpus fingerprint. Sets the reader confs every scan of a fixture
+    needs."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Defensive runtime confs: the driver may build its own session
@@ -47,7 +63,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = (os.path.realpath(path), corpus_fingerprint(path))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one fixture table. Column pruning/pushdown happen via Catalyst
+    on top of this — callers `select`/`filter` and the parquet reader
+    receives PushedFilters + ReadSchema automatically."""
+    schema = fixture_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
     # events.ts is TIMESTAMP(NANOS) parquet, surfaced as nanos-bigint via
     # spark.sql.legacy.parquet.nanosAsLong; convert to a microsecond
     # timestamp here so every downstream operator sees a real timestamp.
@@ -100,15 +129,17 @@ def spread_n(df: DataFrame, floor: int = 2) -> int:
     partitioning from input size, not a constant tuned for one
     deployment mode.
 
-    Frames whose estimate is unavailable or meaningless (localCheckpoint
-    LogicalRDDs report Long.MaxValue) clamp to defaultParallelism — the
-    conservative pre-existing behaviour.
+    Frames whose estimate is unavailable or meaningless (RDD-backed
+    LogicalRDDs, checkpointed or not, report Long.MaxValue; a
+    localCheckpoint of a planned frame keeps its origin's estimate)
+    clamp to defaultParallelism — the conservative pre-existing
+    behaviour.
     """
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # stats unavailable -> previous fixed behaviour
+    except Py4JJavaError:  # the JVM could not estimate -> full width
         return cores
     if size <= 0:
         return cores

@@ -220,11 +220,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream file source over the events fixture. The fixture is
     one flat file and the file stream source wants a directory, so
     stream the fixture DIR with a glob pinning this table."""
-    import os
+    from magictables_spark.plans.catalog import fixture_schema
 
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(fixture_schema(spark, sf_dir, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -246,12 +245,13 @@ def _events_stream_sharded(
     _events_stream, no copy)."""
     import os
 
+    from magictables_spark.plans.catalog import fixture_schema
     from magictables_spark.streaming.commit import ReplaySource
     from magictables_spark.warehouse import store_key
 
+    schema = fixture_schema(spark, sf_dir, "events")
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    n_rows = spark.read.parquet(path).count()
+    n_rows = spark.read.schema(schema).parquet(path).count()
     n_shards = n_rows // rows_per_shard
     if n_shards < 2:
         return _events_stream(spark, sf_dir)
@@ -260,7 +260,7 @@ def _events_stream_sharded(
     )
 
     def _seed():
-        ev = spark.read.parquet(path)
+        ev = spark.read.schema(schema).parquet(path)
         lo, hi = ev.agg(
             F.min(F.unix_millis(F.col("ts").cast("timestamp"))),
             F.max(F.unix_millis(F.col("ts").cast("timestamp"))),

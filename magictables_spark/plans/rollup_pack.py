@@ -1061,7 +1061,7 @@ def join_view_store_stream(
 
     def _append_batch(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
-        cust = ss.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        cust = _t(ss, sf_dir, "customer")
         # own-subdir overwrite = idempotent replay, no marker needed
         _view(batch_df, F.broadcast(cust)).write.mode("overwrite").parquet(
             os.path.join(store_dir, f"b{batch_id}")

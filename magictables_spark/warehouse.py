@@ -390,32 +390,22 @@ class Warehouse:
                     f"CLUSTERED BY ({bcols}){sort} INTO {meta['n_buckets']} BUCKETS "
                     f"LOCATION '{pdir}'"
                 )
-            # Drop stale sibling registrations whose backing version dir
-            # no longer exists (round-6 advisory: per-(id, version)
-            # entries accumulated and could outlive their dirs, turning
-            # later reads through the stale name into failures). Entries
-            # for versions still on disk are left alone — a concurrent
-            # time-travel reader may hold them. Round-7 advisory: the
-            # Spark catalog namespace is global per session, so a
-            # same-prefix registration may belong to a DIFFERENT
-            # Warehouse root; only sweep names whose version suffix is
-            # in THIS entry's live/history version set (known from
-            # _meta.json) — an unknown suffix is someone else's table.
+            # Drop the registrations of this entry's other versions whose
+            # dirs are gone (vacuumed), so a later read through a stale
+            # name cannot fail. Versions still on disk keep theirs — a
+            # concurrent time-travel reader may hold them. Only this
+            # entry's own live/history names are dropped, never by a
+            # catalog listing: the Spark catalog is global per session,
+            # so a same-prefix name may belong to a DIFFERENT Warehouse
+            # root. DROP TABLE IF EXISTS launches no Spark job.
             base = self._table_dir(table_id)
             entry = self._entry(table_id) or {}
-            known_versions = {
-                str(v).replace(".", "_")
-                for v in {entry.get("version"), *(entry.get("history") or {})}
-                if v
-            }
-            for t in spark.catalog.listTables():
-                if t.name.startswith(prefix) and t.name != name:
-                    suffix = t.name[len(prefix):]
-                    if suffix not in known_versions:
-                        continue
-                    vdir = os.path.join(base, suffix)
-                    if not os.path.exists(vdir):
-                        spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+            for v in {entry.get("version"), *(entry.get("history") or {})}:
+                suffix = str(v).replace(".", "_")
+                if v and prefix + suffix != name and not os.path.exists(
+                    os.path.join(base, suffix)
+                ):
+                    spark.sql(f"DROP TABLE IF EXISTS {prefix}{suffix}")
             return spark.table(name)
         if meta and meta.get("schema_json"):
             # the version's own schema: no inference job at read time

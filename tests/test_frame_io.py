@@ -4,6 +4,8 @@ round-trips (SURVEY §2.B scan/sink surface)."""
 
 from __future__ import annotations
 
+import os
+
 from magictables_spark.frame import MagicFrame
 
 
@@ -77,3 +79,28 @@ def test_frame_pandas_on_spark(spark):
     mf = MagicFrame(spark.createDataFrame([(1, 2.0), (2, 4.0)], ["id", "v"]))
     psdf = mf.to_pandas_on_spark()
     assert float(psdf["v"].sum()) == 6.0
+
+
+def test_ingest_files_are_removed_once_warehoused(spark, tmp_path, monkeypatch):
+    """An ingest written to a warehouse leaves no JSONL file behind; a
+    frame built without a warehouse keeps its file, so it still collects
+    after a later ingest."""
+    import tempfile
+
+    from magictables_spark import frame
+    from magictables_spark.warehouse import Warehouse
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(frame, "_INGEST_DIR", None)
+    wh = Warehouse(str(tmp_path / "wh"))
+
+    def ingest_files():
+        return [f for _, _, fs in os.walk(tmp_path / "tmp") for f in fs]
+
+    kept = MagicFrame.from_raw(spark, [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}])
+    assert len(ingest_files()) == 1
+    stored = MagicFrame.from_raw(spark, [{"id": 3, "v": "c"}], warehouse=wh)
+    assert len(ingest_files()) == 1  # only the warehouse-less frame's
+    assert [tuple(r) for r in stored.df.collect()] == [(3, "c")]
+    assert sorted(tuple(r) for r in kept.df.collect()) == [(1, "a"), (2, "b")]

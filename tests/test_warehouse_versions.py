@@ -276,3 +276,50 @@ def test_legacy_meta_blob_still_readable_and_migrates_on_write(spark, tmp_path):
     assert wh.read_table(spark, "legacy_t").count() == 3
     # shard wins over the (now stale) legacy blob
     assert wh.table_meta("legacy_t")["version"] != entry["version"]
+
+
+def _bucketed(spark, wh, table_id, tag):
+    df = spark.range(0, 40).selectExpr("id", f"{tag} AS tag")
+    wh.write_table(df, table_id, {}, bucket_by=["id"], n_buckets=4)
+    return wh.table_meta(table_id)["version"]
+
+
+def _registered(spark, table_id, version):
+    return spark.catalog.tableExists(f"mts_wh_{table_id}_{version}")
+
+
+def test_warm_bucketed_read_launches_no_job(spark, tmp_path):
+    wh = Warehouse(str(tmp_path / "wh"))
+    _bucketed(spark, wh, "bkt_warm", 1)
+    wh.read_table(spark, "bkt_warm")  # registers the live version
+    sc = spark.sparkContext
+    sc.setJobGroup("wh_bucketed_warm", "wh_bucketed_warm")
+    try:
+        df = wh.read_table(spark, "bkt_warm")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("wh_bucketed_warm") == []
+    assert df.count() == 40
+
+
+def test_bucketed_read_drops_only_its_own_stale_registrations(spark, tmp_path):
+    """A registration whose history version dir was removed is dropped
+    by the next read; a same-prefix registration of the same table id
+    under another warehouse root is left alone."""
+    import shutil
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    other = Warehouse(str(tmp_path / "other"))
+    v1 = _bucketed(spark, wh, "bkt_sweep", 1)
+    _bucketed(spark, wh, "bkt_sweep", 2)
+    v_other = _bucketed(spark, other, "bkt_sweep", 3)
+    wh.read_table(spark, "bkt_sweep", version=v1)
+    other.read_table(spark, "bkt_sweep")
+    assert _registered(spark, "bkt_sweep", v1)
+    assert _registered(spark, "bkt_sweep", v_other)
+
+    shutil.rmtree(tmp_path / "wh" / "tables" / "bkt_sweep" / v1)
+    assert wh.read_table(spark, "bkt_sweep").count() == 40
+    assert not _registered(spark, "bkt_sweep", v1)
+    assert _registered(spark, "bkt_sweep", v_other)
+    assert other.read_table(spark, "bkt_sweep").count() == 40
