@@ -20,7 +20,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from magictables_spark.identity import table_name
+from magictables_spark.identity import step_id, table_name
 
 
 # This process's ingest dir: made on first use, removed at interpreter exit.
@@ -48,6 +48,22 @@ def _ingest(spark: SparkSession, rows: list[dict]) -> tuple[DataFrame, str | Non
     return flatten(spark.read.json(path)), path
 
 
+def _step_arg(value: Any) -> Any:
+    """An argument of a derived-frame step as ``step_id`` hashes it: a
+    frame by its identity (a MagicFrame's name, a DataFrame's semantic
+    plan hash), containers element-wise, anything else as
+    ``canonical_json`` renders it."""
+    if isinstance(value, MagicFrame):
+        return value.name
+    if isinstance(value, DataFrame):
+        return f"plan:{value.semanticHash()}"
+    if isinstance(value, (list, tuple)):
+        return [_step_arg(v) for v in value]
+    if isinstance(value, dict):
+        return {str(k): _step_arg(v) for k, v in value.items()}
+    return value
+
+
 def rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """List-of-dicts -> flattened DataFrame. Nested payloads go through
     spark.read.json for full recursive schema inference (merged across
@@ -67,7 +83,8 @@ class MagicFrame:
 
     Attributes:
         df: the underlying ``pyspark.sql.DataFrame`` (lazy logical plan).
-        sources: provenance source-ids in application order (§1.4 of SURVEY).
+        sources: provenance source-ids in application order (§1.4 of SURVEY),
+            one ``identity.step_id`` per derived step after the sources.
         name: provenance-derived identity, ``"_".join(sources)``.
     """
 
@@ -232,7 +249,11 @@ class MagicFrame:
         from magictables_spark.llm import nl_transform
 
         out = nl_transform(self.df, query, llm=llm, warehouse=warehouse, model=model, table_name=self.name)
-        return MagicFrame(out, sources=self.sources, name=transform_name(self.name, query, model))
+        return MagicFrame(
+            out,
+            sources=self.sources + [step_id("transform", query, model)],
+            name=transform_name(self.name, query, model),
+        )
 
     # -- join_with_query (reference facade's dead API, made real) ----------
 
@@ -289,7 +310,8 @@ class MagicFrame:
 
         kwargs = {"n_tables": N_TABLES, "n_probes": N_PROBES} if fast else {}
         out = ann_topk(self.df, id_col, vec_col, k=k, dim=dim, **kwargs)
-        return MagicFrame(out, sources=self.sources, name=self.name)
+        step = step_id("similar_topk", id_col, vec_col, k=k, dim=dim, fast=fast)
+        return MagicFrame(out, sources=self.sources + [step])
 
     # -- closure property: every DataFrame-returning method stays magic ----
 
@@ -298,11 +320,14 @@ class MagicFrame:
         if callable(value):
 
             def wrapped(*args: Any, **kwargs: Any) -> Any:
-                args = [a.df if isinstance(a, MagicFrame) else a for a in args]
-                kwargs = {k: (v.df if isinstance(v, MagicFrame) else v) for k, v in kwargs.items()}
-                result = value(*args, **kwargs)
+                result = value(
+                    *[a.df if isinstance(a, MagicFrame) else a for a in args],
+                    **{k: (v.df if isinstance(v, MagicFrame) else v) for k, v in kwargs.items()},
+                )
                 if isinstance(result, DataFrame):
-                    return MagicFrame(result, sources=self.sources, name=self.name)
+                    # a derived frame is a new table: its own provenance step
+                    step = step_id(attr, *_step_arg(args), **_step_arg(kwargs))
+                    return MagicFrame(result, sources=self.sources + [step])
                 return result
 
             return wrapped
@@ -341,7 +366,8 @@ class MagicFrame:
         ``transform`` (same contract the generated SQL targets), so a
         user can hand-write what the NL path would synthesize."""
         self.df.createOrReplaceTempView(view_name)
-        return MagicFrame(self.spark.sql(query), sources=self.sources, name=self.name)
+        step = step_id("sql", query, view_name)
+        return MagicFrame(self.spark.sql(query), sources=self.sources + [step])
 
     def to_pandas_on_spark(self):
         """pandas-typed API over the SAME distributed frame

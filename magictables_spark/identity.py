@@ -9,7 +9,10 @@ behavior — cache hits across sessions depend on it):
 - a raw source hashes the data itself (sources.py:52-57);
 - a table's name = "_".join of its sources' ids (magictable.py:102);
 - a transform renames to ``f"{name}_query:{query}_model:{model}"``
-  (magictable.py:180).
+  (magictable.py:180);
+- any other derived frame (a delegated DataFrame op, ``sql``,
+  ``similar_topk``) — and a transform too — appends a ``step_id`` to
+  its sources, so it never shares its parent's cache identity.
 """
 
 from __future__ import annotations
@@ -38,6 +41,15 @@ def raw_data_id(data: Any) -> str:
 def table_name(source_ids: list[str]) -> str:
     """Concatenated hash chain of provenance (magictable.py:102)."""
     return "_".join(source_ids)
+
+
+def step_id(method: str, *args: Any, **kwargs: Any) -> str:
+    """Provenance id of one derived-frame step: md5 of the method name
+    plus a canonical repr of its arguments. Appended to a frame's
+    sources, it gives every derived frame its own cache identity, and
+    two frames that apply the same op to the same parent the same one."""
+    payload = {"step": method, "args": list(args), "kwargs": kwargs}
+    return hashlib.md5(canonical_json(payload).encode()).hexdigest()
 
 
 def transform_name(name: str, query: str, model: str) -> str:

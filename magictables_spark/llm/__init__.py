@@ -20,6 +20,8 @@ import json
 import re
 from typing import Protocol
 
+from py4j.protocol import Py4JError
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame
 
 # ---------------------------------------------------------------------------
@@ -180,7 +182,11 @@ def validate_sql(sql: str, spark=None, allowed_tables: set[str] | None = None) -
         parser = spark._jsparkSession.sessionState().sqlParser()
         try:
             plan = parser.parsePlan(stripped)
-        except Exception as exc:  # noqa: BLE001 - py4j wraps ParseException
+        except ParseException as exc:
+            # a failed parsePlan raises the JVM's ParseException, which
+            # the session's py4j error converter re-raises as
+            # pyspark.errors.exceptions.captured.ParseException (a
+            # pyspark.errors.ParseException); anything else propagates
             raise ValueError(f"SQL does not parse: {sql!r}") from exc
         cls = plan.getClass().getSimpleName()
         if "Command" in cls or "Insert" in cls or "Ddl" in cls:
@@ -245,12 +251,17 @@ def _walk_relations(plan) -> tuple[list[list[str]], set[str], int]:
         ch = node.children()
         for i in range(ch.size()):
             queue.append(ch.apply(i))
+        # fail-CLOSED: skipping a node whose subqueries cannot be walked
+        # would pass any table hidden inside them unvetted
         try:
             sq = node.subqueries()
-            for i in range(sq.size()):
-                queue.append(sq.apply(i))
-        except Exception:  # noqa: BLE001 - subqueries() is best-effort per node
-            pass
+        except Py4JError as exc:
+            raise ValueError(
+                f"could not verify table references: subqueries of a {cls} "
+                "node cannot be walked"
+            ) from exc
+        for i in range(sq.size()):
+            queue.append(sq.apply(i))
     return rels, ctes, sightings
 
 

@@ -22,7 +22,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from magictables_spark.warehouse import corpus_fingerprint
+from magictables_spark.warehouse import corpus_fingerprint, local_path
 
 TABLES = (
     "region",
@@ -64,7 +64,7 @@ def fixture_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (os.path.realpath(path), corpus_fingerprint(path))
+    key = (local_path(path), corpus_fingerprint(path))
     schema = _SCHEMAS.get(key)
     if schema is None:
         schema = _SCHEMAS[key] = spark.read.parquet(path).schema

@@ -17,6 +17,9 @@ quadratic shingle self-join the same way.
 
 from __future__ import annotations
 
+import functools
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -55,6 +58,93 @@ def _dot_unrolled(a: str, b: str, dim: int = 64):
     return F.expr("(" + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)) + ")")
 
 
+# ---------------------------------------------------------------------------
+# ANN serve path. The four ANN index families — multiprobe sign-LSH, IVF,
+# PQ and IVFPQ — each run up to four legs over one index:
+#   topk       builds the index inside the query, unpersisted;
+#   persisted  builds it once through `Store` and serves every call from
+#              the warehouse read;
+#   append     extends a stored history index with the vectors past
+#              APPEND_SPLIT at the index's pinned geometry (`_append_leg`);
+#   stream     does the same per micro-batch under a `ReplaySource`
+#              (`_stream_leg`).
+# Every leg of a family ends in that family's one serve (`_lsh_serve`,
+# `_ivf_serve`, `_pq_serve`, `_ivfpq_serve`), so a topk slug and its
+# persisted twin return the same rows by construction. The serves are
+# assembled from these stages, each written once:
+#   _cosine            exact cosine of two attached int64 vectors
+#   _topk              per-query top-k, ties to the smaller neighbor_id
+#   _exact_knn         brute-force exact neighbours of a probe set
+#   _shortlist         top-n candidates by a coarse score (int8, PQ-ADC)
+#   _rescore           attach full vectors by key, exact cosine, top-k
+#   _stride_centroids  the IVF coarse quantizer
+#   _nearest_cells     a query's nearest IVF cells
+#   _residuals         vectors minus their assigned centroid (IVFPQ)
+#   _pq_literal        a stored or trained codebook as one SQL literal
+#   _pq_recon          codes x codebook over that literal
+# The DuckDB oracles spell every stage out on their own: they are the
+# check, not the code.
+# ---------------------------------------------------------------------------
+
+# schema of an empty serve (an empty corpus trains an empty codebook)
+_NO_NEIGHBORS = "query_id bigint, neighbor_id bigint, cosine double"
+
+
+def _cosine(a: str, na: str, b: str = "q", nb: str = "nrm", dot=_dot):
+    """Exact cosine of the int64 vectors `a` and `b` from their int64 dot
+    and squared norms `na`, `nb`: one IEEE divide of integer-exact
+    operands, so both engines produce the same double."""
+    return dot(a, b).cast("double") / (
+        F.sqrt(F.col(na).cast("double")) * F.sqrt(F.col(nb).cast("double"))
+    )
+
+
+def _topk(scored: DataFrame, k: int, by: str = "cosine") -> DataFrame:
+    """Per-query top-k rows of `scored` by descending `by`, ties to the
+    smaller neighbor_id — the oracles' ROW_NUMBER order."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(by), F.asc("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _exact_knn(norms: DataFrame, probe, k: int = 10, carry: tuple = ()) -> DataFrame:
+    """Brute-force exact top-k of the `probe` rows of `norms` (vec_id, q,
+    nrm, *carry) against every other vector -> (query_id, neighbor_id,
+    *carry, cosine). The probe set is broadcast, so the candidate side is
+    one map-side pass — the right shape even at scale for a bounded probe
+    set, and how recall ground truth is audited."""
+    probes = norms.filter(probe).select(
+        F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nrm").alias("na")
+    )
+    # spread before the probe broadcast fan-out (single-split fixture
+    # scan; see _lsh_index_core's norms spread): the n x probes dot
+    # products are the whole cost
+    cand = spread(norms.select(F.col("vec_id").alias("neighbor_id"), *carry, "q", "nrm"))
+    scored = cand.join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", *carry, _cosine("qa", "na").alias("cosine")
+    )
+    return _topk(scored, k)
+
+
+def _shortlist(coarse: DataFrame, by: str, n: int) -> DataFrame:
+    """(query_id, neighbor_id) of the top-n candidates per query by the
+    coarse score `by` — the cheap pass of a two-phase search."""
+    return _topk(coarse, n, by).select("query_id", "neighbor_id")
+
+
+def _rescore(cand: DataFrame, vecs: DataFrame, dot=_dot, k: int = 10) -> DataFrame:
+    """Exact re-rank of shortlisted (query_id, neighbor_id) pairs: both
+    full vectors attach by key from `vecs` (vec_id, q, nrm), the query
+    side broadcast, then the exact cosine picks the top-k."""
+    a = vecs.select(
+        F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nrm").alias("na")
+    )
+    b = vecs.select(F.col("vec_id").alias("neighbor_id"), "q", "nrm")
+    scored = cand.join(F.broadcast(a), "query_id").join(b, "neighbor_id").select(
+        "query_id", "neighbor_id", _cosine("qa", "na", dot=dot).alias("cosine")
+    )
+    return _topk(scored, k)
+
+
 @q(
     "sim_cosine_topk",
     oracle=f"""
@@ -86,25 +176,8 @@ def _dot_unrolled(a: str, b: str, dim: int = 64):
     tags=("similarity", "ann"),
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _quantized(spark, sf_dir)
-    norms = e.withColumn("nrm", _dot("q", "q"))
-    queries_df = norms.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq"), F.col("nrm").alias("qnrm")
-    )
-    # spread before the 5-probe broadcast fan-out (single-split fixture
-    # scan; see _lsh_index_core's norms spread)
-    cand = spread(norms.select(F.col("vec_id").alias("neighbor_id"), "q", "nrm"))
-    scored = (
-        cand.join(F.broadcast(queries_df), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot("qq", "q").cast("double")
-            / (F.sqrt(F.col("qnrm").cast("double")) * F.sqrt(F.col("nrm").cast("double"))),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10).drop("rn")
+    norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
+    return _exact_knn(norms, F.col("vec_id") < 5)
 
 
 @q(
@@ -260,8 +333,6 @@ def _lsh_bits_for(n_vectors: int, target_bucket: int = 32) -> int:
     regardless of b, and the directed flip probes reunite whatever the
     extra bits split — so fewer bits cost nothing in candidate mass but
     buy cross-cluster recall)."""
-    import math
-
     if n_vectors <= 0:
         return BITS_PER_TABLE
     return max(BITS_PER_TABLE, min(18, math.ceil(math.log2(max(2, n_vectors / target_bucket)))))
@@ -413,7 +484,7 @@ _ANN_LSH_DOC = (
 def _lsh_index_frame(
     spark: SparkSession, sf_dir: str, n_tables: int, n_probes_cfg: int
 ) -> tuple[DataFrame, int]:
-    """The (vec_id, table, bucket, masks) LSH index — one row per
+    """The (vec_id, tbl, bucket, masks) LSH index — one row per
     (vector, table): home bucket from the hyperplane sign bits plus the
     query-directed flip masks. Shared by the per-query build
     (`_ann_lsh_impl`) and the build-once/serve-many persisted variant
@@ -485,43 +556,40 @@ def _lsh_index_core(
         )
         masks = f"transform({keys}, k -> shiftleft(CAST(1 AS BIGINT), CAST(k % 64 AS INT)))"
         structs.append(
-            f"struct({t} AS table, ({bucket}) AS bucket, {masks} AS masks)"
+            f"struct({t} AS tbl, ({bucket}) AS bucket, {masks} AS masks)"
         )
     bucket_expr = f"explode(array({', '.join(structs)}))"
     return with_dots.select("vec_id", F.expr(bucket_expr).alias("tb")).select(
-        "vec_id", "tb.table", "tb.bucket", "tb.masks"
+        "vec_id", "tb.tbl", "tb.bucket", "tb.masks"
     )
 
 
-def _probe_and_index_sides(idx: DataFrame, n_vec: int) -> tuple[DataFrame, DataFrame]:
-    """Split a checkpointed/persisted LSH index into the two candidate-
-    join inputs. PROBE side fans each home bucket out to itself plus
-    its directed flip neighbors (map-side xor explode over the ID-only
-    index — no vector data moves). INDEX side keeps only home buckets,
-    with the hot-bucket cap (HOT_BUCKET_CAP) applied as a window keyed
-    on the same (table, bucket) the join shuffles on, so the cap rides
-    the exchange the join needs anyway. Size-gated (CAP_MIN_N): small
-    corpora skip the window node — the oracle's CASE on COUNT(*) makes
-    the gate identical in both engines."""
-    a = idx.select(
-        "table",
-        F.explode(
-            F.expr("concat(array(bucket), transform(masks, m -> bucket ^ m))")
-        ).alias("bucket"),
-        F.col("vec_id").alias("lo"),
+def _lsh_rank():
+    """Hot-bucket rank rb: md5-ordered row number of a vector inside its
+    (tbl, bucket). The election is insertion-order-independent, so an
+    index appended to or rebuilt at the same geometry ranks identically;
+    the serve caps a bucket at rb <= HOT_BUCKET_CAP."""
+    w = Window.partitionBy("tbl", "bucket").orderBy(
+        F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
     )
-    if n_vec > CAP_MIN_N:
-        wb = Window.partitionBy("table", "bucket").orderBy(
-            F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
-        )
-        b = (
-            idx.withColumn("rb", F.row_number().over(wb))
-            .filter(F.col("rb") <= HOT_BUCKET_CAP)
-            .select("table", "bucket", F.col("vec_id").alias("hi"))
-        )
-    else:
-        b = idx.select("table", "bucket", F.col("vec_id").alias("hi"))
-    return a, b
+    return F.row_number().over(w)
+
+
+def _lsh_merge(hist: DataFrame, batch: DataFrame) -> DataFrame:
+    """Append the `batch` index rows to the ranked index `hist`: rb is
+    re-elected only inside the (tbl, bucket) cells the batch touches, and
+    untouched rows pass through unchanged — the append writes O(batch)
+    data, and the result equals a from-scratch build at the same geometry
+    (see _lsh_rank)."""
+    touched = batch.select("tbl", "bucket").distinct()
+    untouched = hist.join(touched, ["tbl", "bucket"], "left_anti")
+    merged = (
+        hist.join(touched, ["tbl", "bucket"], "left_semi")
+        .drop("rb")
+        .unionByName(batch)
+        .withColumn("rb", _lsh_rank())
+    )
+    return untouched.unionByName(merged)
 
 
 def _ann_lsh_impl(
@@ -531,32 +599,53 @@ def _ann_lsh_impl(
     # candidate generation is ID-ONLY: the vectors never enter the
     # bucket exchange (they'd be duplicated x n_tables there); the
     # re-rank re-attaches them to the much smaller deduped pair set.
-    # localCheckpoint materializes the tiny (vec_id, table, bucket)
+    # localCheckpoint materializes the tiny (vec_id, tbl, bucket)
     # frame ONCE — without it both sides of the bucket self-join
     # recompute the whole index (measured as a 2x on this stage).
-    bucketed = idx.localCheckpoint(eager=True)
-    a, b = _probe_and_index_sides(bucketed, n_vec)
-    return _ann_serve(spark, sf_dir, a, b, n_vec)
+    return _lsh_serve(spark, sf_dir, idx.localCheckpoint(eager=True), n_vec)
 
 
-def _ann_serve(
+def _lsh_serve(
     spark: SparkSession,
     sf_dir: str,
-    a: DataFrame,
-    b: DataFrame,
+    idx: DataFrame,
     n_vec: int,
     side: DataFrame | None = None,
     k: int = 10,
     dim: int | None = 64,
 ) -> DataFrame:
-    """Candidate join + exact re-rank tail shared by every LSH config
-    and the persisted-index variant: probe frame `a` (table, bucket,
-    lo) x index frame `b` (table, bucket, hi) -> canonical pair dedup
-    -> vector re-attach -> int64-exact cosine -> per-query top-k.
+    """Top-k from an LSH index `idx` (vec_id, tbl, bucket, masks[, rb]),
+    shared by every LSH leg and config: probe side x index side ->
+    canonical pair dedup -> vector re-attach -> int64-exact cosine ->
+    per-query top-k.
+
+    The PROBE side fans each home bucket out to itself plus its directed
+    flip neighbors (map-side xor explode over the ID-only index — no
+    vector data moves). The INDEX side keeps home buckets under the
+    hot-bucket cap: a stored index carries rb from its build, so the cap
+    is a pushed-down filter on the read; an in-query index ranks with a
+    window keyed on the same (tbl, bucket) the join shuffles on, so the
+    cap rides the exchange the join needs anyway. Size-gated
+    (CAP_MIN_N): small corpora skip the cap — the oracle's CASE on
+    COUNT(*) makes the gate identical in both engines.
+
     ``side`` overrides the vector-attach frame (vec_id, q, nrm) for
     non-fixture corpora (the `ann_topk` library surface); ``dim`` picks
     the codegen-unrolled dot when the dimension is statically known,
     else the dim-agnostic HOF dot."""
+    a = idx.select(
+        F.col("tbl").alias("table"),
+        F.explode(
+            F.expr("concat(array(bucket), transform(masks, m -> bucket ^ m))")
+        ).alias("bucket"),
+        F.col("vec_id").alias("lo"),
+    )
+    b = idx
+    if n_vec > CAP_MIN_N:
+        if "rb" not in idx.columns:
+            b = b.withColumn("rb", _lsh_rank())
+        b = b.filter(F.col("rb") <= HOT_BUCKET_CAP)
+    b = b.select(F.col("tbl").alias("table"), "bucket", F.col("vec_id").alias("hi"))
     # Candidate pairs are UNORDERED and cosine is symmetric, but
     # DIRECTED probing is not (x may probe toward y without y probing
     # toward x), so canonicalize each candidate to (min, max) instead
@@ -597,11 +686,8 @@ def _ann_serve(
     if n_vec <= 250_000:  # ~130 MB of 64-dim int64 vectors — broadcastable
         qa, qb = F.broadcast(qa), F.broadcast(qb)
     pairs = pairs.join(qa, "lo").join(qb, "hi")
-    dot = _dot_unrolled("qa", "q", dim) if dim else _dot("qa", "q")
-    cos = dot.cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
-    scored = pairs.withColumn("cosine", cos).select(
+    dot = functools.partial(_dot_unrolled, dim=dim) if dim else _dot
+    scored = pairs.withColumn("cosine", _cosine("qa", "na", dot=dot)).select(
         F.explode(
             F.array(
                 F.struct(
@@ -617,8 +703,7 @@ def _ann_serve(
             )
         ).alias("r")
     ).select("r.query_id", "r.neighbor_id", "r.cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+    return _topk(scored, k)
 
 
 def ann_topk(
@@ -656,9 +741,8 @@ def ann_topk(
     idx = _lsh_index_core(spark, quant, n_vec, n_tables, n_probes).localCheckpoint(
         eager=True
     )
-    a, b = _probe_and_index_sides(idx, n_vec)
     side = quant.withColumn("nrm", _dot("q", "q"))
-    return _ann_serve(spark, "", a, b, n_vec, side=side, k=k, dim=dim)
+    return _lsh_serve(spark, "", idx, n_vec, side=side, k=k, dim=dim)
 
 
 @q(
@@ -702,12 +786,7 @@ def _ann_persisted_index(spark: SparkSession, sf_dir: str):
 
     def _build() -> DataFrame:
         idx, _ = _lsh_index_frame(spark, sf_dir, N_TABLES, N_PROBES)
-        wb = Window.partitionBy("tbl", "bucket").orderBy(
-            F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
-        )
-        return idx.withColumnRenamed("table", "tbl").withColumn(
-            "rb", F.row_number().over(wb)
-        )
+        return idx.withColumn("rb", _lsh_rank())
 
     idx = Store("ann", sf_dir, "embeddings", f"v2:{N_TABLES}:{N_PROBES}").table(
         spark,
@@ -746,19 +825,7 @@ def _ann_persisted_index(spark: SparkSession, sf_dir: str):
     tags=("similarity", "ann", "scale", "warehouse"),
 )
 def ann_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    T, n_vec = _ann_persisted_index(spark, sf_dir)
-    a = T.select(
-        F.col("tbl").alias("table"),
-        F.explode(
-            F.expr("concat(array(bucket), transform(masks, m -> bucket ^ m))")
-        ).alias("bucket"),
-        F.col("vec_id").alias("lo"),
-    )
-    b = T
-    if n_vec > CAP_MIN_N:
-        b = b.filter(F.col("rb") <= HOT_BUCKET_CAP)
-    b = b.select(F.col("tbl").alias("table"), "bucket", F.col("vec_id").alias("hi"))
-    return _ann_serve(spark, sf_dir, a, b, n_vec)
+    return _lsh_serve(spark, sf_dir, *_ann_persisted_index(spark, sf_dir))
 
 
 APPEND_SPLIT = 300  # fixture history/batch boundary for the append demo
@@ -840,50 +907,25 @@ def ann_lsh_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout = dict(
         bucket_by=["tbl", "bucket"], n_buckets=32, sort_by=["tbl", "bucket", "rb"]
     )
-    wb = Window.partitionBy("tbl", "bucket").orderBy(
-        F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
-    )
 
     def _rows(vecs: DataFrame) -> DataFrame:
         # index rows at the PINNED geometry: n_hist, not n_vec
-        return _lsh_index_core(
-            spark, vecs, n_hist, N_TABLES, N_PROBES
-        ).withColumnRenamed("table", "tbl")
+        return _lsh_index_core(spark, vecs, n_hist, N_TABLES, N_PROBES)
 
     store.ensure(
         "annlshH",
-        lambda: _rows(quant.filter(F.col("vec_id") < B)).withColumn(
-            "rb", F.row_number().over(wb)
+        lambda: _rows(quant.filter(F.col("vec_id") < B)).withColumn("rb", _lsh_rank()),
+        **layout,
+    )
+    T = store.table(
+        spark,
+        "annlshA",
+        lambda: _lsh_merge(
+            store.read(spark, "annlshH"), _rows(quant.filter(F.col("vec_id") >= B))
         ),
         **layout,
     )
-
-    def _append() -> DataFrame:
-        hist = store.read(spark, "annlshH")
-        batch = _rows(quant.filter(F.col("vec_id") >= B))
-        touched = batch.select("tbl", "bucket").distinct()
-        untouched = hist.join(touched, ["tbl", "bucket"], "left_anti")
-        merged = (
-            hist.join(touched, ["tbl", "bucket"], "left_semi")
-            .drop("rb")
-            .unionByName(batch)
-            .withColumn("rb", F.row_number().over(wb))
-        )
-        return untouched.unionByName(merged)
-
-    T = store.table(spark, "annlshA", _append, **layout)
-    a = T.select(
-        F.col("tbl").alias("table"),
-        F.explode(
-            F.expr("concat(array(bucket), transform(masks, m -> bucket ^ m))")
-        ).alias("bucket"),
-        F.col("vec_id").alias("lo"),
-    )
-    b = T
-    if n_vec > CAP_MIN_N:
-        b = b.filter(F.col("rb") <= HOT_BUCKET_CAP)
-    b = b.select(F.col("tbl").alias("table"), "bucket", F.col("vec_id").alias("hi"))
-    return _ann_serve(spark, sf_dir, a, b, n_vec)
+    return _lsh_serve(spark, sf_dir, T, n_vec)
 
 
 @q(
@@ -945,17 +987,14 @@ def lsh_store_stream(
         "rb int, last_batch bigint, pg bigint"
     )
     _pg = F.pmod(F.col("bucket"), F.lit(NPG)).alias("pg")
-    wb = Window.partitionBy("tbl", "bucket").orderBy(
-        F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
-    )
 
     def _seed():
         os.makedirs(applied_dir)
         hist = _lsh_index_core(
             spark, quant.filter(F.col("vec_id") < B), n_hist, N_TABLES, N_PROBES
-        ).withColumnRenamed("table", "tbl")
+        )
         (
-            hist.withColumn("rb", F.row_number().over(wb))
+            hist.withColumn("rb", _lsh_rank())
             .withColumn("last_batch", F.lit(-1).cast("long"))
             .select("tbl", "bucket", "vec_id", "masks", "rb", "last_batch", _pg)
             .write.partitionBy("pg")
@@ -979,10 +1018,8 @@ def lsh_store_stream(
             return
         sp = batch_df.sparkSession
         bq = batch_df.select("vec_id", F.expr(QUANT_SPARK).alias("q"))
-        batch = (
-            _lsh_index_core(sp, bq, n_hist, N_TABLES, N_PROBES)
-            .withColumnRenamed("table", "tbl")
-            .localCheckpoint(eager=True)
+        batch = _lsh_index_core(sp, bq, n_hist, N_TABLES, N_PROBES).localCheckpoint(
+            eager=True
         )
         touched_pg = [
             r.pg for r in batch.select(_pg).distinct().collect()
@@ -1004,20 +1041,11 @@ def lsh_store_stream(
             }
             redo = [p for p in touched_pg if p not in done]
             if redo:
-                store = all_store.filter(F.col("pg").isin(redo))
-                batch_redo = batch.filter(_pg.isin(redo))
-                touched = batch_redo.select("tbl", "bucket").distinct()
-                untouched = store.join(
-                    touched, ["tbl", "bucket"], "left_anti"
-                ).drop("pg", "last_batch")
-                merged = (
-                    store.join(touched, ["tbl", "bucket"], "left_semi")
-                    .drop("rb", "pg", "last_batch")
-                    .unionByName(batch_redo)
-                    .withColumn("rb", F.row_number().over(wb))
-                )
                 out = (
-                    untouched.unionByName(merged)
+                    _lsh_merge(
+                        all_store.filter(F.col("pg").isin(redo)).drop("pg", "last_batch"),
+                        batch.filter(_pg.isin(redo)),
+                    )
                     .withColumn("last_batch", F.lit(batch_id).cast("long"))
                     .select(
                         "tbl", "bucket", "vec_id", "masks", "rb",
@@ -1039,18 +1067,7 @@ def lsh_store_stream(
     src.drain(spark, emb.schema, _sign_merge)
 
     T = spark.read.schema(store_schema).parquet(store_dir)
-    a = T.select(
-        F.col("tbl").alias("table"),
-        F.explode(
-            F.expr("concat(array(bucket), transform(masks, m -> bucket ^ m))")
-        ).alias("bucket"),
-        F.col("vec_id").alias("lo"),
-    )
-    b = T
-    if n_vec > CAP_MIN_N:
-        b = b.filter(F.col("rb") <= HOT_BUCKET_CAP)
-    b = b.select(F.col("tbl").alias("table"), "bucket", F.col("vec_id").alias("hi"))
-    return _ann_serve(spark, sf_dir, a, b, n_vec)
+    return _lsh_serve(spark, sf_dir, T, n_vec)
 
 
 @q(
@@ -1519,76 +1536,10 @@ def _ivf_oracle(pin_hist: int | None = None) -> str:
     tags=("similarity", "ann", "scale"),
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    n_probe = 4
-    e = _quantized(spark, sf_dir)
-    norms = e.withColumn("nrm", _dot("q", "q"))
-    # coarse-quantizer sizing: a FIXED stride means |centroids| = n/31,
-    # so the broadcast cell-assignment does O(n^2/31) distance evals —
-    # quadratic (same failure mode the scale probe caught in the LSH
-    # bucket space). stride ~ sqrt(n) keeps |centroids| ~ sqrt(n) and
-    # assignment O(n^1.5); the 500-vector fixture still gets stride 31
-    # (max clause), so recall gates and driver rows are unchanged.
+    norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
     # raw-table count: parquet footer statistics, not the quantize plan
-    n_vecs = _t(spark, sf_dir, "embeddings").count()
-    stride = max(31, round(math.sqrt(max(1, n_vecs))))
-    cents = norms.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("q").alias("cq")
-    )
-
-    # exact int64 squared L2 between q and cq
-    l2 = F.aggregate(
-        F.zip_with(F.col("q"), F.col("cq"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-    # spread before the sqrt(n)-centroid distance fan-out (single-split
-    # fixture scan; see _lsh_index_core's norms spread)
-    dists = (
-        norms.transform(spread)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d2", l2)
-    )
-
-    # cell assignment: argmin centroid per vector (min over (d2, cent_id)
-    # structs — deterministic tie-break). Runs map-side after AQE sees
-    # the broadcast; the groupBy shuffles (vec_id, 16-row groups).
-    assigned = (
-        dists.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cent_id")).alias("m"))
-        .select("vec_id", F.col("m.cent_id").alias("cell"))
-    )
-    cells = norms.join(assigned, "vec_id").select(
-        F.col("cell"), F.col("vec_id").alias("neighbor_id"), "q", "nrm"
-    )
-
-    # query probes: n_probe nearest cells per query vector
-    wq = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
-    probes = (
-        dists.filter(F.col("vec_id") < 5)
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("cell"),
-            F.col("q").alias("qa"),
-            F.col("nrm").alias("na"),
-        )
-    )
-
-    cand = (
-        probes.join(cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    cos = _dot("qa", "q").cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
-    scored = cand.withColumn("cosine", cos).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10).drop("rn")
+    cents = _stride_centroids(norms, _t(spark, sf_dir, "embeddings").count())
+    return _ivf_serve(spark, sf_dir, cents, _ivf_assign(norms, cents))
 
 
 def _ivf_l2():
@@ -1598,6 +1549,21 @@ def _ivf_l2():
         F.zip_with(F.col("q"), F.col("cq"), lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
+    )
+
+
+def _stride_centroids(norms: DataFrame, n_vec: int) -> DataFrame:
+    """IVF coarse quantizer (cent_id, cq): every stride-th vector of
+    `norms` by vec_id. A FIXED stride would mean |centroids| = n/31, so
+    the broadcast cell assignment does O(n^2/31) distance evals —
+    quadratic (the failure mode the scale probe caught in the LSH bucket
+    space). stride ~ sqrt(n) keeps |centroids| ~ sqrt(n) and assignment
+    O(n^1.5); the 500-vector fixture still gets stride 31 (max clause).
+    `n_vec` is the corpus the quantizer is sized for — the history size
+    for a pinned append index."""
+    stride = max(31, round(math.sqrt(max(1, n_vec))))
+    return norms.filter(F.col("vec_id") % stride == 0).select(
+        F.col("vec_id").alias("cent_id"), F.col("q").alias("cq")
     )
 
 
@@ -1623,14 +1589,61 @@ def _ivf_assign(norms: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
+def _nearest_cells(qs: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """The `n` nearest cells of each query row of `qs` (vec_id, q, nrm)
+    against the broadcast centroids — exact int64 L2, ties to the smaller
+    cent_id -> (query_id, cell, qa, na, cq)."""
+    dists = qs.crossJoin(F.broadcast(cents)).withColumn("d2", _ivf_l2())
+    wq = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
+    return (
+        dists.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= n)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("cent_id").alias("cell"),
+            F.col("q").alias("qa"),
+            F.col("nrm").alias("na"),
+            "cq",
+        )
+    )
+
+
+def _ivf_candidates(
+    qs: DataFrame, cents: DataFrame, cells: DataFrame, nprobe: int
+) -> DataFrame:
+    """Probe half of every IVF-family serve: the `nprobe` nearest cells
+    of each query in `qs` touch only the tiny centroid table, and the
+    cell lists `cells` (cell, neighbor_id, ...) are read with those cells
+    pushed down as an IN filter (one bounded collect of <= |qs| x nprobe
+    ids), so a stored bucketed index side is a pruned pure scan — the
+    100 TB serving shape, where queries read |touched cells|, never the
+    corpus. Returns the cell rows joined to their probing queries
+    (query_id, qa, na, cq), self-matches removed. The probe set is
+    checkpointed: the collect and the candidate join then share one
+    computation of it. At a scale where the cell list outgrows an IN
+    filter, drop the pushdown and let the bucket-colocated join on
+    `cell` prune alone."""
+    probes = _nearest_cells(qs, cents, nprobe).localCheckpoint(eager=True)
+    probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
+    return (
+        cells.filter(F.col("cell").isin(probe_cells))
+        .join(F.broadcast(probes), "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+
+
+# the persisted IVF cell-list tables: 32 buckets on the probe join key
+# = one per local[32] core; a cluster sizes this to executor slots (same
+# sizing lesson the sf1 probe taught the LSH index)
+_IVF_CELLS = dict(bucket_by=["cell"], n_buckets=32, sort_by=["cell", "neighbor_id"])
+
+
 def _ivf_persisted_index(spark: SparkSession, sf_dir: str, hist_limit: int | None = None):
     """Build-once IVF index in the warehouse: coarse quantizer
     (centroid table ``ivfC``, tiny) + cell lists (``ivfL``, bucketed on
     `cell`, the probe join key). Returns the ``Store``. With
     ``hist_limit`` the quantizer is derived from — and seeded by — the
     history corpus only (the pinned geometry the append path serves)."""
-    import math
-
     from magictables_spark.warehouse import Store
 
     scope = f"h{hist_limit}" if hist_limit is not None else "full"
@@ -1645,66 +1658,104 @@ def _ivf_persisted_index(spark: SparkSession, sf_dir: str, hist_limit: int | Non
     def _cents() -> DataFrame:
         n_vec = _t(spark, sf_dir, "embeddings").count()
         n_seed = n_vec if hist_limit is None else min(hist_limit, n_vec)
-        stride = max(31, round(math.sqrt(max(1, n_seed))))
-        return _seed().filter(F.col("vec_id") % stride == 0).select(
-            F.col("vec_id").alias("cent_id"), F.col("q").alias("cq")
-        )
+        return _stride_centroids(_seed(), n_seed)
 
     store.ensure("ivfC", _cents)
     store.ensure(
-        "ivfL",
-        lambda: _ivf_assign(_seed(), store.read(spark, "ivfC")),
-        # 32 buckets on the probe join key = one per local[32] core;
-        # a cluster sizes this to executor slots (same sizing lesson
-        # the sf1 probe taught the LSH index)
-        bucket_by=["cell"],
-        n_buckets=32,
-        sort_by=["cell", "neighbor_id"],
+        "ivfL", lambda: _ivf_assign(_seed(), store.read(spark, "ivfC")), **_IVF_CELLS
     )
     return store
 
 
 def _ivf_serve(spark: SparkSession, sf_dir: str, cents: DataFrame, cells: DataFrame) -> DataFrame:
-    """Serve top-10 for the 5 fixture probes from a persisted IVF index:
-    probe-cell selection touches only the tiny centroid table; the cell
-    lists are read with the probe cells pushed down as an IN filter
-    (bounded 5x4-value collect) so the index-side scan row-group-prunes
-    on the sort key instead of reading every cell — the 100 TB serving
-    shape, where queries read |touched cells|, never the corpus."""
+    """Top-10 for the 5 fixture probes from an IVF index — centroids
+    `cents` plus cell lists `cells` (cell, neighbor_id, q, nrm), stored
+    or built in the query: 4-cell probe, candidate dedup, exact cosine."""
     q5 = (
         _quantized(spark, sf_dir)
         .filter(F.col("vec_id") < 5)
         .withColumn("nrm", _dot("q", "q"))
     )
-    dists = q5.crossJoin(F.broadcast(cents)).withColumn("d2", _ivf_l2())
-    wq = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
-    probes = (
-        dists.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 4)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("cell"),
-            F.col("q").alias("qa"),
-            F.col("nrm").alias("na"),
+    cand = _ivf_candidates(q5, cents, cells, 4).dropDuplicates(["query_id", "neighbor_id"])
+    return _topk(cand.select("query_id", "neighbor_id", _cosine("qa", "na").alias("cosine")), 10)
+
+
+def _append_leg(
+    spark: SparkSession, sf_dir: str, store, hist: str, out: str, encode, **layout
+) -> DataFrame:
+    """Append leg of a stored IVF or PQ index: the history table `hist`
+    plus ``encode(spark, batch)`` of the vectors past APPEND_SPLIT,
+    written once as table `out` — a NEW VERSION of the store (atomic
+    pointer swap; readers never see a torn index). `encode` runs at the
+    index's pinned quantizer and is per-vector independent, so the
+    appended index equals a from-scratch build at that quantizer."""
+
+    def _append() -> DataFrame:
+        batch = _quantized(spark, sf_dir).filter(F.col("vec_id") >= APPEND_SPLIT)
+        return store.read(spark, hist).unionByName(encode(spark, batch))
+
+    return store.table(spark, out, _append, **layout)
+
+
+def _stream_leg(
+    spark: SparkSession,
+    sf_dir: str,
+    store,
+    hist: str,
+    name: str,
+    sub: str,
+    encode,
+    crash_after_write: frozenset[int],
+) -> DataFrame:
+    """Stream leg of a stored IVF or PQ index: a replay store seeded with
+    the history table `hist` (plain parquet, because it is
+    append-maintained between batches), then the vectors past
+    APPEND_SPLIT stream in as 3 deterministic shards and each micro-batch
+    writes ``encode(session, batch)`` of ONLY its own vectors to its own
+    subdir — a replayed batch rewrites its subdir instead of appending
+    twice. Returns the accumulated rows."""
+    import os
+
+    from magictables_spark.streaming.commit import (
+        ReplaySource,
+        batch_subdir,
+        subdir_store_paths,
+    )
+    from magictables_spark.warehouse import store_key
+
+    B = APPEND_SPLIT
+    emb = _t(spark, sf_dir, "embeddings")
+    src = ReplaySource(name, *store_key(sf_dir, "embeddings", f"v2:{name}:{B}"))
+    rows_dir = src.path(sub)
+
+    def _seed():
+        store.read(spark, hist).write.mode("overwrite").parquet(
+            os.path.join(rows_dir, "seed")
         )
-    )
-    # bounded collect: 5 queries x 4 probes = <= 20 cell ids
-    probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
-    cand = (
-        cells.filter(F.col("cell").isin(probe_cells))
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    cos = _dot("qa", "q").cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nrm").cast("double"))
-    )
-    scored = cand.withColumn("cosine", cos).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .drop("rn")
+        return [
+            emb.filter((F.col("vec_id") >= B) & (F.col("vec_id") % 3 == k))
+            for k in range(3)
+        ]
+
+    src.prepare(_seed)
+
+    def _encode_batch(batch_df: DataFrame, bid: int) -> None:
+        batch = batch_df.select("vec_id", F.expr(QUANT_SPARK).alias("q"))
+        encode(batch_df.sparkSession, batch).write.mode("overwrite").parquet(
+            batch_subdir(rows_dir, bid)
+        )
+        if bid in crash_after_write:
+            raise RuntimeError(f"injected crash after batch {bid} write")
+
+    src.drain(spark, emb.schema, _encode_batch)
+    return spark.read.parquet(*subdir_store_paths(rows_dir))
+
+
+def _ivf_encode(store):
+    """Per-batch encode of the IVF append/stream legs: assign the batch
+    against the pinned centroid table (re-read — tiny, broadcast)."""
+    return lambda sp, batch: _ivf_assign(
+        batch.withColumn("nrm", _dot("q", "q")), store.read(sp, "ivfC")
     )
 
 
@@ -1761,27 +1812,9 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "ann", "scale", "warehouse"),
 )
 def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    B = APPEND_SPLIT
-    store = _ivf_persisted_index(spark, sf_dir, hist_limit=B)
-    cents = store.read(spark, "ivfC")
-
-    def _append() -> DataFrame:
-        batch = (
-            _quantized(spark, sf_dir)
-            .filter(F.col("vec_id") >= B)
-            .withColumn("nrm", _dot("q", "q"))
-        )
-        return store.read(spark, "ivfL").unionByName(_ivf_assign(batch, cents))
-
-    appended = store.table(
-        spark,
-        "ivfA",
-        _append,
-        bucket_by=["cell"],
-        n_buckets=32,
-        sort_by=["cell", "neighbor_id"],
-    )
-    return _ivf_serve(spark, sf_dir, cents, appended)
+    store = _ivf_persisted_index(spark, sf_dir, hist_limit=APPEND_SPLIT)
+    cells = _append_leg(spark, sf_dir, store, "ivfL", "ivfA", _ivf_encode(store), **_IVF_CELLS)
+    return _ivf_serve(spark, sf_dir, store.read(spark, "ivfC"), cells)
 
 
 @q(
@@ -1814,53 +1847,11 @@ def ivf_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
-    from magictables_spark.streaming.commit import (
-        ReplaySource,
-        batch_subdir,
-        subdir_store_paths,
+    store = _ivf_persisted_index(spark, sf_dir, hist_limit=APPEND_SPLIT)
+    cells = _stream_leg(
+        spark, sf_dir, store, "ivfL", "ivfstream", "cells", _ivf_encode(store),
+        _crash_after_write,
     )
-    from magictables_spark.warehouse import store_key
-
-    B = APPEND_SPLIT
-    store = _ivf_persisted_index(spark, sf_dir, hist_limit=B)
-    emb = _t(spark, sf_dir, "embeddings")
-    src = ReplaySource(
-        "ivfstream", *store_key(sf_dir, "embeddings", f"v2:ivfstream:{B}")
-    )
-    cells_dir = src.path("cells")
-
-    def _seed():
-        # seed the cell store with the HISTORY index (same rows the
-        # persisted bucketed table holds; plain parquet here because the
-        # store is append-maintained between batches)
-        store.read(spark, "ivfL").write.mode("overwrite").parquet(
-            os.path.join(cells_dir, "seed")
-        )
-        return [
-            emb.filter((F.col("vec_id") >= B) & (F.col("vec_id") % 3 == k))
-            for k in range(3)
-        ]
-
-    src.prepare(_seed)
-
-    def _assign_append(batch_df: DataFrame, bid: int) -> None:
-        sp = batch_df.sparkSession
-        batch = batch_df.select(
-            "vec_id", F.expr(QUANT_SPARK).alias("q")
-        ).withColumn("nrm", _dot("q", "q"))
-        # pinned quantizer: re-read the tiny centroid table (broadcast);
-        # per-batch subdir overwrite = idempotent replay (a replayed
-        # batch rewrites its own subdir instead of appending twice)
-        _ivf_assign(batch, store.read(sp, "ivfC")).write.mode(
-            "overwrite"
-        ).parquet(batch_subdir(cells_dir, bid))
-        if bid in _crash_after_write:
-            raise RuntimeError(f"injected crash after batch {bid} write")
-
-    src.drain(spark, emb.schema, _assign_append)
-    cells = spark.read.parquet(*subdir_store_paths(cells_dir))
     return _ivf_serve(spark, sf_dir, store.read(spark, "ivfC"), cells)
 
 
@@ -1911,36 +1902,20 @@ def ivf_store_stream(
     tags=("similarity", "ann", "pipeline"),
 )
 def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    e = _t(spark, sf_dir, "embeddings").select(
+    norms = _t(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr(QUANT_SPARK).alias("q")
-    )
-    norms = e.withColumn("nrm", _dot("q", "q"))
+    ).withColumn("nrm", _dot("q", "q"))
     # probe set bounded ~sqrt(n) (bounded count job, FLOOR matches the
     # oracle's CTE): with the old fixed %20 stride the probe count grew
     # linearly, turning the broadcast probe-x-corpus join quadratic.
     # Raw-table count -> parquet footer statistics, not the dot pipeline
     stride = max(20, math.floor(math.sqrt(max(1, _t(spark, sf_dir, "embeddings").count()))))
-    probes = norms.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq"), F.col("nrm").alias("qnrm")
-    )
-    # spread before the ~sqrt(n)-probe broadcast fan-out (single-split
-    # fixture scan; see _lsh_index_core's norms spread) — the n x
-    # sqrt(n) unrolled dot products are the whole cost of this query
-    cand = norms.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("label"), "q", "nrm"
-    ).transform(spread)
-    scored = (
-        cand.join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot("qq", "q").cast("double")
-            / (F.sqrt(F.col("qnrm").cast("double")) * F.sqrt(F.col("nrm").cast("double"))),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    top5 = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return _label_vote(_exact_knn(norms, F.col("vec_id") % stride == 0, 5, carry=("label",)))
+
+
+def _label_vote(top5: DataFrame) -> DataFrame:
+    """Majority label of each query's neighbors (query_id, label), vote
+    ties to the smallest label."""
     votes = top5.groupBy("query_id", "label").agg(F.count("*").alias("n_votes"))
     wv = Window.partitionBy("query_id").orderBy(F.desc("n_votes"), F.asc("label"))
     return (
@@ -1966,14 +1941,7 @@ def _ivf_labeled_cells(spark: SparkSession, sf_dir: str):
         )
         return store.read(spark, "ivfL").join(labels, "neighbor_id")
 
-    labeled = store.table(
-        spark,
-        "ivfVL",
-        _labeled,
-        bucket_by=["cell"],
-        n_buckets=32,
-        sort_by=["cell", "neighbor_id"],
-    )
+    labeled = store.table(spark, "ivfVL", _labeled, **_IVF_CELLS)
     return store.read(spark, "ivfC"), labeled
 
 
@@ -2063,8 +2031,6 @@ def _ivf_labeled_cells(spark: SparkSession, sf_dir: str):
     tags=("similarity", "ann", "pipeline", "warehouse"),
 )
 def knn_label_vote_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     cents, cells = _ivf_labeled_cells(spark, sf_dir)
     n_vec = _t(spark, sf_dir, "embeddings").count()
     kstride = max(20, math.floor(math.sqrt(max(1, n_vec))))
@@ -2073,43 +2039,12 @@ def knn_label_vote_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") % kstride == 0)
         .withColumn("nrm", _dot("q", "q"))
     )
-    dists = qs.crossJoin(F.broadcast(cents)).withColumn("d2", _ivf_l2())
-    wq = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
-    probes = (
-        dists.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= KNN_IVF_NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("cell"),
-            F.col("q").alias("qa"),
-            F.col("nrm").alias("na"),
-        )
-    )
-    # bounded collect: <= nprobe*ceil(sqrt(n)) cell ids; at a scale where
-    # this list outgrows an IN filter, drop the pushdown and let the
-    # bucket-colocated join on `cell` do the pruning alone
-    probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
     # each neighbor lives in exactly ONE cell and a probe's nprobe cells are
     # distinct, so (query, neighbor) pairs are join-unique — no dedup
-    scored = (
-        cells.filter(F.col("cell").isin(probe_cells))
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            _dot("qa", "q").cast("double")
-            / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nrm").cast("double"))),
-        )
+    scored = _ivf_candidates(qs, cents, cells, KNN_IVF_NPROBE).select(
+        "query_id", "neighbor_id", "label", _cosine("qa", "na").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    top5 = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
-    votes = top5.groupBy("query_id", "label").agg(F.count("*").alias("n_votes"))
-    wv = Window.partitionBy("query_id").orderBy(F.desc("n_votes"), F.asc("label"))
-    return (
-        votes.withColumn("rv", F.row_number().over(wv))
-        .filter(F.col("rv") == 1)
-        .select("query_id", F.col("label").alias("predicted_label"), "n_votes")
-    )
+    return _label_vote(_topk(scored, 5))
 
 
 def _kmeans_oracle(k: int = 8, rounds: int = 5, dim: int = 64) -> str:
@@ -2518,27 +2453,11 @@ def ann_int8_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("i8score", _dot_unrolled("pi", "qi"))
     )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("i8score"), F.asc("neighbor_id"))
-    cand = (
-        coarse.withColumn("rc", F.row_number().over(wc))
-        .filter(F.col("rc") <= 30)
-        .select("query_id", "neighbor_id")
+    return _rescore(
+        _shortlist(coarse, "i8score", 30),
+        qv.select("vec_id", "q", F.col("nrm2").alias("nrm")),
+        dot=_dot_unrolled,
     )
-    full = qv.select("vec_id", "q", "nrm2")
-    a = full.select(F.col("vec_id").alias("query_id"), F.col("q").alias("qa"), F.col("nrm2").alias("na"))
-    b = full.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"), F.col("nrm2").alias("nb"))
-    rescored = (
-        cand.join(F.broadcast(a), "query_id")
-        .join(b, "neighbor_id")
-        .withColumn(
-            "cosine",
-            _dot_unrolled("qa", "qb").cast("double")
-            / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return rescored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10).drop("rn")
 
 
 # ---------------------------------------------------------------------------
@@ -2642,7 +2561,7 @@ def _pq_d2s_expr() -> str:
 
 
 def _pq_best_at(subs: DataFrame, cb_lit: str) -> DataFrame:
-    """(vec_id, m, d2, sid, cw): nearest codeword per subvector against
+    """(vec_id, m, x, d2, sid, cw): nearest codeword per subvector against
     a LITERAL codebook — exact int64 squared L2, ties to the lowest
     sid (array_position returns the FIRST minimal index, and the
     literal is ordered by sid). Map-only: no join, no aggregate."""
@@ -2653,6 +2572,7 @@ def _pq_best_at(subs: DataFrame, cb_lit: str) -> DataFrame:
         .select(
             "vec_id",
             "m",
+            "x",
             F.expr("d2s[sid - 1]").cast("bigint").alias("d2"),
             "sid",
             F.expr("cbm[sid - 1]").alias("cw"),
@@ -2729,19 +2649,9 @@ def _pq_codebook(
         cb_lit = _pq_cb_literal(
             [{"m": m, "sid": s, "cw": cw} for (m, s), cw in cbd.items()]
         )
-        assign = (
-            subs_t.withColumn("cbm", F.expr(f"element_at({cb_lit}, m + 1)"))
-            .withColumn("d2s", F.expr(_pq_d2s_expr()))
-            .select(
-                "m",
-                F.expr("CAST(array_position(d2s, array_min(d2s)) AS INT)").alias(
-                    "sid"
-                ),
-                "x",
-            )
-        )
         means = (
-            assign.groupBy("m", "sid")
+            _pq_best_at(subs_t, cb_lit)
+            .groupBy("m", "sid")
             .agg(
                 *[
                     F.floor(F.sum(F.col("x")[j]).cast("double") / F.count("*"))
@@ -2759,27 +2669,35 @@ def _pq_codebook(
     return cb_df()
 
 
-def _pq_encode_at(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """Quantize every subvector to its nearest codeword of a GIVEN
-    codebook -> (vec_id, codes, recon, recon_l2). Deterministic and
-    per-vector independent, so encode-then-append ≡ rebuild at the
-    same codebook (the append-path proof).
-
-    The codebook is M*K = 256 rows by CONSTRUCTION (trained in
-    _pq_codebook or read back from a persisted store), so it collects
-    to the driver — the same bounded roundtrip as kmeans' centroids —
-    and the nearest-codeword search runs as a map-side argmin
-    projection against the literal (see _pq_cb_literal: the previous
-    broadcast join + min(struct) planned as two SortAggregates over
-    the K-times row blowup plus an exchange, the dominant CPU of
-    every PQ encode)."""
+def _pq_literal(cb: DataFrame) -> str | None:
+    """A codebook frame (m, sid, cw) as one SQL literal (_pq_cb_literal),
+    None when it is empty (an empty training slice). The codebook is
+    M*K = 256 rows by CONSTRUCTION (trained in _pq_codebook or read back
+    from a persisted store), so it collects to the driver — the same
+    bounded roundtrip as kmeans' centroids. Collect once per query and
+    hand the literal to both the encode and the serve: each collect
+    plus literal build measured ~0.1 s of plan build."""
     rows = cb.collect()
-    if rows:
-        best = _pq_best_at(subs, _pq_cb_literal(rows))
+    return _pq_cb_literal(rows) if rows else None
+
+
+def _pq_encode_at(subs: DataFrame, cb_lit: str | None) -> DataFrame:
+    """Quantize every subvector to its nearest codeword of a GIVEN
+    codebook literal (_pq_literal) -> (vec_id, codes, recon, recon_l2).
+    Deterministic and per-vector independent, so encode-then-append ≡
+    rebuild at the same codebook (the append-path proof). The
+    nearest-codeword search runs as a map-side argmin projection
+    against the literal (see _pq_cb_literal: the previous broadcast
+    join + min(struct) planned as two SortAggregates over the K-times
+    row blowup plus an exchange, the dominant CPU of every PQ
+    encode)."""
+    if cb_lit is not None:
+        best = _pq_best_at(subs, cb_lit)
     else:  # empty training slice -> empty codebook -> empty encode
         best = subs.select(
             "vec_id",
             "m",
+            "x",
             F.lit(None).cast("bigint").alias("d2"),
             F.lit(None).cast("int").alias("sid"),
             F.expr("CAST(NULL AS ARRAY<BIGINT>)").alias("cw"),
@@ -2799,20 +2717,22 @@ def _pq_encode_at(subs: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_encoded(
-    spark: SparkSession, sf_dir: str, hist_limit: int | None = None
-) -> DataFrame:
+def _pq_codes(vecs: DataFrame, cb_lit: str | None) -> DataFrame:
+    """The stored PQ code table (vec_id, codes) of `vecs` at a codebook
+    literal: recon re-derives from codes ⊗ codebook at serve time."""
+    return _pq_encode_at(_pq_subs(vecs), cb_lit).select("vec_id", "codes")
+
+
+def _pq_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, codes, recon, recon_l2) for every embedding: train the
-    codebook (on the history slice only when hist_limit pins the
-    quantizer), then encode the FULL corpus at it. Plan: the codebook
+    codebook, then encode the corpus at it. Plan: the codebook
     loop joins n*M subvector rows against a BROADCAST 256-row codebook
     and aggregates with map-side combine; per Lloyd round that is one
     exchange of n*M skinny rows — the standard PQ training cost, run
     on a sample at 100 TB while the final encode fuses into the
     index-build scan."""
     e = _quantized(spark, sf_dir)
-    e_train = e if hist_limit is None else e.filter(F.col("vec_id") < hist_limit)
-    return _pq_encode_at(_pq_subs(e), _pq_codebook(spark, e_train))
+    return _pq_encode_at(_pq_subs(e), _pq_literal(_pq_codebook(spark, e)))
 
 
 def _pq_duck_ctes(hist: int | None = None) -> str:
@@ -3002,55 +2922,8 @@ def vector_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_pq_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _quantized(spark, sf_dir)
-    enc = _pq_encoded(spark, sf_dir)
-    # parquet-footer count: candidate width scales with the corpus so
-    # recall holds as n grows (see _PQ_CAND note)
-    n_vec = _t(spark, sf_dir, "embeddings").count()
-    cand_n = max(_PQ_CAND, n_vec // 10)
-    probes = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("p")
-    )
-    coarse = (
-        enc.select(F.col("vec_id").alias("neighbor_id"), "recon")
-        .join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc", _dot("p", "recon"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        coarse.withColumn("rc", F.row_number().over(wc))
-        .filter(F.col("rc") <= cand_n)
-        .select("query_id", "neighbor_id")
-    )
-    full = e.withColumn("nrm2", _dot("q", "q"))
-    a = full.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("nrm2").alias("na"),
-    )
-    b = full.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("qb"),
-        F.col("nrm2").alias("nb"),
-    )
-    rescored = (
-        cand.join(F.broadcast(a), "query_id")
-        .join(b, "neighbor_id")
-        .withColumn(
-            "cosine",
-            _dot("qa", "qb").cast("double")
-            / (
-                F.sqrt(F.col("na").cast("double"))
-                * F.sqrt(F.col("nb").cast("double"))
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .drop("rn")
-    )
+    cb_lit = _pq_literal(_pq_codebook(spark, e))
+    return _pq_serve(spark, sf_dir, cb_lit, _pq_codes(e, cb_lit))
 
 
 def _pq_persisted_index(
@@ -3078,100 +2951,56 @@ def _pq_persisted_index(
 
     store.ensure("pqC", lambda: _pq_codebook(spark, _indexed()))
     store.ensure(
-        "pqE",
-        lambda: _pq_encode_at(
-            _pq_subs(_indexed()), store.read(spark, "pqC")
-        ).select("vec_id", "codes"),
+        "pqE", lambda: _pq_codes(_indexed(), _pq_literal(store.read(spark, "pqC")))
     )
     return store
+
+
+def _pq_recon(cb_lit: str):
+    """Reconstruction codes ⊗ codebook as one projection over a `codes`
+    column, the codebook inlined as its literal (_pq_literal) — the
+    production serving shape (codebook in memory, codes streamed, zero
+    joins on the scan side). 0-based m, 1-based sid (codes store sid)."""
+    return F.expr(
+        f"flatten(transform(sequence(0, {_PQ_M - 1}), m -> {cb_lit}[m][codes[m] - 1]))"
+    )
 
 
 def _pq_serve(
     spark: SparkSession,
     sf_dir: str,
-    cb: DataFrame,
+    cb_lit: str | None,
     codes: DataFrame,
     probes: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC coarse -> exact rescore over a STORED code table: the 256-row
-    codebook collects to the driver and inlines as a literal nested
-    array, so reconstruction is a pure projection over the 8-byte codes
-    — the production serving shape (codebook in memory, codes streamed,
-    zero joins on the scan side). Finalists fetch their full-precision
-    vectors by key for the exact re-rank."""
-    rows = cb.collect()  # 256 rows — bounded driver roundtrip by design
-    if not rows:  # empty corpus -> empty codebook -> no servable index
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, cosine double"
-        )
-    by_m: dict[int, dict[int, list[int]]] = {}
-    for r in rows:
-        by_m.setdefault(r.m, {})[r.sid] = list(r.cw)
-    lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{v}L" for v in by_m[m][sid]) + ")"
-                for sid in range(1, _PQ_K + 1)
-            )
-            + ")"
-            for m in range(_PQ_M)
-        )
-        + ")"
-    )
+    """ADC coarse -> exact rescore over a PQ code table (vec_id, codes),
+    stored or built in the query: candidates score as <p, recon> against
+    the inlined codebook, the top max(100, n/10) per query fetch their
+    full-precision vectors by key for the exact re-rank. ``probes``
+    (vec_id, q) defaults to the 5 fixture probes. An empty codebook
+    (empty corpus) has no servable index."""
+    if cb_lit is None:
+        return spark.createDataFrame([], _NO_NEIGHBORS)
     e = _quantized(spark, sf_dir)
     n_vec = _t(spark, sf_dir, "embeddings").count()
-    cand_n = max(_PQ_CAND, n_vec // 10)
-    # recon = codes ⊗ codebook, 0-based m / 1-based sid (codes store sid)
-    recon = F.expr(
-        f"flatten(transform(sequence(0, {_PQ_M - 1}),"
-        f" m -> {lit}[m][codes[m] - 1]))"
-    )
     if probes is None:
         probes = e.filter(F.col("vec_id") < 5)
     probes = probes.select(F.col("vec_id").alias("query_id"), F.col("q").alias("p"))
     coarse = (
-        codes.select(F.col("vec_id").alias("neighbor_id"), recon.alias("recon"))
+        codes.select(F.col("vec_id").alias("neighbor_id"), _pq_recon(cb_lit).alias("recon"))
         .join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc", _dot("p", "recon"))
     )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        coarse.withColumn("rc", F.row_number().over(wc))
-        .filter(F.col("rc") <= cand_n)
-        .select("query_id", "neighbor_id")
+    return _rescore(
+        _shortlist(coarse, "adc", max(_PQ_CAND, n_vec // 10)),
+        e.withColumn("nrm", _dot("q", "q")),
     )
-    full = e.withColumn("nrm2", _dot("q", "q"))
-    a = full.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("nrm2").alias("na"),
-    )
-    b = full.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("qb"),
-        F.col("nrm2").alias("nb"),
-    )
-    rescored = (
-        cand.join(F.broadcast(a), "query_id")
-        .join(b, "neighbor_id")
-        .withColumn(
-            "cosine",
-            _dot("qa", "qb").cast("double")
-            / (
-                F.sqrt(F.col("na").cast("double"))
-                * F.sqrt(F.col("nb").cast("double"))
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .drop("rn")
-    )
+
+
+def _pq_encode(store):
+    """Per-batch encode of the PQ append/stream legs: quantize the batch
+    at the pinned codebook (re-read — 256 rows)."""
+    return lambda sp, batch: _pq_codes(batch, _pq_literal(store.read(sp, "pqC")))
 
 
 @q(
@@ -3200,7 +3029,8 @@ def _pq_serve(
 )
 def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _pq_persisted_index(spark, sf_dir)
-    return _pq_serve(spark, sf_dir, store.read(spark, "pqC"), store.read(spark, "pqE"))
+    cb_lit = _pq_literal(store.read(spark, "pqC"))
+    return _pq_serve(spark, sf_dir, cb_lit, store.read(spark, "pqE"))
 
 
 @q(
@@ -3231,17 +3061,9 @@ def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "ann", "scale", "warehouse"),
 )
 def ann_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    B = APPEND_SPLIT
-    store = _pq_persisted_index(spark, sf_dir, hist_limit=B)
-    cb = store.read(spark, "pqC")
-
-    def _append() -> DataFrame:
-        batch = _quantized(spark, sf_dir).filter(F.col("vec_id") >= B)
-        return store.read(spark, "pqE").unionByName(
-            _pq_encode_at(_pq_subs(batch), cb).select("vec_id", "codes")
-        )
-
-    return _pq_serve(spark, sf_dir, cb, store.table(spark, "pqA", _append))
+    store = _pq_persisted_index(spark, sf_dir, hist_limit=APPEND_SPLIT)
+    codes = _append_leg(spark, sf_dir, store, "pqE", "pqA", _pq_encode(store))
+    return _pq_serve(spark, sf_dir, _pq_literal(store.read(spark, "pqC")), codes)
 
 
 @q(
@@ -3276,54 +3098,12 @@ def pq_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
-    from magictables_spark.streaming.commit import (
-        ReplaySource,
-        batch_subdir,
-        subdir_store_paths,
+    store = _pq_persisted_index(spark, sf_dir, hist_limit=APPEND_SPLIT)
+    codes = _stream_leg(
+        spark, sf_dir, store, "pqE", "pqstream", "codes", _pq_encode(store),
+        _crash_after_write,
     )
-    from magictables_spark.warehouse import store_key
-
-    B = APPEND_SPLIT
-    store = _pq_persisted_index(spark, sf_dir, hist_limit=B)
-    emb = _t(spark, sf_dir, "embeddings")
-    src = ReplaySource("pqstream", *store_key(sf_dir, "embeddings", f"v2:pqstream:{B}"))
-    codes_dir = src.path("codes")
-
-    def _seed():
-        # seed the code store with the HISTORY encode (same rows the
-        # persisted table holds; plain parquet because the store is
-        # append-maintained between batches)
-        store.read(spark, "pqE").write.mode("overwrite").parquet(
-            os.path.join(codes_dir, "seed")
-        )
-        return [
-            emb.filter((F.col("vec_id") >= B) & (F.col("vec_id") % 3 == k))
-            for k in range(3)
-        ]
-
-    src.prepare(_seed)
-
-    def _encode_append(batch_df: DataFrame, bid: int) -> None:
-        sp = batch_df.sparkSession
-        batch = batch_df.select("vec_id", F.expr(QUANT_SPARK).alias("q"))
-        # pinned codebook: re-read the tiny table (broadcast in encode);
-        # per-batch subdir overwrite = idempotent replay
-        (
-            _pq_encode_at(_pq_subs(batch), store.read(sp, "pqC"))
-            .select("vec_id", "codes")
-            .write.mode("overwrite")
-            .parquet(batch_subdir(codes_dir, bid))
-        )
-        if bid in _crash_after_write:
-            raise RuntimeError(f"injected crash after batch {bid} write")
-
-    src.drain(spark, emb.schema, _encode_append)
-    return _pq_serve(
-        spark, sf_dir, store.read(spark, "pqC"),
-        spark.read.parquet(*subdir_store_paths(codes_dir)),
-    )
+    return _pq_serve(spark, sf_dir, _pq_literal(store.read(spark, "pqC")), codes)
 
 
 @q(
@@ -3384,7 +3164,7 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pq_serve(
                 sp,
                 sf_dir,
-                store.read(sp, "pqC"),
+                _pq_literal(store.read(sp, "pqC")),
                 store.read(sp, "pqE"),
                 probes=probes,
             )
@@ -3560,93 +3340,76 @@ def _ivfpq_oracle() -> str:
     tags=("similarity", "ann", "scale"),
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    e = _quantized(spark, sf_dir)
-    norms = e.withColumn("nrm", _dot("q", "q"))
+    norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
     n_vec = _t(spark, sf_dir, "embeddings").count()
-    stride = max(31, round(math.sqrt(max(1, n_vec))))
-    cents = norms.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("q").alias("cq")
-    )
-    cells = _ivf_assign(norms, cents)  # (cell, neighbor_id, q, nrm)
-    resid = (
+    cents = _stride_centroids(norms, n_vec)
+    resid = _residuals(_ivf_assign(norms, cents), cents)
+    vw = _ivfpq_width(spark, n_vec)
+    cb_lit = _pq_literal(_pq_codebook(spark, resid.select("vec_id", "q"), width=vw))
+    return _ivfpq_serve(spark, sf_dir, cents, cb_lit, _ivfpq_codes(resid, cb_lit, vw), n_vec)
+
+
+def _residuals(cells: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cell, q - cq): each vector's residual against its
+    assigned centroid — integer-exact, so the composition stays
+    hash-oracle-able. Checkpointed: it feeds codebook training AND the
+    encode."""
+    return (
         cells.join(F.broadcast(cents), cells["cell"] == cents["cent_id"])
         .select(
             F.col("neighbor_id").alias("vec_id"),
             "cell",
             F.expr("zip_with(q, cq, (a, b) -> a - b)").alias("q"),
         )
-        .localCheckpoint(eager=True)  # feeds training AND encode
+        .localCheckpoint(eager=True)
     )
-    # resid's pre-checkpoint plan is a join: its Catalyst size estimate
-    # is multiplicative, so derive the spread width from the known row
-    # count instead (vec_id + 64 int64 lanes ~ 640 B/row with overhead)
-    vw = spread_n_bytes(spark, n_vec * 640)
-    cb = _pq_codebook(spark, resid.select("vec_id", "q"), width=vw)
-    enc = _pq_encode_at(_pq_subs(resid.select("vec_id", "q"), vw), cb)
-    idx = (
-        enc.join(resid.select("vec_id", "cell"), "vec_id")
-        .join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            F.expr("zip_with(cq, recon, (a, b) -> a + b)").alias("rv"),
-        )
-    )
-    probes = norms.filter(F.col("vec_id") < 5)
-    pd = probes.crossJoin(F.broadcast(cents)).withColumn("d2", _ivf_l2())
-    wp = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
-    pcell = (
-        pd.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= 4)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("q").alias("p"),
-            F.col("cent_id").alias("cell"),
-        )
-    )
-    cand_n = max(_PQ_CAND, n_vec // 10)
-    coarse = (
-        pcell.join(idx, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", _dot("p", "rv"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        coarse.withColumn("rc", F.row_number().over(wc))
-        .filter(F.col("rc") <= cand_n)
-        .select("query_id", "neighbor_id")
-    )
-    a = norms.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("nrm").alias("na"),
-    )
-    b = norms.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("qb"),
-        F.col("nrm").alias("nb"),
-    )
-    rescored = (
-        cand.join(F.broadcast(a), "query_id")
-        .join(b, "neighbor_id")
-        .withColumn(
-            "cosine",
-            _dot("qa", "qb").cast("double")
-            / (
-                F.sqrt(F.col("na").cast("double"))
-                * F.sqrt(F.col("nb").cast("double"))
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+
+
+def _ivfpq_width(spark: SparkSession, n_vec: int) -> int:
+    """Spread width for the residual frame: its pre-checkpoint plan is a
+    join, so its Catalyst size estimate is multiplicative — derive the
+    width from the known row count instead (vec_id + 64 int64 lanes
+    ~ 640 B/row with overhead)."""
+    return spread_n_bytes(spark, n_vec * 640)
+
+
+def _ivfpq_codes(resid: DataFrame, cb_lit: str | None, width: int) -> DataFrame:
+    """(cell, vec_id, codes): the residuals PQ-encoded at a codebook
+    literal, keyed by their cell."""
     return (
-        rescored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .drop("rn")
+        _pq_encode_at(_pq_subs(resid.select("vec_id", "q"), width), cb_lit)
+        .join(resid.select("vec_id", "cell"), "vec_id")
+        .select("cell", "vec_id", "codes")
     )
+
+
+def _ivfpq_serve(
+    spark: SparkSession,
+    sf_dir: str,
+    cents: DataFrame,
+    cb_lit: str | None,
+    codes: DataFrame,
+    n_vec: int,
+) -> DataFrame:
+    """IVFPQ serve over centroids `cents`, residual codebook `cb` and the
+    (cell, vec_id, codes) table, stored or built in the query: each probe
+    reads ONLY its 4 nearest cells (the IVF pruning, pushed into the
+    scan), reconstructs candidates as centroid + codes ⊗ codebook (a pure
+    projection, 8 bytes per candidate — the PQ compression), ADC-ranks
+    them and exact-rescores the top max(100, n/10) into the top-10.
+    The ADC <p, cq + r> is summed as <p, cq> + <p, r>: exact int64, so
+    the same score, and the centroid rides the probe row instead of a
+    join onto the code scan."""
+    if cb_lit is None:
+        return spark.createDataFrame([], _NO_NEIGHBORS)
+    cells = codes.select(
+        F.col("vec_id").alias("neighbor_id"), "cell", _pq_recon(cb_lit).alias("r")
+    )
+    norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
+    coarse = _ivf_candidates(norms.filter(F.col("vec_id") < 5), cents, cells, 4).withColumn(
+        "adc", _dot("qa", "cq") + _dot("qa", "r")
+    )
+    return _rescore(_shortlist(coarse, "adc", max(_PQ_CAND, n_vec // 10)), norms)
 
 
 def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
@@ -3657,10 +3420,6 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
     pruning) and each candidate costs 8 logical bytes (the PQ
     compression). Returns (store, n_vec); the tables are ``ivfpqC``,
     ``ivfpqB`` and ``ivfpqE``."""
-
-    import functools
-    import math
-
     from magictables_spark.warehouse import Store
 
     n_vec = _t(spark, sf_dir, "embeddings").count()
@@ -3669,30 +3428,15 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
     def _norms() -> DataFrame:
         return _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
 
-    stride = max(31, round(math.sqrt(max(1, n_vec))))
-    store.ensure(
-        "ivfpqC",
-        lambda: _norms().filter(F.col("vec_id") % stride == 0).select(
-            F.col("vec_id").alias("cent_id"), F.col("q").alias("cq")
-        ),
-    )
-    vw = spread_n_bytes(spark, n_vec * 640)  # join-inflated stats
+    store.ensure("ivfpqC", lambda: _stride_centroids(_norms(), n_vec))
+    vw = _ivfpq_width(spark, n_vec)
 
     @functools.cache
     def _resid() -> DataFrame:
         # residuals against the stored centroids, shared by the codebook
         # and code builds
         cents = store.read(spark, "ivfpqC")
-        cells = _ivf_assign(_norms(), cents)
-        return (
-            cells.join(F.broadcast(cents), cells["cell"] == cents["cent_id"])
-            .select(
-                F.col("neighbor_id").alias("vec_id"),
-                "cell",
-                F.expr("zip_with(q, cq, (a, b) -> a - b)").alias("q"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        return _residuals(_ivf_assign(_norms(), cents), cents)
 
     store.ensure(
         "ivfpqB",
@@ -3700,11 +3444,7 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
     )
     store.ensure(
         "ivfpqE",
-        lambda: _pq_encode_at(
-            _pq_subs(_resid().select("vec_id", "q"), vw), store.read(spark, "ivfpqB")
-        )
-        .join(_resid().select("vec_id", "cell"), "vec_id")
-        .select("cell", "vec_id", "codes"),
+        lambda: _ivfpq_codes(_resid(), _pq_literal(store.read(spark, "ivfpqB")), vw),
         # probe-key bucketing: a query's IN(cell,...) filter prunes
         # to SelectedBucketsCount k out of 32 (the IVF-persisted
         # serving lesson), and each surviving row is 8 bytes of code
@@ -3740,103 +3480,13 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
 )
 def ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, n_vec = _ivfpq_persisted_index(spark, sf_dir)
-    cents = store.read(spark, "ivfpqC")
-    cb = store.read(spark, "ivfpqB")
-    codes = store.read(spark, "ivfpqE")
-
-    rows = cb.collect()  # 256 rows — bounded driver roundtrip by design
-    if not rows:
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, cosine double"
-        )
-    by_m: dict[int, dict[int, list[int]]] = {}
-    for r in rows:
-        by_m.setdefault(r.m, {})[r.sid] = list(r.cw)
-    lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{v}L" for v in by_m[m][sid]) + ")"
-                for sid in range(1, _PQ_K + 1)
-            )
-            + ")"
-            for m in range(_PQ_M)
-        )
-        + ")"
-    )
-    e = _quantized(spark, sf_dir)
-    probes = e.filter(F.col("vec_id") < 5).withColumn("nrm", _dot("q", "q"))
-    pd = probes.crossJoin(F.broadcast(cents)).withColumn("d2", _ivf_l2())
-    wp = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
-    pcell = (
-        pd.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= 4)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("q").alias("p"),
-            F.col("cent_id").alias("cell"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # bounded driver roundtrip (<= 5 probes x 4 cells): the probed-cell
-    # list re-enters as an IN filter the bucketed store read prunes on
-    probe_cells = [r.cell for r in pcell.select("cell").distinct().collect()]
-    recon_r = F.expr(
-        f"flatten(transform(sequence(0, {_PQ_M - 1}),"
-        f" m -> {lit}[m][codes[m] - 1]))"
-    )
-    idx = (
-        codes.filter(F.col("cell").isin(probe_cells))
-        .withColumn("recon_r", recon_r)
-        .join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            F.expr("zip_with(cq, recon_r, (a, b) -> a + b)").alias("rv"),
-        )
-    )
-    cand_n = max(_PQ_CAND, n_vec // 10)
-    coarse = (
-        pcell.join(idx, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", _dot("p", "rv"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        coarse.withColumn("rc", F.row_number().over(wc))
-        .filter(F.col("rc") <= cand_n)
-        .select("query_id", "neighbor_id")
-    )
-    full = e.withColumn("nrm2", _dot("q", "q"))
-    a = full.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qa"),
-        F.col("nrm2").alias("na"),
-    )
-    b = full.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("qb"),
-        F.col("nrm2").alias("nb"),
-    )
-    rescored = (
-        cand.join(F.broadcast(a), "query_id")
-        .join(b, "neighbor_id")
-        .withColumn(
-            "cosine",
-            _dot("qa", "qb").cast("double")
-            / (
-                F.sqrt(F.col("na").cast("double"))
-                * F.sqrt(F.col("nb").cast("double"))
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .drop("rn")
+    return _ivfpq_serve(
+        spark,
+        sf_dir,
+        store.read(spark, "ivfpqC"),
+        _pq_literal(store.read(spark, "ivfpqB")),
+        store.read(spark, "ivfpqE"),
+        n_vec,
     )
 
 
@@ -3915,8 +3565,6 @@ SEMDEDUP_TAU = 0.35  # same threshold as embed_neardup so the containment
     tags=("similarity", "dedup", "scale"),
 )
 def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     e = _quantized(spark, sf_dir)
     # parquet-footer count, like ann_lsh's bit sizing — metadata-speed
     n_vec = _t(spark, sf_dir, "embeddings").count()
@@ -4896,31 +4544,8 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("query_id") < _RECALL_PROBES
     ).select("query_id", "neighbor_id")
     norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
-    probes = norms.filter(F.col("vec_id") < _RECALL_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("nrm").alias("qnrm"),
-    )
-    # spread before the probe broadcast fan-out (single-split fixture
-    # scan; see _lsh_index_core's norms spread) — the exact-side n x
-    # probes dot products dominate this query's CPU
-    cand = spread(norms.select(F.col("vec_id").alias("neighbor_id"), "q", "nrm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    exact = (
-        cand.join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot("qq", "q").cast("double")
-            / (
-                F.sqrt(F.col("qnrm").cast("double"))
-                * F.sqrt(F.col("nrm").cast("double"))
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id")
+    exact = _exact_knn(norms, F.col("vec_id") < _RECALL_PROBES).select(
+        "query_id", "neighbor_id"
     )
     hit = approx.withColumn("_hit", F.lit(1))
     return (

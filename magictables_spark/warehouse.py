@@ -35,7 +35,8 @@ Persisted stores (ANN indexes, incremental-store history, the streaming
 maintainers' replay roots) share one identity and one build-once rule:
 
 - IDENTITY, ``store_key`` + ``store_tag``: ``md5(":".join(parts,
-  realpath(sf_dir), corpus_fingerprint(<sf_dir>/<table>.parquet)))[:12]``.
+  local_path(sf_dir), corpus_fingerprint(<sf_dir>/<table>.parquet)))[:12]``
+  (``local_path`` = realpath of a plain path or ``file:`` URI).
   ``parts`` are the store's version string and geometry. The row count
   is NOT part of the key: the content fingerprint already moves
   whenever the corpus does, and counting would cost a Spark job on
@@ -119,16 +120,37 @@ def _secure_store_base() -> str:
     return base
 
 
+def local_path(path: str) -> str:
+    """Real local path of a corpus path: a plain path or a ``file:`` URI.
+    Any other scheme raises ``ValueError`` naming the path — its files
+    cannot be stat'ed here, so it has no fingerprint."""
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(path)
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        path = unquote(u.path)
+    elif u.scheme:
+        raise ValueError(
+            f"cannot fingerprint corpus {path!r}: only local paths and "
+            "file: URIs are supported"
+        )
+    return os.path.realpath(path)
+
+
 def corpus_fingerprint(*paths: str) -> str:
     """Cheap content fingerprint of one or more parquet files/dirs:
     md5 over the sorted (relative path, size, mtime_ns) of every
     ``*.parquet`` file found. Pure driver-side ``os.stat`` — no data
     read — but any regeneration of the corpus (even same-size, same
     path) moves the mtime and so the fingerprint, and with it every
-    store key built on it (``store_key``)."""
+    store key built on it (``store_key``). A path that is not local
+    (see ``local_path``) or does not exist raises ``ValueError``: a
+    constant fingerprint would pin every store built on it forever."""
     items: list[tuple[str, int, int]] = []
-    for p in paths:
-        p = os.path.realpath(p)
+    for path in paths:
+        p = local_path(path)
+        if not os.path.exists(p):
+            raise ValueError(f"cannot fingerprint corpus {path!r}: no such path")
         if os.path.isfile(p):
             st = os.stat(p)
             items.append((os.path.basename(p), st.st_size, st.st_mtime_ns))
@@ -150,7 +172,7 @@ def store_key(sf_dir: str, table: str, *parts) -> tuple:
     (module doc); ``store_tag`` names it."""
     return (
         *parts,
-        os.path.realpath(sf_dir),
+        local_path(sf_dir),
         corpus_fingerprint(os.path.join(sf_dir, f"{table}.parquet")),
     )
 

@@ -13,7 +13,8 @@ def test_delegation_rewraps_and_preserves_provenance(spark):
     mf = MagicFrame(spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string"), sources=["s1"])
     out = mf.filter("id > 1").select("id")
     assert isinstance(out, MagicFrame)
-    assert out.sources == ["s1"]
+    # provenance carried, plus one step id per derived op (its own identity)
+    assert out.sources[0] == "s1" and len(out.sources) == 3
     assert out.df.collect()[0]["id"] == 2
     # non-DataFrame results pass through unwrapped
     assert out.count() == 1
@@ -70,7 +71,8 @@ def test_frame_sql_direct(spark):
     mf = MagicFrame(spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], ["id", "k"]))
     out = mf.sql("SELECT k, COUNT(*) AS n FROM df GROUP BY k ORDER BY k")
     assert [(r.k, r.n) for r in out.df.collect()] == [("a", 2), ("b", 1)]
-    assert out.sources == mf.sources  # provenance carried
+    # provenance carried, plus the sql step's own id
+    assert out.sources[:-1] == mf.sources and len(out.sources) == len(mf.sources) + 1
 
 
 def test_frame_pandas_on_spark(spark):

@@ -248,8 +248,8 @@ def test_knn_indexed_vote_recall_and_agreement(spark, sf_dir):
     # top5 already did, so rebuild just that stage via the same helpers
     from magictables_spark.plans.similarity import (
         KNN_IVF_NPROBE,
-        _ivf_l2,
         _ivf_labeled_cells,
+        _nearest_cells,
         _quantized,
     )
 
@@ -259,18 +259,7 @@ def test_knn_indexed_vote_recall_and_agreement(spark, sf_dir):
         .filter(F.col("vec_id") % stride == 0)
         .withColumn("nrm", _dot("q", "q"))
     )
-    dists = qs.crossJoin(F.broadcast(cents)).withColumn("d2", _ivf_l2())
-    wq = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
-    pr = (
-        dists.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= KNN_IVF_NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("cell"),
-            F.col("q").alias("qa"),
-            F.col("nrm").alias("na"),
-        )
-    )
+    pr = _nearest_cells(qs, cents, KNN_IVF_NPROBE)
     pc = [r["cell"] for r in pr.select("cell").distinct().collect()]
     idx5: dict[int, set[int]] = {}
     for r in (

@@ -145,6 +145,28 @@ def test_corpus_fingerprint_moves_on_regeneration(tmp_path):
     assert corpus_fingerprint(str(d)) != fpd
 
 
+def test_corpus_fingerprint_resolves_file_uris_and_fails_loudly(tmp_path):
+    """A file: URI fingerprints its local file (two corpora differ, each
+    equal to its plain path's); a non-local scheme or a missing path
+    raises instead of hashing to one constant."""
+    import pytest
+
+    from .conftest import SF_SMALL
+
+    fps = []
+    for sf in ("sf0.01", "sf0.001"):
+        plain = os.path.join(os.path.dirname(SF_SMALL), sf, "orders.parquet")
+        fp = corpus_fingerprint(plain)
+        assert corpus_fingerprint("file://" + plain) == fp
+        fps.append(fp)
+    assert fps[0] != fps[1]
+    with pytest.raises(ValueError, match="s3a://bucket/sf0.01/orders.parquet"):
+        corpus_fingerprint("s3a://bucket/sf0.01/orders.parquet")
+    missing = str(tmp_path / "missing.parquet")
+    with pytest.raises(ValueError, match="missing.parquet"):
+        corpus_fingerprint(missing)
+
+
 def test_store_root_env_override_and_per_user(monkeypatch, tmp_path):
     monkeypatch.setenv("MTS_WAREHOUSE_DIR", str(tmp_path / "custom"))
     assert store_root("ann") == str(tmp_path / "custom" / "ann")

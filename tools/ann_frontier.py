@@ -31,13 +31,13 @@ def main() -> int:
         if a.startswith("--sf="):
             sf_dir = a.split("=", 1)[1]
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from magictables_spark.plans.similarity import (
         _RECALL_PROBES,
         _ann_lsh_impl,
         _dot,
+        _exact_knn,
         _quantized,
     )
     from magictables_spark.session import get_spark
@@ -46,25 +46,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
-    probes = norms.filter(F.col("vec_id") < _RECALL_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("nrm").alias("qnrm"),
-    )
-    cand = norms.select(F.col("vec_id").alias("neighbor_id"), "q", "nrm")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     exact = (
-        cand.join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot("qq", "q").cast("double")
-            / (
-                F.sqrt(F.col("qnrm").cast("double"))
-                * F.sqrt(F.col("nrm").cast("double"))
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
+        _exact_knn(norms, F.col("vec_id") < _RECALL_PROBES)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )

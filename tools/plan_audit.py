@@ -35,27 +35,6 @@ SPE = "SINGLE_PARTITION_EXCHANGE"
 # pattern is safe (what bounds the broadcast side / the exchanged rows).
 WAIVERS: dict[str, dict[str, str]] = {
     "ann_ivf_topk": {NLJ: "broadcast side is the ~sqrt(n) centroid table"},
-    "ann_ivfpq_persisted": {
-        NLJ: "broadcast sides are the persisted ~sqrt(n) centroid "
-        "table (probe-cell cross) and the 5-row probe set; the "
-        "candidate join is cell-keyed equi over the IN-pruned store"
-    },
-    "ann_ivfpq_topk": {
-        NLJ: "broadcast sides are the ~sqrt(n) centroid table "
-        "(assignment + probe-cell cross) and the 5-row probe set; the "
-        "candidate join is cell-keyed equi"
-    },
-    "ann_ivf_persisted": {
-        NLJ: "broadcast side is the ~sqrt(n) persisted centroid table (5-probe cross)"
-    },
-    "ivf_store_stream": {
-        NLJ: "broadcast side is the pinned ~sqrt(history) centroid "
-        "table (probe-to-cell assignment at serve time; the appends "
-        "happened inside foreachBatch)"
-    },
-    "ann_ivf_index_append": {
-        NLJ: "broadcast side is the pinned ~sqrt(n_hist) centroid table (5-probe cross)"
-    },
     "vocab_growth_curve": {SPE: "cumulative sum over the 10-row decile spine; the data-sized aggs are distributed upstream"},
     "token_id_encode": {
         SPE: "dense-id rank over the VOCAB-sized token-count dim "
@@ -99,11 +78,6 @@ WAIVERS: dict[str, dict[str, str]] = {
         NLJ: "cross-join of three 1-row scalar stage counts; the interval joins hash on user_id"
     },
     "knn_label_vote": {NLJ: "broadcast side is the ~sqrt(n) probe set"},
-    "knn_label_vote_indexed": {
-        NLJ: "broadcast side is the persisted ~sqrt(n) centroid table "
-        "(probe-to-cell assignment only; candidates come from the "
-        "IN-pruned bucketed index read)"
-    },
     "sim_cosine_topk": {NLJ: "broadcast side is the 5-row query-probe set"},
     "naive_bayes_classify": {
         NLJ: "broadcast side is the 1-row class-prior aggregate "
