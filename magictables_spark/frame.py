@@ -16,6 +16,7 @@ import atexit
 import os
 import shutil
 import tempfile
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,18 +51,20 @@ def _ingest(spark: SparkSession, rows: list[dict]) -> tuple[DataFrame, str | Non
 
 def _step_arg(value: Any) -> Any:
     """An argument of a derived-frame step as ``step_id`` hashes it: a
-    frame by its identity (a MagicFrame's name, a DataFrame's semantic
-    plan hash), containers element-wise, anything else as
-    ``canonical_json`` renders it."""
+    MagicFrame by its name, containers element-wise, JSON scalars as
+    they are. Anything else — a DataFrame, Column, callable or other
+    object — has no identity by value (a DataFrame's plan hash does not
+    move when the files under it are rewritten; a UDF's text carries a
+    memory address), so it raises TypeError."""
     if isinstance(value, MagicFrame):
         return value.name
-    if isinstance(value, DataFrame):
-        return f"plan:{value.semanticHash()}"
     if isinstance(value, (list, tuple)):
         return [_step_arg(v) for v in value]
     if isinstance(value, dict):
         return {str(k): _step_arg(v) for k, v in value.items()}
-    return value
+    if value is None or isinstance(value, (str, int, float, bool)):
+        return value
+    raise TypeError(f"no value identity: {type(value).__name__}")
 
 
 def rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -83,8 +86,8 @@ class MagicFrame:
 
     Attributes:
         df: the underlying ``pyspark.sql.DataFrame`` (lazy logical plan).
-        sources: provenance source-ids in application order (§1.4 of SURVEY),
-            one ``identity.step_id`` per derived step after the sources.
+        sources: provenance source-ids in application order (§1.4 of SURVEY);
+            a derived frame's is the one ``identity.step_id`` of its step.
         name: provenance-derived identity, ``"_".join(sources)``.
     """
 
@@ -249,10 +252,8 @@ class MagicFrame:
         from magictables_spark.llm import nl_transform
 
         out = nl_transform(self.df, query, llm=llm, warehouse=warehouse, model=model, table_name=self.name)
-        return MagicFrame(
-            out,
-            sources=self.sources + [step_id("transform", query, model)],
-            name=transform_name(self.name, query, model),
+        return self._derived(
+            out, "transform", (query, model), name=transform_name(self.name, query, model)
         )
 
     # -- join_with_query (reference facade's dead API, made real) ----------
@@ -310,10 +311,33 @@ class MagicFrame:
 
         kwargs = {"n_tables": N_TABLES, "n_probes": N_PROBES} if fast else {}
         out = ann_topk(self.df, id_col, vec_col, k=k, dim=dim, **kwargs)
-        step = step_id("similar_topk", id_col, vec_col, k=k, dim=dim, fast=fast)
-        return MagicFrame(out, sources=self.sources + [step])
+        return self._derived(
+            out, "similar_topk", (id_col, vec_col), dict(k=k, dim=dim, fast=fast)
+        )
 
     # -- closure property: every DataFrame-returning method stays magic ----
+
+    def _derived(
+        self,
+        out: DataFrame,
+        method: str,
+        args: tuple = (),
+        kwargs: dict | None = None,
+        name: str | None = None,
+    ) -> "MagicFrame":
+        """``out`` as a new table derived from this one by
+        ``method(*args, **kwargs)``. Its sources are ONE step id that
+        hashes this frame's name with the step (identity.step_id), so it
+        never shares its parent's cache identity, two frames that apply
+        the same step to the same parent agree, and the id stays one
+        digest long however many steps a pipeline takes. A step whose
+        arguments have no identity by value (see _step_arg) gets a
+        random id: its result is never served from a cache."""
+        try:
+            sid = step_id(self.name, method, _step_arg(args), _step_arg(kwargs or {}))
+        except TypeError:
+            sid = uuid.uuid4().hex
+        return MagicFrame(out, sources=[sid], name=name)
 
     def __getattr__(self, attr: str) -> Any:
         value = getattr(object.__getattribute__(self, "df"), attr)
@@ -325,9 +349,7 @@ class MagicFrame:
                     **{k: (v.df if isinstance(v, MagicFrame) else v) for k, v in kwargs.items()},
                 )
                 if isinstance(result, DataFrame):
-                    # a derived frame is a new table: its own provenance step
-                    step = step_id(attr, *_step_arg(args), **_step_arg(kwargs))
-                    return MagicFrame(result, sources=self.sources + [step])
+                    return self._derived(result, attr, args, kwargs)
                 return result
 
             return wrapped
@@ -365,9 +387,17 @@ class MagicFrame:
         ``view_name``) and runs the statement — the non-LLM twin of
         ``transform`` (same contract the generated SQL targets), so a
         user can hand-write what the NL path would synthesize."""
+        from magictables_spark.llm import validate_sql
+
         self.df.createOrReplaceTempView(view_name)
-        step = step_id("sql", query, view_name)
-        return MagicFrame(self.spark.sql(query), sources=self.sources + [step])
+        out = self.spark.sql(query)
+        try:
+            validate_sql(query, spark=self.spark, allowed_tables={view_name})
+        except ValueError:
+            # it reads more than this frame (another view or table), so
+            # its text does not identify the result: never served from cache
+            return MagicFrame(out, sources=[uuid.uuid4().hex])
+        return self._derived(out, "sql", (query, view_name))
 
     def to_pandas_on_spark(self):
         """pandas-typed API over the SAME distributed frame

@@ -10,9 +10,10 @@ behavior — cache hits across sessions depend on it):
 - a table's name = "_".join of its sources' ids (magictable.py:102);
 - a transform renames to ``f"{name}_query:{query}_model:{model}"``
   (magictable.py:180);
-- any other derived frame (a delegated DataFrame op, ``sql``,
-  ``similar_topk``) — and a transform too — appends a ``step_id`` to
-  its sources, so it never shares its parent's cache identity.
+- a derived frame (a delegated DataFrame op, ``sql``,
+  ``similar_topk``, ``transform``) has one ``step_id`` as its sources,
+  so it never shares its parent's cache identity and its id stays one
+  digest long (a chain id is a directory name).
 """
 
 from __future__ import annotations
@@ -43,12 +44,11 @@ def table_name(source_ids: list[str]) -> str:
     return "_".join(source_ids)
 
 
-def step_id(method: str, *args: Any, **kwargs: Any) -> str:
-    """Provenance id of one derived-frame step: md5 of the method name
-    plus a canonical repr of its arguments. Appended to a frame's
-    sources, it gives every derived frame its own cache identity, and
-    two frames that apply the same op to the same parent the same one."""
-    payload = {"step": method, "args": list(args), "kwargs": kwargs}
+def step_id(parent: str, method: str, args: list, kwargs: dict) -> str:
+    """Provenance id of a frame derived from the table named `parent` by
+    one step ``method(*args, **kwargs)``: md5 of the parent name, the
+    method name and a canonical repr of the arguments."""
+    payload = {"parent": parent, "step": method, "args": args, "kwargs": kwargs}
     return hashlib.md5(canonical_json(payload).encode()).hexdigest()
 
 

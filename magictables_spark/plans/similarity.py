@@ -81,7 +81,8 @@ def _dot_unrolled(a: str, b: str, dim: int = 64):
 #   _nearest_cells     a query's nearest IVF cells
 #   _residuals         vectors minus their assigned centroid (IVFPQ)
 #   _pq_literal        a stored or trained codebook as one SQL literal
-#   _pq_recon          codes x codebook over that literal
+#   _pq_recon          a stored code table's codes x codebook over that
+#                      literal (a topk leg serves its encode's recon)
 # The DuckDB oracles spell every stage out on their own: they are the
 # check, not the code.
 # ---------------------------------------------------------------------------
@@ -633,6 +634,9 @@ def _lsh_serve(
     non-fixture corpora (the `ann_topk` library surface); ``dim`` picks
     the codegen-unrolled dot when the dimension is statically known,
     else the dim-agnostic HOF dot."""
+    # both sides name the table column `table` for the candidate join:
+    # the persisted-serve plan contract (tests/test_ann_persisted.py)
+    # reads the probe side's exchange key as hashpartitioning(table, ...)
     a = idx.select(
         F.col("tbl").alias("table"),
         F.explode(
@@ -1592,7 +1596,13 @@ def _ivf_assign(norms: DataFrame, cents: DataFrame) -> DataFrame:
 def _nearest_cells(qs: DataFrame, cents: DataFrame, n: int) -> DataFrame:
     """The `n` nearest cells of each query row of `qs` (vec_id, q, nrm)
     against the broadcast centroids — exact int64 L2, ties to the smaller
-    cent_id -> (query_id, cell, qa, na, cq)."""
+    cent_id -> (query_id, cell, qa, na, cq).
+
+    Plan-audit waiver (NESTED_LOOP_JOIN): the cross join is a broadcast
+    nested-loop join of the probe set against the ~sqrt(n) centroid
+    table, |qs| x sqrt(n) distance evals. Every IVF-family serve runs it
+    inside _ivf_candidates' eager checkpoint, a side job that
+    tools/plan_audit.py does not see, so this is where it is justified."""
     dists = qs.crossJoin(F.broadcast(cents)).withColumn("d2", _ivf_l2())
     wq = Window.partitionBy("vec_id").orderBy("d2", "cent_id")
     return (
@@ -2674,9 +2684,8 @@ def _pq_literal(cb: DataFrame) -> str | None:
     None when it is empty (an empty training slice). The codebook is
     M*K = 256 rows by CONSTRUCTION (trained in _pq_codebook or read back
     from a persisted store), so it collects to the driver — the same
-    bounded roundtrip as kmeans' centroids. Collect once per query and
-    hand the literal to both the encode and the serve: each collect
-    plus literal build measured ~0.1 s of plan build."""
+    bounded roundtrip as kmeans' centroids. Each collect plus literal
+    build measured ~0.1 s of plan build, so a query makes one."""
     rows = cb.collect()
     return _pq_cb_literal(rows) if rows else None
 
@@ -2921,9 +2930,7 @@ def vector_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "ann", "scale"),
 )
 def ann_pq_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _quantized(spark, sf_dir)
-    cb_lit = _pq_literal(_pq_codebook(spark, e))
-    return _pq_serve(spark, sf_dir, cb_lit, _pq_codes(e, cb_lit))
+    return _pq_serve(spark, sf_dir, _pq_encoded(spark, sf_dir).select("vec_id", "recon"))
 
 
 def _pq_persisted_index(
@@ -2956,30 +2963,33 @@ def _pq_persisted_index(
     return store
 
 
-def _pq_recon(cb_lit: str):
-    """Reconstruction codes ⊗ codebook as one projection over a `codes`
-    column, the codebook inlined as its literal (_pq_literal) — the
-    production serving shape (codebook in memory, codes streamed, zero
-    joins on the scan side). 0-based m, 1-based sid (codes store sid)."""
-    return F.expr(
-        f"flatten(transform(sequence(0, {_PQ_M - 1}), m -> {cb_lit}[m][codes[m] - 1]))"
-    )
+def _pq_recon(codes: DataFrame, cb: DataFrame) -> DataFrame | None:
+    """A stored code table (..., codes) with its codes reconstructed as
+    recon = codes ⊗ codebook `cb`: one projection, the codebook inlined
+    as its literal (_pq_literal) — the production serving shape
+    (codebook in memory, codes streamed, zero joins on the scan side).
+    0-based m, 1-based sid (codes store sid). None for an empty codebook
+    (an empty corpus has no servable index)."""
+    cb_lit = _pq_literal(cb)
+    if cb_lit is None:
+        return None
+    recon = f"flatten(transform(sequence(0, {_PQ_M - 1}), m -> {cb_lit}[m][codes[m] - 1]))"
+    return codes.withColumn("recon", F.expr(recon)).drop("codes")
 
 
 def _pq_serve(
     spark: SparkSession,
     sf_dir: str,
-    cb_lit: str | None,
-    codes: DataFrame,
+    recon: DataFrame | None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC coarse -> exact rescore over a PQ code table (vec_id, codes),
-    stored or built in the query: candidates score as <p, recon> against
-    the inlined codebook, the top max(100, n/10) per query fetch their
-    full-precision vectors by key for the exact re-rank. ``probes``
-    (vec_id, q) defaults to the 5 fixture probes. An empty codebook
-    (empty corpus) has no servable index."""
-    if cb_lit is None:
+    """ADC coarse -> exact rescore over PQ reconstructions (vec_id,
+    recon) — a stored code table's (_pq_recon) or a fresh encode's:
+    candidates score as <p, recon>, the top max(100, n/10) per query
+    fetch their full-precision vectors by key for the exact re-rank.
+    ``probes`` (vec_id, q) defaults to the 5 fixture probes. None (an
+    empty codebook) serves no neighbors."""
+    if recon is None:
         return spark.createDataFrame([], _NO_NEIGHBORS)
     e = _quantized(spark, sf_dir)
     n_vec = _t(spark, sf_dir, "embeddings").count()
@@ -2987,7 +2997,7 @@ def _pq_serve(
         probes = e.filter(F.col("vec_id") < 5)
     probes = probes.select(F.col("vec_id").alias("query_id"), F.col("q").alias("p"))
     coarse = (
-        codes.select(F.col("vec_id").alias("neighbor_id"), _pq_recon(cb_lit).alias("recon"))
+        recon.select(F.col("vec_id").alias("neighbor_id"), "recon")
         .join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc", _dot("p", "recon"))
     )
@@ -3029,8 +3039,9 @@ def _pq_encode(store):
 )
 def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _pq_persisted_index(spark, sf_dir)
-    cb_lit = _pq_literal(store.read(spark, "pqC"))
-    return _pq_serve(spark, sf_dir, cb_lit, store.read(spark, "pqE"))
+    return _pq_serve(
+        spark, sf_dir, _pq_recon(store.read(spark, "pqE"), store.read(spark, "pqC"))
+    )
 
 
 @q(
@@ -3063,7 +3074,7 @@ def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _pq_persisted_index(spark, sf_dir, hist_limit=APPEND_SPLIT)
     codes = _append_leg(spark, sf_dir, store, "pqE", "pqA", _pq_encode(store))
-    return _pq_serve(spark, sf_dir, _pq_literal(store.read(spark, "pqC")), codes)
+    return _pq_serve(spark, sf_dir, _pq_recon(codes, store.read(spark, "pqC")))
 
 
 @q(
@@ -3103,7 +3114,7 @@ def pq_store_stream(
         spark, sf_dir, store, "pqE", "pqstream", "codes", _pq_encode(store),
         _crash_after_write,
     )
-    return _pq_serve(spark, sf_dir, _pq_literal(store.read(spark, "pqC")), codes)
+    return _pq_serve(spark, sf_dir, _pq_recon(codes, store.read(spark, "pqC")))
 
 
 @q(
@@ -3164,8 +3175,7 @@ def stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pq_serve(
                 sp,
                 sf_dir,
-                _pq_literal(store.read(sp, "pqC")),
-                store.read(sp, "pqE"),
+                _pq_recon(store.read(sp, "pqE"), store.read(sp, "pqC")),
                 probes=probes,
             )
             .write.mode("append")
@@ -3346,7 +3356,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = _residuals(_ivf_assign(norms, cents), cents)
     vw = _ivfpq_width(spark, n_vec)
     cb_lit = _pq_literal(_pq_codebook(spark, resid.select("vec_id", "q"), width=vw))
-    return _ivfpq_serve(spark, sf_dir, cents, cb_lit, _ivfpq_codes(resid, cb_lit, vw), n_vec)
+    recon = _ivfpq_encoded(resid, cb_lit, vw).select("cell", "vec_id", "recon")
+    return _ivfpq_serve(spark, sf_dir, cents, recon, n_vec)
 
 
 def _residuals(cells: DataFrame, cents: DataFrame) -> DataFrame:
@@ -3373,13 +3384,13 @@ def _ivfpq_width(spark: SparkSession, n_vec: int) -> int:
     return spread_n_bytes(spark, n_vec * 640)
 
 
-def _ivfpq_codes(resid: DataFrame, cb_lit: str | None, width: int) -> DataFrame:
-    """(cell, vec_id, codes): the residuals PQ-encoded at a codebook
-    literal, keyed by their cell."""
+def _ivfpq_encoded(resid: DataFrame, cb_lit: str | None, width: int) -> DataFrame:
+    """(cell, vec_id, codes, recon): the residuals PQ-encoded at a
+    codebook literal, keyed by their cell."""
     return (
         _pq_encode_at(_pq_subs(resid.select("vec_id", "q"), width), cb_lit)
         .join(resid.select("vec_id", "cell"), "vec_id")
-        .select("cell", "vec_id", "codes")
+        .select("cell", "vec_id", "codes", "recon")
     )
 
 
@@ -3387,24 +3398,22 @@ def _ivfpq_serve(
     spark: SparkSession,
     sf_dir: str,
     cents: DataFrame,
-    cb_lit: str | None,
-    codes: DataFrame,
+    recon: DataFrame | None,
     n_vec: int,
 ) -> DataFrame:
-    """IVFPQ serve over centroids `cents`, residual codebook `cb` and the
-    (cell, vec_id, codes) table, stored or built in the query: each probe
+    """IVFPQ serve over centroids `cents` and the residual
+    reconstructions (cell, vec_id, recon) — a stored code table's
+    (_pq_recon: codes ⊗ codebook, a pure projection, 8 bytes per
+    candidate — the PQ compression) or a fresh encode's: each probe
     reads ONLY its 4 nearest cells (the IVF pruning, pushed into the
-    scan), reconstructs candidates as centroid + codes ⊗ codebook (a pure
-    projection, 8 bytes per candidate — the PQ compression), ADC-ranks
-    them and exact-rescores the top max(100, n/10) into the top-10.
-    The ADC <p, cq + r> is summed as <p, cq> + <p, r>: exact int64, so
-    the same score, and the centroid rides the probe row instead of a
-    join onto the code scan."""
-    if cb_lit is None:
+    scan), ADC-ranks candidates as <p, centroid + residual> and
+    exact-rescores the top max(100, n/10) into the top-10. The ADC is
+    summed as <p, cq> + <p, r>: exact int64, so the same score, and the
+    centroid rides the probe row instead of a join onto the code scan.
+    None (an empty codebook) serves no neighbors."""
+    if recon is None:
         return spark.createDataFrame([], _NO_NEIGHBORS)
-    cells = codes.select(
-        F.col("vec_id").alias("neighbor_id"), "cell", _pq_recon(cb_lit).alias("r")
-    )
+    cells = recon.select(F.col("vec_id").alias("neighbor_id"), "cell", F.col("recon").alias("r"))
     norms = _quantized(spark, sf_dir).withColumn("nrm", _dot("q", "q"))
     coarse = _ivf_candidates(norms.filter(F.col("vec_id") < 5), cents, cells, 4).withColumn(
         "adc", _dot("qa", "cq") + _dot("qa", "r")
@@ -3444,7 +3453,9 @@ def _ivfpq_persisted_index(spark: SparkSession, sf_dir: str):
     )
     store.ensure(
         "ivfpqE",
-        lambda: _ivfpq_codes(_resid(), _pq_literal(store.read(spark, "ivfpqB")), vw),
+        lambda: _ivfpq_encoded(
+            _resid(), _pq_literal(store.read(spark, "ivfpqB")), vw
+        ).select("cell", "vec_id", "codes"),
         # probe-key bucketing: a query's IN(cell,...) filter prunes
         # to SelectedBucketsCount k out of 32 (the IVF-persisted
         # serving lesson), and each surviving row is 8 bytes of code
@@ -3484,8 +3495,7 @@ def ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         store.read(spark, "ivfpqC"),
-        _pq_literal(store.read(spark, "ivfpqB")),
-        store.read(spark, "ivfpqE"),
+        _pq_recon(store.read(spark, "ivfpqE"), store.read(spark, "ivfpqB")),
         n_vec,
     )
 

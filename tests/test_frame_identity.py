@@ -4,9 +4,10 @@ A chain's warehouse cache id is ``table_name(sources + [api id])``
 (operators/chain.py). A derived frame — a delegated DataFrame op,
 ``sql``, ``similar_topk``, ``transform`` — that kept its parent's
 sources would hit the parent's cached chain result and return the
-parent's rows. Each such step appends a deterministic
-``identity.step_id`` instead, while pure source -> chain -> transform
-pipelines keep the reference's names byte for byte.
+parent's rows. Each such step's sources are one deterministic
+``identity.step_id`` instead (fixed length, so a long pipeline's chain
+id still fits a directory name), while pure source -> chain ->
+transform pipelines keep the reference's names byte for byte.
 """
 
 from __future__ import annotations
@@ -82,7 +83,7 @@ def test_source_chain_transform_names_follow_identity_formulas(spark, wh):
     assert base.sources == [raw] and base.name == raw
     assert chained.sources == [raw, api] and chained.name == table_name([raw, api])
     assert out.name == transform_name(table_name([raw, api]), "keep score", "m")
-    assert out.sources == [raw, api, step_id("transform", "keep score", "m")]
+    assert out.sources == [step_id(chained.name, "transform", ["keep score", "m"], {})]
 
 
 def test_same_op_on_independent_frames_gives_equal_names(spark):
@@ -90,3 +91,42 @@ def test_same_op_on_independent_frames_gives_equal_names(spark):
     b = MagicFrame.from_raw(spark, ROWS).filter("x < 3").select("x")
     assert a.name == b.name
     assert a.name != MagicFrame.from_raw(spark, ROWS).filter("x < 4").select("x").name
+
+
+def test_long_derived_pipeline_chains_into_a_warehouse(spark, wh):
+    mf = (
+        MagicFrame.from_raw(spark, ROWS)
+        .filter("x < 8")
+        .select("x")
+        .withColumnRenamed("x", "y")
+        .withColumnRenamed("y", "x")
+        .filter("x > 0")
+        .dropDuplicates(["x"])
+        .filter("x < 7")
+    )
+    assert len(mf.name) == 32
+    assert _chained_rows(mf, wh) == 6
+
+
+def test_raw_dataframe_argument_is_never_served_from_cache(spark, wh, tmp_path):
+    # a DataFrame over a rewritten parquet path keeps its plan hash, so
+    # it cannot name the step: a join with it must recompute
+    path = str(tmp_path / "keys.parquet")
+    mf = MagicFrame.from_raw(spark, ROWS)
+    spark.createDataFrame([(i,) for i in range(3)], "x bigint").write.parquet(path)
+    assert _chained_rows(mf.join(spark.read.parquet(path), "x"), wh) == 3
+    spark.createDataFrame([(i,) for i in range(5)], "x bigint").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert _chained_rows(mf.join(spark.read.parquet(path), "x"), wh) == 5
+    keys = MagicFrame.from_raw(spark, [{"x": 1}])
+    assert mf.join(keys, "x").name == mf.join(keys, "x").name
+
+
+def test_sql_over_another_view_is_never_served_from_cache(spark, wh):
+    mf = MagicFrame.from_raw(spark, ROWS)
+    query = "SELECT df.x FROM df JOIN keys ON df.x = keys.x"
+    spark.createDataFrame([(i,) for i in range(3)], "x bigint").createOrReplaceTempView("keys")
+    assert _chained_rows(mf.sql(query), wh) == 3
+    spark.createDataFrame([(i,) for i in range(5)], "x bigint").createOrReplaceTempView("keys")
+    assert _chained_rows(mf.sql(query), wh) == 5

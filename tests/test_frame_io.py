@@ -7,14 +7,15 @@ from __future__ import annotations
 import os
 
 from magictables_spark.frame import MagicFrame
+from magictables_spark.identity import step_id
 
 
 def test_delegation_rewraps_and_preserves_provenance(spark):
     mf = MagicFrame(spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string"), sources=["s1"])
     out = mf.filter("id > 1").select("id")
     assert isinstance(out, MagicFrame)
-    # provenance carried, plus one step id per derived op (its own identity)
-    assert out.sources[0] == "s1" and len(out.sources) == 3
+    # a derived frame is its own table: one step id over the parent's name
+    assert len(out.sources) == 1 and out.sources != ["s1"] and out.name == out.sources[0]
     assert out.df.collect()[0]["id"] == 2
     # non-DataFrame results pass through unwrapped
     assert out.count() == 1
@@ -71,8 +72,9 @@ def test_frame_sql_direct(spark):
     mf = MagicFrame(spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], ["id", "k"]))
     out = mf.sql("SELECT k, COUNT(*) AS n FROM df GROUP BY k ORDER BY k")
     assert [(r.k, r.n) for r in out.df.collect()] == [("a", 2), ("b", 1)]
-    # provenance carried, plus the sql step's own id
-    assert out.sources[:-1] == mf.sources and len(out.sources) == len(mf.sources) + 1
+    # its own identity: one step id over the parent's name and the query
+    query = "SELECT k, COUNT(*) AS n FROM df GROUP BY k ORDER BY k"
+    assert out.sources == [step_id(mf.name, "sql", [query, "df"], {})]
 
 
 def test_frame_pandas_on_spark(spark):
