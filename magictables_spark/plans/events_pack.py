@@ -12,7 +12,7 @@ scaled int64 (value column carries 2 decimals).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1064,6 +1064,29 @@ def _scd2_finalize(runs: DataFrame) -> DataFrame:
     )
 
 
+def _scd2_fold(stored: DataFrame, batch: DataFrame) -> DataFrame:
+    """New runs of the users a changelog ``batch`` touches: each of
+    their ``stored`` runs re-enters as ONE pseudo-event at its opening
+    (ts, event_id) carrying its event count, and the batch events fold
+    in after them (collapse-of-collapse, ``_scd2_runs``)."""
+    touched = batch.select("user_id").distinct()
+    synth = stored.join(touched, "user_id", "left_semi").select(
+        "user_id",
+        F.col("vf").alias("ts"),
+        F.col("vf_event_id").alias("event_id"),
+        F.col("status").alias("event_type"),
+        F.col("n_events").alias("weight"),
+    )
+    return _scd2_runs(
+        synth.unionByName(
+            batch.select(
+                "user_id", "ts", "event_id", "event_type",
+                F.lit(1).cast("bigint").alias("weight"),
+            )
+        )
+    )
+
+
 @q(
     "scd2_from_changelog",
     oracle=_SCD2_ORACLE,
@@ -1138,28 +1161,12 @@ def scd2_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         **layout,
     )
 
-    def _delta() -> DataFrame:
-        batch = ev.filter(F.col("ts") >= split)
-        touched = batch.select("user_id").distinct()
-        # each stored run of a touched user re-enters as ONE
-        # pseudo-event at its opening (ts, event_id) carrying its count
-        synth = stored.join(touched, "user_id", "left_semi").select(
-            "user_id",
-            F.col("vf").alias("ts"),
-            F.col("vf_event_id").alias("event_id"),
-            F.col("status").alias("event_type"),
-            F.col("n_events").alias("weight"),
-        )
-        return _scd2_runs(
-            synth.unionByName(
-                batch.select(
-                    "user_id", "ts", "event_id", "event_type",
-                    F.lit(1).cast("bigint").alias("weight"),
-                )
-            )
-        )
-
-    delta = store.table(spark, "scd2D", _delta, **layout)
+    delta = store.table(
+        spark,
+        "scd2D",
+        lambda: _scd2_fold(stored, ev.filter(F.col("ts") >= split)),
+        **layout,
+    )
 
     cols = ["user_id", "version", "status", "vf", "n_events"]
     untouched = stored.join(
@@ -1208,9 +1215,7 @@ def scd2_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
-    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.streaming.commit import ReplaySource, StampedStore
     from magictables_spark.warehouse import store_key
 
     NB = 32  # user-hash bucket partitions (the overwrite/pruning unit)
@@ -1219,30 +1224,20 @@ def scd2_store_stream(
     src = ReplaySource(
         "scd2stream", *store_key(sf_dir, "events", f"v2:scd2s:{NB}:{_SCD2_SPLIT_TS}")
     )
-    store_dir = src.path("store")
-    applied_dir = src.path("applied")
-
     _ub = F.pmod(F.xxhash64("user_id"), F.lit(NB)).alias("ub")
     run_cols = ["user_id", "version", "status", "vf", "vf_event_id", "n_events"]
-    # explicit schema: an empty-history store has no partition dirs to
-    # infer from
-    # last_batch stamps each ub partition with its last writer (-1 =
-    # seed) — the per-partition replay guard (streaming/commit.py)
-    store_schema = (
+    store = StampedStore(
+        src,
         "user_id bigint, version int, status string, vf timestamp, "
-        "vf_event_id bigint, n_events bigint, last_batch bigint, ub bigint"
+        "vf_event_id bigint, n_events bigint, last_batch bigint, ub bigint",
+        "ub",
     )
 
     def _seed():
-        os.makedirs(applied_dir)
         hist = ev.filter(F.col("ts") < split).withColumn(
             "weight", F.lit(1).cast("bigint")
         )
-        _scd2_runs(hist).withColumn(
-            "last_batch", F.lit(-1).cast("long")
-        ).select(*run_cols, "last_batch", _ub).write.partitionBy("ub").mode(
-            "overwrite"
-        ).parquet(store_dir)
+        store.seed(_scd2_runs(hist).select(*run_cols, _ub))
         # 3 contiguous time shards in changelog order, because SCD2
         # merge is order-sensitive by contract
         d = F.dayofmonth(F.col("ts").cast("date"))
@@ -1251,78 +1246,25 @@ def scd2_store_stream(
             for lo, hi in [(16, 21), (21, 26), (26, 32)]
         ]
 
-    src.prepare(_seed)
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(applied_dir, f"batch_{batch_id}")
-        if os.path.exists(marker):  # fast path: batch fully committed
-            return
-        b = (
-            batch_df.select(
-                "user_id", "ts", "event_id", "event_type",
-                F.lit(1).cast("bigint").alias("weight"), _ub,
-            )
-            .localCheckpoint(eager=True)
+    def _merge(runs: DataFrame, batch: DataFrame) -> DataFrame:
+        # touched users' runs are refolded; the rest pass through
+        keep = runs.join(batch.select("user_id").distinct(), "user_id", "left_anti")
+        return keep.select(*run_cols, "ub").unionByName(
+            _scd2_fold(runs, batch).select(*run_cols, _ub)
         )
-        touched_b = [r.ub for r in b.select("ub").distinct().collect()]
-        if touched_b:
-            ss = batch_df.sparkSession
-            all_store = ss.read.schema(store_schema).parquet(store_dir)
-            # per-partition replay guard: a crash between the dynamic
-            # overwrite and the marker re-merges ONLY the buckets this
-            # batch's stamp is missing from — re-merging a stamped
-            # bucket would double-fold the batch's events into runs
-            done = {
-                r.ub
-                for r in all_store.filter(F.col("ub").isin(touched_b))
-                .filter(F.col("last_batch") == batch_id)
-                .select("ub")
-                .distinct()
-                .collect()
-            }
-            redo = [p for p in touched_b if p not in done]
-            if redo:
-                store = all_store.filter(F.col("ub").isin(redo))
-                b_redo = b.filter(F.col("ub").isin(redo))
-                touched_users = b_redo.select("user_id").distinct()
-                keep = store.join(touched_users, "user_id", "left_anti")
-                synth = store.join(touched_users, "user_id", "left_semi").select(
-                    "user_id",
-                    F.col("vf").alias("ts"),
-                    F.col("vf_event_id").alias("event_id"),
-                    F.col("status").alias("event_type"),
-                    F.col("n_events").alias("weight"),
-                )
-                new_runs = _scd2_runs(
-                    synth.unionByName(
-                        b_redo.select(
-                            "user_id", "ts", "event_id", "event_type", "weight"
-                        )
-                    )
-                )
-                out = (
-                    keep.select(*run_cols)
-                    .unionByName(new_runs.select(*run_cols))
-                    .withColumn("last_batch", F.lit(batch_id).cast("long"))
-                    .select(*run_cols, "last_batch", _ub)
-                    .localCheckpoint(eager=True)  # cut lineage pre-overwrite
-                )
-                (
-                    out.write.option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ub")
-                    .mode("overwrite")
-                    .parquet(store_dir)
-                )
-        if batch_id in _crash_after_write:
-            raise RuntimeError(f"injected crash after batch {batch_id} write")
-        with open(marker, "w") as f:
-            f.write("ok")
 
-    src.drain(spark, ev.schema, _merge_batch)
+    src.prepare(_seed)
+    src.drain(
+        spark,
+        ev.schema,
+        store.batches(
+            lambda b: b.select("user_id", "ts", "event_id", "event_type", _ub),
+            _merge,
+            _crash_after_write,
+        ),
+    )
     return _scd2_finalize(
-        spark.read.schema(store_schema)
-        .parquet(store_dir)
-        .select("user_id", "version", "status", "vf", "n_events")
+        store.read(spark).select("user_id", "version", "status", "vf", "n_events")
     )
 
 
@@ -1378,16 +1320,42 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "rollup_incremental_store",
-    oracle=f"""
+def _rollup_partials(events: DataFrame, day: Column) -> DataFrame:
+    """(day, event_type) count and sum-of-cents partials of ``events``,
+    with ``day`` as the rollup's day key."""
+    return (
+        events.select(day.alias("day"), "event_type", F.expr(VAL_I).alias("cents"))
+        .groupBy("day", "event_type")
+        .agg(F.count("*").alias("n_events"), F.sum("cents").alias("sum_cents"))
+    )
+
+
+def _rollup_merge(stored: DataFrame, partials: DataFrame) -> DataFrame:
+    """Partials merge group-wise: count and sum are associative and
+    commutative."""
+    return (
+        stored.unionByName(partials)
+        .groupBy("day", "event_type")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("sum_cents").alias("sum_cents"),
+        )
+    )
+
+
+_ROLLUP_ORACLE = f"""
     SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
            COUNT(*) AS n_events,
            CAST(SUM({VAL_I}) AS BIGINT) AS sum_cents
     FROM events
     GROUP BY 1, 2
     ORDER BY day, event_type
-    """,
+    """
+
+
+@q(
+    "rollup_incremental_store",
+    oracle=_ROLLUP_ORACLE,
     doc="INCREMENTAL materialized-aggregate maintenance -- the rollup "
     "leg of the incremental-warehouse family (with "
     "dedup_incremental_store, dedup_minhash_incremental, "
@@ -1412,35 +1380,20 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magictables_spark.warehouse import Store
 
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("ts").cast("date").alias("day"),
-        "event_type",
-        F.expr(VAL_I.replace("value", "value")).alias("cents"),
-    )
+    ev = _t(spark, sf_dir, "events")
+    day = F.col("ts").cast("date")
     store = Store("rollup", sf_dir, "events", "v2:16").table(
         spark,
         "rollup",
-        lambda: ev.filter(F.dayofmonth("day") < 16)
-        .groupBy("day", "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("cents").alias("sum_cents")),
+        lambda: _rollup_partials(ev.filter(F.dayofmonth(day) < 16), day),
         bucket_by=["day", "event_type"],
         n_buckets=32,
         sort_by=["day", "event_type"],
     )
-    batch = (
-        ev.filter(F.dayofmonth("day") >= 16)
-        .groupBy("day", "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("cents").alias("sum_cents"))
-    )
-    # partials merge group-wise; the store side arrives pre-bucketed on
-    # the rollup key, so only the batch partials shuffle
+    # the store side arrives pre-bucketed on the rollup key, so only
+    # the batch partials shuffle
     return (
-        store.unionByName(batch)
-        .groupBy("day", "event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
+        _rollup_merge(store, _rollup_partials(ev.filter(F.dayofmonth(day) >= 16), day))
         .select(
             F.date_format("day", "yyyy-MM-dd").alias("day"),
             "event_type",
@@ -1453,14 +1406,7 @@ def rollup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "rollup_store_stream",
-    oracle=f"""
-    SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM({VAL_I}) AS BIGINT) AS sum_cents
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY day, event_type
-    """,
+    oracle=_ROLLUP_ORACLE,
     doc="STREAMING maintenance of the materialized (day, event_type) "
     "rollup — the streaming twin of rollup_incremental_store and the "
     "production materialized-view shape: the history split (day < 16) "
@@ -1494,124 +1440,38 @@ def rollup_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
-    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.streaming.commit import ReplaySource, StampedStore
     from magictables_spark.warehouse import store_key
 
     src = ReplaySource("rollstream", *store_key(sf_dir, "events", "v2:16"))
-    store_dir = src.path("store")
-    applied_dir = src.path("applied")
-
     ev = _t(spark, sf_dir, "events")
-
-    def _partials(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias("day"),
-                "event_type",
-                F.expr(VAL_I).alias("cents"),
-            )
-            .groupBy("day", "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum("cents").alias("sum_cents"),
-            )
-        )
+    # the stream store keeps day as the formatted string: it is the
+    # partition column (pruning + dynamic overwrite unit)
+    day = F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd")
+    dom = F.dayofmonth(F.col("ts").cast("date"))
+    # explicit schema keeps day a string (inference would type the
+    # partition column DATE)
+    store = StampedStore(
+        src,
+        "event_type string, n_events bigint, sum_cents bigint,"
+        " last_batch bigint, day string",
+        "day",
+    )
 
     def _seed():
-        os.makedirs(applied_dir)
-        # seed: history partials, partitioned by day (the rollup key's
-        # coarse component — partition pruning + dynamic overwrite unit).
-        # last_batch stamps each partition with the batch that last
-        # rewrote it (-1 = seed) — the per-partition replay guard.
-        _partials(
-            ev.filter(F.dayofmonth(F.col("ts").cast("date")) < 16)
-        ).withColumn("last_batch", F.lit(-1).cast("long")).write.partitionBy(
-            "day"
-        ).mode("overwrite").parquet(store_dir)
+        store.seed(_rollup_partials(ev.filter(dom < 16), day))
         return [
-            ev.filter(
-                (F.dayofmonth(F.col("ts").cast("date")) >= 16)
-                & (F.col("event_id") % 3 == k)
-            )
-            for k in range(3)
+            ev.filter((dom >= 16) & (F.col("event_id") % 3 == k)) for k in range(3)
         ]
 
     src.prepare(_seed)
-
-    # explicit schema: a store seeded from an EMPTY history has no
-    # partition dirs to infer from (day comes back as the formatted
-    # string either way — it was written as one)
-    store_schema = (
-        "event_type string, n_events bigint, sum_cents bigint,"
-        " last_batch bigint, day string"
+    src.drain(
+        spark,
+        ev.schema,
+        store.batches(lambda b: _rollup_partials(b, day), _rollup_merge, _crash_after_write),
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(applied_dir, f"batch_{batch_id}")
-        if os.path.exists(marker):  # fast path: batch fully committed
-            return
-        parts = _partials(batch_df).localCheckpoint(eager=True)
-        touched = [r.day for r in parts.select("day").distinct().collect()]
-        if not touched:
-            with open(marker, "w") as f:
-                f.write("ok")
-            return
-        ss = batch_df.sparkSession
-        cur = ss.read.schema(store_schema).parquet(store_dir).filter(
-            F.col("day").isin(touched)
-        )
-        # Per-partition replay guard: every dynamic overwrite rewrites
-        # whole day-partitions stamped with last_batch = batch_id, so a
-        # foreachBatch replay (at-least-once) that crashed between the
-        # store overwrite and the marker write sees its own stamp in
-        # the already-merged days and re-merges ONLY the rest — the
-        # marker alone left a double-count window there (the r8
-        # ADVICE defect fixed atomically in auc_store_stream; here the
-        # store is partitioned in place, so the guard moves into the
-        # data instead of a CURRENT pointer).
-        done = {
-            r.day
-            for r in cur.filter(F.col("last_batch") == batch_id)
-            .select("day")
-            .distinct()
-            .collect()
-        }
-        redo = [d for d in touched if d not in done]
-        if redo:
-            merged = (
-                cur.filter(F.col("day").isin(redo))
-                .drop("last_batch")
-                .unionByName(parts.filter(F.col("day").isin(redo)))
-                .groupBy("day", "event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_cents").alias("sum_cents"),
-                )
-                .withColumn("last_batch", F.lit(batch_id).cast("long"))
-                .localCheckpoint(eager=True)  # cut lineage before overwrite
-            )
-            (
-                merged.write.option("partitionOverwriteMode", "dynamic")
-                .partitionBy("day")
-                .mode("overwrite")
-                .parquet(store_dir)
-            )
-        if batch_id in _crash_after_write:
-            # test hook: die in the ADVICE-flagged window — store
-            # rewritten, marker not yet on disk
-            raise RuntimeError(f"injected crash after batch {batch_id} write")
-        with open(marker, "w") as f:
-            f.write("ok")
-
-    src.drain(spark, ev.schema, _merge_batch)
     return (
-        spark.read.schema(store_schema)
-        .parquet(store_dir)
-        # explicit schema keeps day as the formatted string it was
-        # written as (inference would type the partition col DATE; an
-        # empty store has nothing to infer from at all)
+        store.read(spark)
         .select("day", "event_type", "n_events", "sum_cents")
         .orderBy("day", "event_type")
     )

@@ -401,6 +401,41 @@ def hll_sketch_rollup(spark, sf_dir):
     )
 
 
+def _split(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``ev`` before Jan 16 (the history a sketch store is seeded
+    with), and from then on (the batch a twin merges)."""
+    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
+    return ev.filter(F.col("ts") < split), ev.filter(F.col("ts") >= split)
+
+
+def _shards(batch: DataFrame) -> list[DataFrame]:
+    """A stream twin replays its batch in 3 event_id shards."""
+    return [batch.filter(F.col("event_id") % 3 == k) for k in range(3)]
+
+
+_HLL_SCHEMA = "event_type string, sk binary"
+
+
+def _hll_sketch(events: DataFrame) -> DataFrame:
+    return events.groupBy("event_type").agg(F.hll_sketch_agg("user_id").alias("sk"))
+
+
+def _hll_merge(sketches: DataFrame, events: DataFrame) -> DataFrame:
+    """Register-max union of the stored ``sketches`` and a batch of
+    ``events`` — the one merge of both HLL twins."""
+    return (
+        sketches.unionByName(_hll_sketch(events))
+        .groupBy("event_type")
+        .agg(F.hll_union_agg("sk").alias("sk"))
+    )
+
+
+def _hll_serve(sketches: DataFrame) -> DataFrame:
+    return sketches.select(
+        "event_type", F.hll_sketch_estimate("sk").alias("approx_users")
+    ).orderBy("event_type")
+
+
 @q(
     "hll_rollup_incremental",
     oracle=None,  # sketch estimates; invariant-gated in tests:
@@ -429,28 +464,11 @@ def hll_sketch_rollup(spark, sf_dir):
 def hll_rollup_incremental(spark, sf_dir):
     from magictables_spark.warehouse import Store
 
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    ev = _t(spark, sf_dir, "events")
+    hist, batch = _split(_t(spark, sf_dir, "events"))
     stored = Store("hll", sf_dir, "events", "v1").table(
-        spark,
-        "hllstore",
-        lambda: ev.filter(F.col("ts") < split)
-        .groupBy("event_type")
-        .agg(F.hll_sketch_agg("user_id").alias("sk")),
+        spark, "hllstore", lambda: _hll_sketch(hist)
     )
-    batch = (
-        ev.filter(F.col("ts") >= split)
-        .groupBy("event_type")
-        .agg(F.hll_sketch_agg("user_id").alias("sk"))
-    )
-    return (
-        stored.unionByName(batch)
-        .groupBy("event_type")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_users")
-        )
-        .orderBy("event_type")
-    )
+    return _hll_serve(_hll_merge(stored, batch))
 
 
 @q(
@@ -491,59 +509,21 @@ def hll_store_stream(
     from magictables_spark.streaming.commit import ReplaySource, VersionedStore
     from magictables_spark.warehouse import store_key
 
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
     src = ReplaySource("hllstream", *store_key(sf_dir, "events", "v2:hlls"))
-
-    def _sketch(df):
-        return df.groupBy("event_type").agg(F.hll_sketch_agg("user_id").alias("sk"))
-
+    # register-max union is idempotent under replay, but an in-place
+    # overwrite reads the directory it rewrites: a kill mid-write would
+    # corrupt the only copy of the merged history
     vs = VersionedStore(src.path("store"))
 
     def _seed():
-        _sketch(ev.filter(F.col("ts") < split)).write.mode("overwrite").parquet(
-            vs.seed_path()
-        )
-        vs.init()
-        return [
-            ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == k))
-            for k in range(3)
-        ]
+        hist, batch = _split(ev)
+        vs.seed(_hll_sketch(hist))
+        return _shards(batch)
 
     src.prepare(_seed)
-
-    def _merge_batch(batch_df, batch_id):
-        # register-max union is idempotent under replay, but the old
-        # in-place overwrite READ the directory it was rewriting — a
-        # kill mid-write corrupted the only copy of the merged
-        # history. VersionedStore merges into a fresh store_v{b} and
-        # commits with one atomic CURRENT flip (the qh/cms protocol).
-        if vs.is_applied(batch_id):
-            return
-        ss = batch_df.sparkSession
-        merged = (
-            ss.read.parquet(vs.current_path())
-            .unionByName(_sketch(batch_df))
-            .groupBy("event_type")
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            .localCheckpoint(eager=True)
-        )
-        merged.write.mode("overwrite").parquet(
-            vs.version_path(vs.batch_version(batch_id))
-        )
-        if batch_id in _crash_after_write:
-            raise RuntimeError(f"injected crash after batch {batch_id} write")
-        vs.commit(batch_id)
-
-    src.drain(spark, ev.schema, _merge_batch)
-    return (
-        spark.read.parquet(vs.current_path())
-        .select(
-            "event_type",
-            F.hll_sketch_estimate("sk").alias("approx_users"),
-        )
-        .orderBy("event_type")
-    )
+    src.drain(spark, ev.schema, vs.batches(_HLL_SCHEMA, _hll_merge, _crash_after_write))
+    return _hll_serve(vs.read(spark, _HLL_SCHEMA))
 
 
 @q(

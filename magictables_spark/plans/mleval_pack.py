@@ -86,9 +86,7 @@ _AUC = (
 )
 
 
-@q(
-    "roc_auc",
-    oracle=f"""
+_AUC_ORACLE = f"""
     WITH e AS (
       SELECT {QUANT_DUCK} AS q, label % 2 AS y FROM embeddings
     ), b AS (
@@ -114,7 +112,12 @@ _AUC = (
            {_AUC} AS auc,
            (2.0 * {_AUC} - 1.0) AS gini
     FROM agg
-    """,
+    """
+
+
+@q(
+    "roc_auc",
+    oracle=_AUC_ORACLE,
     doc="ROC-AUC of a fixed linear scorer against the label%2 split of "
     "`embeddings` — the held-out-eval primitive of every quality/"
     "filter-model loop. Scores are exact int64 dots (1e6-quantized "
@@ -128,14 +131,27 @@ _AUC = (
     tags=("embeddings", "mleval", "stats"),
 )
 def roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").selectExpr(
-        f"{QUANT_SPARK} AS q", "label % 2 AS y"
+    return _auc_serve(_auc_bins(_t(spark, sf_dir, "embeddings")))
+
+
+_AUC_BINS_SCHEMA = "bin bigint, c bigint, c1 bigint"
+
+
+def _auc_bins(emb: DataFrame) -> DataFrame:
+    """Per score bin: the row count c and the positives c1."""
+    return (
+        emb.selectExpr(f"{QUANT_SPARK} AS q", "label % 2 AS y")
+        .selectExpr(f"{_AUC_SCORE_SPARK} div 16777216 AS bin", "y")
+        .groupBy("bin")
+        .agg(
+            F.count("*").cast("long").alias("c"),
+            F.count_if(F.col("y") == 1).cast("long").alias("c1"),
+        )
     )
-    b = e.selectExpr(f"{_AUC_SCORE_SPARK} div 16777216 AS bin", "y")
-    per_bin = b.groupBy("bin").agg(
-        F.count("*").cast("long").alias("c"),
-        F.count_if(F.col("y") == 1).cast("long").alias("c1"),
-    )
+
+
+def _auc_serve(per_bin: DataFrame) -> DataFrame:
+    """AUC and Gini from the bin counts, ties at their average rank."""
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
     wdf = per_bin.withColumn("below", F.coalesce(F.sum("c").over(w), F.lit(0)))
     agg = wdf.agg(
@@ -2478,33 +2494,7 @@ def roc_auc_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "auc_store_stream",
-    oracle=f"""
-    WITH e AS (
-      SELECT {QUANT_DUCK} AS q, label % 2 AS y FROM embeddings
-    ), b AS (
-      SELECT {_AUC_SCORE_DUCK} // 16777216 AS bin, y FROM e
-    ), per_bin AS (
-      SELECT bin,
-             CAST(COUNT(*) AS BIGINT) AS c,
-             CAST(COUNT(*) FILTER (WHERE y = 1) AS BIGINT) AS c1
-      FROM b GROUP BY bin
-    ), w AS (
-      SELECT bin, c, c1,
-             COALESCE(SUM(c) OVER (ORDER BY bin
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
-      FROM per_bin
-    ), agg AS (
-      SELECT CAST(SUM(c1) AS BIGINT) AS n1,
-             CAST(SUM(c - c1) AS BIGINT) AS n0,
-             CAST(COUNT(*) AS BIGINT) AS n_bins,
-             CAST(SUM(c1 * (2 * below + c + 1)) AS BIGINT) AS r1d
-      FROM w
-    )
-    SELECT n1 AS n_pos, n0 AS n_neg, n_bins,
-           {_AUC} AS auc,
-           (2.0 * {_AUC} - 1.0) AS gini
-    FROM agg
-    """,
+    oracle=_AUC_ORACLE,
     doc="STREAMING maintenance of the binned-AUC histogram — the "
     "model-monitoring shape that joins the eval family to the "
     "streaming-store symmetry (every other mergeable store — rollup, "
@@ -2542,79 +2532,26 @@ def auc_store_stream(
 
     emb = _t(spark, sf_dir, "embeddings")
     src = ReplaySource("aucstream", *store_key(sf_dir, "embeddings", "v2:4"))
-
-    # Versioned store + atomic CURRENT pointer flip as the single
-    # commit point (streaming/commit.py — the r8 ADVICE fix: the old
-    # overwrite-then-marker scheme double-counted a batch replayed
-    # between the two writes).
-    vs = VersionedStore(src.root)
-
-    def _bins(df: DataFrame) -> DataFrame:
-        return (
-            df.selectExpr(f"{QUANT_SPARK} AS q", "label % 2 AS y")
-            .selectExpr(f"{_AUC_SCORE_SPARK} div 16777216 AS bin", "y")
-            .groupBy("bin")
-            .agg(
-                F.count("*").cast("long").alias("c"),
-                F.count_if(F.col("y") == 1).cast("long").alias("c1"),
-            )
-        )
+    vs = VersionedStore(src.root)  # the count merge is not idempotent
 
     def _seed():
-        _bins(emb.filter(F.col("vec_id") % 4 < 3)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(vs.seed_path())
-        vs.init()
+        vs.seed(_auc_bins(emb.filter(F.col("vec_id") % 4 < 3)).coalesce(1))
         return [
             emb.filter((F.col("vec_id") % 4 == 3) & (F.col("vec_id") % 3 == k))
             for k in range(3)
         ]
 
-    src.prepare(_seed)
-
-    store_schema = "bin bigint, c bigint, c1 bigint"
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if vs.is_applied(batch_id):  # replay of a committed batch
-            return
-        parts = _bins(batch_df).localCheckpoint(eager=True)
-        if parts.rdd.isEmpty():
-            vs.commit(batch_id, vs.read_current()[1])  # commit the no-op
-            return
-        ss = batch_df.sparkSession
-        cur = ss.read.schema(store_schema).parquet(vs.current_path())
-        merged = (
-            cur.unionByName(parts)
+    def _merge(per_bin: DataFrame, batch: DataFrame) -> DataFrame:
+        return (
+            per_bin.unionByName(_auc_bins(batch))
             .groupBy("bin")
             .agg(F.sum("c").cast("long").alias("c"), F.sum("c1").cast("long").alias("c1"))
+            .coalesce(1)
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            vs.version_path(vs.batch_version(batch_id))
-        )
-        if batch_id in _crash_after_write:
-            # test hook: die in the ADVICE-flagged window — new store
-            # version on disk, CURRENT not yet flipped
-            raise RuntimeError(f"injected crash after batch {batch_id} write")
-        vs.commit(batch_id)  # atomic flip + pre-merge reclaim
 
-    src.drain(spark, emb.schema, _merge_batch)
-
-    per_bin = spark.read.schema(store_schema).parquet(vs.current_path())
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
-    wdf = per_bin.withColumn("below", F.coalesce(F.sum("c").over(w), F.lit(0)))
-    agg = wdf.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum(F.expr("c - c1")).cast("long").alias("n0"),
-        F.count("*").cast("long").alias("n_bins"),
-        F.sum(F.expr("c1 * (2 * below + c + 1)")).cast("long").alias("r1d"),
-    )
-    return agg.selectExpr(
-        "n1 AS n_pos",
-        "n0 AS n_neg",
-        "n_bins",
-        f"{_AUC} AS auc",
-        f"(2.0 * {_AUC} - 1.0) AS gini",
-    )
+    src.prepare(_seed)
+    src.drain(spark, emb.schema, vs.batches(_AUC_BINS_SCHEMA, _merge, _crash_after_write))
+    return _auc_serve(vs.read(spark, _AUC_BINS_SCHEMA))
 
 
 # ---------------------------------------------------------------------------
@@ -2663,14 +2600,7 @@ def auc_store_stream(
     tags=("embeddings", "mleval", "stats"),
 )
 def roc_curve_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").selectExpr(
-        f"{QUANT_SPARK} AS q", "label % 2 AS y"
-    )
-    b = e.selectExpr(f"{_AUC_SCORE_SPARK} div 16777216 AS bin", "y")
-    per_bin = b.groupBy("bin").agg(
-        F.count("*").cast("long").alias("c"),
-        F.count_if(F.col("y") == 1).cast("long").alias("c1"),
-    )
+    per_bin = _auc_bins(_t(spark, sf_dir, "embeddings"))
     w_desc = Window.orderBy(F.desc("bin")).rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     cum = per_bin.select(
@@ -3022,14 +2952,7 @@ _Z95 = "1.959963984540054"
     tags=("embeddings", "mleval", "stats"),
 )
 def roc_auc_ci_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").selectExpr(
-        f"{QUANT_SPARK} AS q", "label % 2 AS y"
-    )
-    b = e.selectExpr(f"{_AUC_SCORE_SPARK} div 16777216 AS bin", "y")
-    per_bin = b.groupBy("bin").agg(
-        F.count("*").cast("long").alias("c"),
-        F.count_if(F.col("y") == 1).cast("long").alias("c1"),
-    )
+    per_bin = _auc_bins(_t(spark, sf_dir, "embeddings"))
     w_below = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
     w_above = Window.orderBy("bin").rowsBetween(1, Window.unboundedFollowing)
     w = per_bin.select(

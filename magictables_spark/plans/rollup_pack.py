@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from magictables_spark.plans.features import _shards, _split
 from magictables_spark.plans.registry import REV_I, _t, q
 
 VAL_I = "CAST(ROUND(value * 100) AS BIGINT)"  # events.value cents
@@ -428,6 +429,69 @@ _QH_W = 1024  # histogram bin width in cents; 64 bins cover [0, 65536)
 _QH_B = 64
 
 
+_QH_SCHEMA = "event_type string, bin bigint, c bigint"
+
+
+def _qh_hist(events: DataFrame) -> DataFrame:
+    b = F.least(
+        F.lit(_QH_B - 1),
+        F.expr(f"CAST(ROUND(value * 100) AS BIGINT) div {_QH_W}"),
+    )
+    return events.select("event_type", b.alias("bin")).groupBy(
+        "event_type", "bin"
+    ).agg(F.count("*").alias("c"))
+
+
+def _qh_merge(hist: DataFrame, events: DataFrame) -> DataFrame:
+    """Stored bin counts plus a batch of ``events``: bin counts sum."""
+    return (
+        hist.unionByName(_qh_hist(events))
+        .groupBy("event_type", "bin")
+        .agg(F.sum("c").alias("c"))
+    )
+
+
+def _qh_estimate(hist: DataFrame) -> DataFrame:
+    """p50/p90/p99 per event_type, interpolated inside the crossing bin."""
+    wb = Window.partitionBy("event_type").orderBy("bin")
+    wn = Window.partitionBy("event_type")
+    cum = hist.withColumn("cum", F.sum("c").over(wb)).withColumn(
+        "n", F.sum("c").over(wn)
+    )
+    qs = hist.sparkSession.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+    target = F.ceil(F.col("q") * F.col("n")).cast("bigint")
+    est = (
+        cum.crossJoin(F.broadcast(qs))
+        .withColumn(
+            "v",
+            # the CROSSING bin only: cum-c < target <= cum
+            F.when(
+                (F.col("cum") >= target)
+                & (F.col("cum") - F.col("c") < target),
+                F.col("bin") * _QH_W
+                + (target - (F.col("cum") - F.col("c")))
+                / F.col("c").cast("double")
+                * _QH_W,
+            ),
+        )
+        .groupBy("event_type", "n", "q")
+        .agg(F.min("v").alias("v"))
+    )
+    return (
+        est.groupBy("event_type", "n")
+        .agg(
+            F.max(F.when(F.col("q") == 0.5, F.col("v"))).alias("p50_cents"),
+            F.max(F.when(F.col("q") == 0.9, F.col("v"))).alias("p90_cents"),
+            F.max(F.when(F.col("q") == 0.99, F.col("v"))).alias("p99_cents"),
+        )
+        .select(
+            "event_type", F.col("n").cast("bigint").alias("n"),
+            "p50_cents", "p90_cents", "p99_cents",
+        )
+        .orderBy("event_type")
+    )
+
+
 @q(
     "quantile_hist_incremental",
     oracle=f"""
@@ -489,64 +553,11 @@ _QH_B = 64
 def quantile_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magictables_spark.warehouse import Store
 
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    ev = _t(spark, sf_dir, "events")
-
-    def _hist(df: DataFrame) -> DataFrame:
-        b = F.least(
-            F.lit(_QH_B - 1),
-            F.expr(f"CAST(ROUND(value * 100) AS BIGINT) div {_QH_W}"),
-        )
-        return df.select("event_type", b.alias("bin")).groupBy(
-            "event_type", "bin"
-        ).agg(F.count("*").alias("c"))
-
+    hist, batch = _split(_t(spark, sf_dir, "events"))
     stored = Store("qhist", sf_dir, "events", f"v1:{_QH_B}x{_QH_W}").table(
-        spark, "qhist", lambda: _hist(ev.filter(F.col("ts") < split))
+        spark, "qhist", lambda: _qh_hist(hist)
     )
-    batch = _hist(ev.filter(F.col("ts") >= split))
-    merged = (
-        stored.unionByName(batch)
-        .groupBy("event_type", "bin")
-        .agg(F.sum("c").alias("c"))
-    )
-    wb = Window.partitionBy("event_type").orderBy("bin")
-    wn = Window.partitionBy("event_type")
-    cum = merged.withColumn("cum", F.sum("c").over(wb)).withColumn(
-        "n", F.sum("c").over(wn)
-    )
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
-    target = F.ceil(F.col("q") * F.col("n")).cast("bigint")
-    est = (
-        cum.crossJoin(F.broadcast(qs))
-        .withColumn(
-            "v",
-            # the CROSSING bin only: cum-c < target <= cum
-            F.when(
-                (F.col("cum") >= target)
-                & (F.col("cum") - F.col("c") < target),
-                F.col("bin") * _QH_W
-                + (target - (F.col("cum") - F.col("c")))
-                / F.col("c").cast("double")
-                * _QH_W,
-            ),
-        )
-        .groupBy("event_type", "n", "q")
-        .agg(F.min("v").alias("v"))
-    )
-    return (
-        est.groupBy("event_type", "n")
-        .agg(
-            F.max(F.when(F.col("q") == 0.5, F.col("v"))).alias("p50_cents"),
-            F.max(F.when(F.col("q") == 0.9, F.col("v"))).alias("p90_cents"),
-            F.max(F.when(F.col("q") == 0.99, F.col("v"))).alias("p99_cents"),
-        )
-        .select(
-            "event_type", F.col("n").cast("bigint").alias("n"),
-            "p50_cents", "p90_cents", "p99_cents",
-        )
-        .orderBy("event_type")
-    )
+    return _qh_estimate(_qh_merge(stored, batch))
 
 
 @q(
@@ -613,105 +624,66 @@ def quantile_hist_store_stream(
     from magictables_spark.streaming.commit import ReplaySource, VersionedStore
     from magictables_spark.warehouse import store_key
 
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
     src = ReplaySource(
         "qhstream", *store_key(sf_dir, "events", f"v2:qhs:{_QH_B}x{_QH_W}")
     )
-    store_schema = "event_type string, bin bigint, c bigint"
-    # versioned store + atomic CURRENT flip: the count-merge is not
-    # idempotent and the old overwrite-then-marker scheme left a
-    # double-count window between the two writes (streaming/commit.py)
-    vs = VersionedStore(src.root)
-
-    def _hist(df: DataFrame) -> DataFrame:
-        b = F.least(
-            F.lit(_QH_B - 1),
-            F.expr(f"CAST(ROUND(value * 100) AS BIGINT) div {_QH_W}"),
-        )
-        return df.select("event_type", b.alias("bin")).groupBy(
-            "event_type", "bin"
-        ).agg(F.count("*").cast("bigint").alias("c"))
+    vs = VersionedStore(src.root)  # the count merge is not idempotent
 
     def _seed():
-        _hist(ev.filter(F.col("ts") < split)).write.mode("overwrite").parquet(
-            vs.seed_path()
-        )
-        vs.init()
-        return [
-            ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == k))
-            for k in range(3)
-        ]
+        hist, batch = _split(ev)
+        vs.seed(_qh_hist(hist))
+        return _shards(batch)
 
     src.prepare(_seed)
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if vs.is_applied(batch_id):  # replay of a committed batch
-            return
-        ss = batch_df.sparkSession
-        merged = (
-            ss.read.schema(store_schema)
-            .parquet(vs.current_path())
-            .unionByName(_hist(batch_df))
-            .groupBy("event_type", "bin")
-            .agg(F.sum("c").alias("c"))
-        )
-        merged.write.mode("overwrite").parquet(
-            vs.version_path(vs.batch_version(batch_id))
-        )
-        if batch_id in _crash_after_write:
-            raise RuntimeError(f"injected crash after batch {batch_id} write")
-        vs.commit(batch_id)  # atomic flip + pre-merge reclaim
-
-    src.drain(spark, ev.schema, _merge_batch)
-
-    cum = (
-        spark.read.schema(store_schema)
-        .parquet(vs.current_path())
-        .withColumn(
-            "cum", F.sum("c").over(Window.partitionBy("event_type").orderBy("bin"))
-        )
-        .withColumn("n", F.sum("c").over(Window.partitionBy("event_type")))
-    )
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
-    target = F.ceil(F.col("q") * F.col("n")).cast("bigint")
-    est = (
-        cum.crossJoin(F.broadcast(qs))
-        .withColumn(
-            "v",
-            F.when(
-                (F.col("cum") >= target)
-                & (F.col("cum") - F.col("c") < target),
-                F.col("bin") * _QH_W
-                + (target - (F.col("cum") - F.col("c")))
-                / F.col("c").cast("double")
-                * _QH_W,
-            ),
-        )
-        .groupBy("event_type", "n", "q")
-        .agg(F.min("v").alias("v"))
-    )
-    return (
-        est.groupBy("event_type", "n")
-        .agg(
-            F.max(F.when(F.col("q") == 0.5, F.col("v"))).alias("p50_cents"),
-            F.max(F.when(F.col("q") == 0.9, F.col("v"))).alias("p90_cents"),
-            F.max(F.when(F.col("q") == 0.99, F.col("v"))).alias("p99_cents"),
-        )
-        .select(
-            "event_type", F.col("n").cast("bigint").alias("n"),
-            "p50_cents", "p90_cents", "p99_cents",
-        )
-        .orderBy("event_type")
-    )
+    src.drain(spark, ev.schema, vs.batches(_QH_SCHEMA, _qh_merge, _crash_after_write))
+    return _qh_estimate(vs.read(spark, _QH_SCHEMA))
 
 
 _CMS_D, _CMS_W = 4, 256  # depth x width; ~2.7k ints per store
+_CMS_SCHEMA = "j bigint, col bigint, c bigint"
+# the sketch row j's column for user_id: md5-derived, identical hex
+# cross-engine
+_CMS_COL = (
+    "CAST(CONV(SUBSTRING(md5(CONCAT(CAST(j AS STRING), ':',"
+    f" CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {_CMS_W}"
+)
 
 
-@q(
-    "cms_topk_incremental",
-    oracle=f"""
+def _cms_cells(users: DataFrame) -> DataFrame:
+    """(user_id, j, col): each row's cell for every ``users`` row."""
+    js = users.sparkSession.range(_CMS_D).select(F.col("id").alias("j"))
+    return users.select("user_id").crossJoin(F.broadcast(js)).select(
+        "user_id", "j", F.expr(_CMS_COL).alias("col")
+    )
+
+
+def _cms_sketch(events: DataFrame) -> DataFrame:
+    return _cms_cells(events).groupBy("j", "col").agg(F.count("*").alias("c"))
+
+
+def _cms_merge(sketch: DataFrame, events: DataFrame) -> DataFrame:
+    """Stored counters plus a batch of ``events``: counters sum."""
+    return (
+        sketch.unionByName(_cms_sketch(events))
+        .groupBy("j", "col")
+        .agg(F.sum("c").alias("c"))
+    )
+
+
+def _cms_topk(sketch: DataFrame, ev: DataFrame) -> DataFrame:
+    """The 15 users of ``ev`` with the largest estimates (min over the
+    d rows' counters)."""
+    est = (
+        _cms_cells(ev.select("user_id").distinct())
+        .join(sketch, ["j", "col"])
+        .groupBy("user_id")
+        .agg(F.min("c").cast("bigint").alias("est_count"))
+    )
+    return est.orderBy(F.desc("est_count"), F.asc("user_id")).limit(15)
+
+
+_CMS_ORACLE = f"""
     WITH js AS (FROM range(0, {_CMS_D}) t(j)),
     cells AS (
       SELECT j.j,
@@ -734,7 +706,12 @@ _CMS_D, _CMS_W = 4, 256  # depth x width; ~2.7k ints per store
     SELECT user_id, CAST(est_count AS BIGINT) AS est_count
     FROM est
     ORDER BY est_count DESC, user_id LIMIT 15
-    """,
+    """
+
+
+@q(
+    "cms_topk_incremental",
+    oracle=_CMS_ORACLE,
     doc="INCREMENTAL heavy-hitters via a persisted COUNT-MIN sketch "
     "store (Cormode & Muthukrishnan 2005) — the frequency leg of the "
     "mergeable-sketch family (HLL = distinct counts, fixed-bin "
@@ -758,69 +735,17 @@ _CMS_D, _CMS_W = 4, 256  # depth x width; ~2.7k ints per store
 def cms_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magictables_spark.warehouse import Store
 
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
-
-    js = spark.range(_CMS_D).select(F.col("id").alias("j"))
-    col_expr = F.expr(
-        "CAST(CONV(SUBSTRING(md5(CONCAT(CAST(j AS STRING), ':',"
-        f" CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {_CMS_W}"
-    )
-
-    def _sketch(df: DataFrame) -> DataFrame:
-        return (
-            df.select("user_id")
-            .crossJoin(F.broadcast(js))
-            .select("j", col_expr.alias("col"))
-            .groupBy("j", "col")
-            .agg(F.count("*").alias("c"))
-        )
-
+    hist, batch = _split(ev)
     stored = Store("cms", sf_dir, "events", f"v1:{_CMS_D}x{_CMS_W}").table(
-        spark, "cms", lambda: _sketch(ev.filter(F.col("ts") < split))
+        spark, "cms", lambda: _cms_sketch(hist)
     )
-    merged = (
-        stored.unionByName(_sketch(ev.filter(F.col("ts") >= split)))
-        .groupBy("j", "col")
-        .agg(F.sum("c").alias("c"))
-    )
-    users = ev.select("user_id").distinct()
-    est = (
-        users.crossJoin(F.broadcast(js))
-        .select("user_id", "j", col_expr.alias("col"))
-        .join(merged, ["j", "col"])
-        .groupBy("user_id")
-        .agg(F.min("c").cast("bigint").alias("est_count"))
-    )
-    return est.orderBy(F.desc("est_count"), F.asc("user_id")).limit(15)
+    return _cms_topk(_cms_merge(stored, batch), ev)
 
 
 @q(
     "cms_store_stream",
-    oracle=f"""
-    WITH js AS (FROM range(0, {_CMS_D}) t(j)),
-    cells AS (
-      SELECT j.j,
-             CAST(('0x' || substring(md5(CAST(j.j AS VARCHAR) || ':'
-               || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) % {_CMS_W}
-               AS col,
-             COUNT(*) AS c
-      FROM events CROSS JOIN js j
-      GROUP BY 1, 2
-    ), users AS (
-      SELECT DISTINCT user_id FROM events
-    ), est AS (
-      SELECT u.user_id, MIN(c.c) AS est_count
-      FROM users u CROSS JOIN js j
-      JOIN cells c ON c.j = j.j
-        AND c.col = CAST(('0x' || substring(md5(CAST(j.j AS VARCHAR) || ':'
-              || CAST(u.user_id AS VARCHAR)), 1, 15)) AS BIGINT) % {_CMS_W}
-      GROUP BY u.user_id
-    )
-    SELECT user_id, CAST(est_count AS BIGINT) AS est_count
-    FROM est
-    ORDER BY est_count DESC, user_id LIMIT 15
-    """,
+    oracle=_CMS_ORACLE,
     doc="STREAMING maintenance of the count-min sketch store — the "
     "foreachBatch twin of cms_topk_incremental (symmetry preserved "
     "across the whole mergeable-sketch family): history seeds the "
@@ -845,79 +770,35 @@ def cms_store_stream(
     from magictables_spark.streaming.commit import ReplaySource, VersionedStore
     from magictables_spark.warehouse import store_key
 
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
     ev = _t(spark, sf_dir, "events")
     src = ReplaySource(
         "cmsstream", *store_key(sf_dir, "events", f"v2:cmss:{_CMS_D}x{_CMS_W}")
     )
-    store_schema = "j bigint, col bigint, c bigint"
-    # versioned store + atomic CURRENT flip (streaming/commit.py): the
-    # counter merge is not idempotent; the old overwrite-then-marker
-    # scheme left a double-count window between the two writes
-    vs = VersionedStore(src.root)
-
-    js = spark.range(_CMS_D).select(F.col("id").alias("j"))
-    col_expr = F.expr(
-        "CAST(CONV(SUBSTRING(md5(CONCAT(CAST(j AS STRING), ':',"
-        f" CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {_CMS_W}"
-    )
-
-    def _sketch(df: DataFrame) -> DataFrame:
-        return (
-            df.select("user_id")
-            .crossJoin(F.broadcast(js))
-            .select("j", col_expr.alias("col"))
-            .groupBy("j", "col")
-            .agg(F.count("*").cast("bigint").alias("c"))
-        )
+    vs = VersionedStore(src.root)  # the counter merge is not idempotent
 
     def _seed():
-        _sketch(ev.filter(F.col("ts") < split)).write.mode("overwrite").parquet(
-            vs.seed_path()
-        )
-        vs.init()
-        return [
-            ev.filter((F.col("ts") >= split) & (F.col("event_id") % 3 == k))
-            for k in range(3)
-        ]
+        hist, batch = _split(ev)
+        vs.seed(_cms_sketch(hist))
+        return _shards(batch)
 
     src.prepare(_seed)
+    src.drain(spark, ev.schema, vs.batches(_CMS_SCHEMA, _cms_merge, _crash_after_write))
+    return _cms_topk(vs.read(spark, _CMS_SCHEMA), ev)
 
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if vs.is_applied(batch_id):  # replay of a committed batch
-            return
-        ss = batch_df.sparkSession
-        merged = (
-            ss.read.schema(store_schema)
-            .parquet(vs.current_path())
-            .unionByName(_sketch(batch_df))
-            .groupBy("j", "col")
-            .agg(F.sum("c").alias("c"))
-        )
-        merged.write.mode("overwrite").parquet(
-            vs.version_path(vs.batch_version(batch_id))
-        )
-        if batch_id in _crash_after_write:
-            raise RuntimeError(f"injected crash after batch {batch_id} write")
-        vs.commit(batch_id)  # atomic flip + pre-merge reclaim
 
-    src.drain(spark, ev.schema, _merge_batch)
-
-    merged = spark.read.schema(store_schema).parquet(vs.current_path())
-    users = ev.select("user_id").distinct()
-    est = (
-        users.crossJoin(F.broadcast(js))
-        .select("user_id", "j", col_expr.alias("col"))
-        .join(merged, ["j", "col"])
-        .groupBy("user_id")
-        .agg(F.min("c").cast("bigint").alias("est_count"))
+def _join_view(o: DataFrame, c: DataFrame) -> DataFrame:
+    """The orders-customer view rows of orders ``o`` and customers ``c``."""
+    return o.join(c, o["o_custkey"] == c["c_custkey"]).select(
+        "o_orderkey",
+        F.col("c_name").alias("cust_name"),
+        "c_nationkey",
+        "c_mktsegment",
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
+        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("price_cents"),
     )
-    return est.orderBy(F.desc("est_count"), F.asc("user_id")).limit(15)
 
 
-@q(
-    "join_view_incremental_store",
-    oracle="""
+_JOIN_VIEW_ORACLE = """
     SELECT o.o_orderkey,
            c.c_name AS cust_name,
            c.c_nationkey,
@@ -926,7 +807,12 @@ def cms_store_stream(
            CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS price_cents
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ORDER BY o.o_orderkey
-    """,
+    """
+
+
+@q(
+    "join_view_incremental_store",
+    oracle=_JOIN_VIEW_ORACLE,
     doc="INCREMENTAL materialized JOIN-VIEW maintenance — the join leg "
     "of the incremental-warehouse family (rollup_incremental_store "
     "maintains aggregates; this maintains an enriched orders-customer "
@@ -953,16 +839,6 @@ def join_view_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
 
-    def _view(o: DataFrame, c: DataFrame) -> DataFrame:
-        return o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-            "o_orderkey",
-            F.col("c_name").alias("cust_name"),
-            "c_nationkey",
-            "c_mktsegment",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("price_cents"),
-        )
-
     o_hist = orders.filter(F.col("o_orderkey") % 5 < 4)
     o_delta = orders.filter(F.col("o_orderkey") % 5 == 4)
     c_hist = cust.filter(F.col("c_custkey") % 10 < 9)
@@ -971,15 +847,15 @@ def join_view_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = Store("joinview", sf_dir, "orders", "v2:5:10").table(
         spark,
         "joinview",
-        lambda: _view(o_hist, c_hist),
+        lambda: _join_view(o_hist, c_hist),
         bucket_by=["o_orderkey"],
         n_buckets=32,
         sort_by=["o_orderkey"],
     )
     # delta legs: batch-sized dO against the full dim; history against
     # the broadcast dim delta (map-side — history never shuffles)
-    leg_do = _view(o_delta, cust)
-    leg_dc = _view(o_hist, F.broadcast(c_delta))
+    leg_do = _join_view(o_delta, cust)
+    leg_dc = _join_view(o_hist, F.broadcast(c_delta))
     # no final global sort: the driver canon is order-insensitive and a
     # total sort of the whole materialized view per refresh is exactly
     # the corpus-sized range exchange the incremental split exists to
@@ -990,16 +866,7 @@ def join_view_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "join_view_store_stream",
-    oracle="""
-    SELECT o.o_orderkey,
-           c.c_name AS cust_name,
-           c.c_nationkey,
-           c.c_mktsegment,
-           strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
-           CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS price_cents
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    ORDER BY o.o_orderkey
-    """,
+    oracle=_JOIN_VIEW_ORACLE,
     doc="STREAMING maintenance of the materialized join view — the "
     "foreachBatch twin of join_view_incremental_store, preserving the "
     "round's store symmetry (every persisted incremental store has "
@@ -1035,18 +902,8 @@ def join_view_store_stream(
     src = ReplaySource("jvstream", *store_key(sf_dir, "orders", "v1:5"))
     store_dir = src.path("store")
 
-    def _view(o: DataFrame, c: DataFrame) -> DataFrame:
-        return o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-            "o_orderkey",
-            F.col("c_name").alias("cust_name"),
-            "c_nationkey",
-            "c_mktsegment",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("price_cents"),
-        )
-
     def _seed():
-        _view(
+        _join_view(
             orders.filter(F.col("o_orderkey") % 5 < 4),
             _t(spark, sf_dir, "customer"),
         ).write.mode("overwrite").parquet(os.path.join(store_dir, "seed"))
@@ -1063,7 +920,7 @@ def join_view_store_stream(
         ss = batch_df.sparkSession
         cust = _t(ss, sf_dir, "customer")
         # own-subdir overwrite = idempotent replay, no marker needed
-        _view(batch_df, F.broadcast(cust)).write.mode("overwrite").parquet(
+        _join_view(batch_df, F.broadcast(cust)).write.mode("overwrite").parquet(
             os.path.join(store_dir, f"b{batch_id}")
         )
         if batch_id in _crash_after_write:

@@ -966,9 +966,7 @@ def lsh_store_stream(
     sf_dir: str,
     _crash_after_write: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    import os
-
-    from magictables_spark.streaming.commit import ReplaySource
+    from magictables_spark.streaming.commit import ReplaySource, StampedStore
     from magictables_spark.warehouse import store_key
 
     B = APPEND_SPLIT
@@ -981,29 +979,20 @@ def lsh_store_stream(
         "lshstream",
         *store_key(sf_dir, "embeddings", f"v2:lshstream:{N_TABLES}:{N_PROBES}:{B}"),
     )
-    store_dir = src.path("store")
-    applied_dir = src.path("applied")
-    # last_batch stamps each pg partition with the batch that last
-    # rewrote it (-1 = seed) — the per-partition replay guard
-    # (streaming/commit.py module doc; the rollup_store_stream pattern)
-    store_schema = (
+    store = StampedStore(
+        src,
         "tbl int, bucket bigint, vec_id bigint, masks array<bigint>, "
-        "rb int, last_batch bigint, pg bigint"
+        "rb int, last_batch bigint, pg bigint",
+        "pg",
     )
     _pg = F.pmod(F.col("bucket"), F.lit(NPG)).alias("pg")
 
     def _seed():
-        os.makedirs(applied_dir)
         hist = _lsh_index_core(
             spark, quant.filter(F.col("vec_id") < B), n_hist, N_TABLES, N_PROBES
         )
-        (
-            hist.withColumn("rb", _lsh_rank())
-            .withColumn("last_batch", F.lit(-1).cast("long"))
-            .select("tbl", "bucket", "vec_id", "masks", "rb", "last_batch", _pg)
-            .write.partitionBy("pg")
-            .mode("overwrite")
-            .parquet(store_dir)
+        store.seed(
+            hist.select("tbl", "bucket", "vec_id", "masks", _lsh_rank().alias("rb"), _pg)
         )
         return [
             emb.filter(
@@ -1014,64 +1003,16 @@ def lsh_store_stream(
             for k in range(3)
         ]
 
-    src.prepare(_seed)
-
-    def _sign_merge(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(applied_dir, f"batch_{batch_id}")
-        if os.path.exists(marker):  # fast path: batch fully committed
-            return
-        sp = batch_df.sparkSession
+    def _sign(batch_df: DataFrame) -> DataFrame:
+        # index rows of the batch's own vectors at the pinned geometry
         bq = batch_df.select("vec_id", F.expr(QUANT_SPARK).alias("q"))
-        batch = _lsh_index_core(sp, bq, n_hist, N_TABLES, N_PROBES).localCheckpoint(
-            eager=True
-        )
-        touched_pg = [
-            r.pg for r in batch.select(_pg).distinct().collect()
-        ]
-        if touched_pg:
-            all_store = sp.read.schema(store_schema).parquet(store_dir)
-            # per-partition replay guard: a crash between the dynamic
-            # overwrite and the marker write re-merges ONLY the
-            # partitions this batch's stamp is missing from (the
-            # rollup_store_stream pattern — re-merging a stamped
-            # partition would duplicate the batch's vectors)
-            done = {
-                r.pg
-                for r in all_store.filter(F.col("pg").isin(touched_pg))
-                .filter(F.col("last_batch") == batch_id)
-                .select("pg")
-                .distinct()
-                .collect()
-            }
-            redo = [p for p in touched_pg if p not in done]
-            if redo:
-                out = (
-                    _lsh_merge(
-                        all_store.filter(F.col("pg").isin(redo)).drop("pg", "last_batch"),
-                        batch.filter(_pg.isin(redo)),
-                    )
-                    .withColumn("last_batch", F.lit(batch_id).cast("long"))
-                    .select(
-                        "tbl", "bucket", "vec_id", "masks", "rb",
-                        "last_batch", _pg,
-                    )
-                    .localCheckpoint(eager=True)  # cut lineage pre-overwrite
-                )
-                (
-                    out.write.option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("pg")
-                    .mode("overwrite")
-                    .parquet(store_dir)
-                )
-        if batch_id in _crash_after_write:
-            raise RuntimeError(f"injected crash after batch {batch_id} write")
-        with open(marker, "w") as f:
-            f.write("ok")
+        return _lsh_index_core(
+            batch_df.sparkSession, bq, n_hist, N_TABLES, N_PROBES
+        ).withColumn("pg", _pg)
 
-    src.drain(spark, emb.schema, _sign_merge)
-
-    T = spark.read.schema(store_schema).parquet(store_dir)
-    return _lsh_serve(spark, sf_dir, T, n_vec)
+    src.prepare(_seed)
+    src.drain(spark, emb.schema, store.batches(_sign, _lsh_merge, _crash_after_write))
+    return _lsh_serve(spark, sf_dir, store.read(spark), n_vec)
 
 
 @q(

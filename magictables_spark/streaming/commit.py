@@ -29,24 +29,28 @@ frames and its foreachBatch merge body.
   call, which the commit protocols below make safe.
 
 foreachBatch is at-least-once: a failure AFTER the store rewrite but
-BEFORE the applied-marker write replays the batch against the already-
-merged store and double-counts (the round-8 ADVICE defect, first fixed
-in auc_store_stream). Two proven patterns, now shared:
+BEFORE the commit record replays the batch against the already-merged
+store and double-counts. Each non-idempotent maintainer therefore
+commits through one of two foreachBatch body builders here, and
+passes only its store math:
 
-- ``VersionedStore`` (this module) for UNPARTITIONED stores: each
-  batch merges into a fresh ``store_v{batch_id}`` directory and
-  commits by atomically ``os.replace``-ing one CURRENT pointer file
-  whose contents are ``"<last_batch_id>\\n<store dir name>"``. The flip
-  is the single commit point — a replay either sees its batch_id
-  already in CURRENT (crash after flip: skip) or re-merges from the
-  untouched pre-merge version (crash before flip: the half-written
-  store_v{b} is simply overwritten).
+- ``VersionedStore.batches``, for UNPARTITIONED stores (auc,
+  quantile histogram, CMS, HLL). Each batch merges ``merge(current,
+  batch)`` into a fresh ``store_v{batch_id}`` directory and commits by
+  atomically ``os.replace``-ing one CURRENT pointer file whose
+  contents are ``"<last_batch_id>\\n<store dir name>"``. The flip is
+  the single commit point: a replay either sees its batch_id already
+  in CURRENT (crash after flip: skip) or re-merges from the untouched
+  pre-merge version (crash before flip: the half-written store_v{b}
+  is simply overwritten).
 
-- per-partition ``last_batch`` stamping (inline in the maintainers)
-  for PARTITIONED stores rewritten with dynamic partition overwrite:
-  every rewritten partition carries the writing batch id, so a replay
-  re-merges ONLY the partitions its crash left unstamped
-  (rollup_store_stream, lsh_store_stream, scd2_store_stream).
+- ``StampedStore.batches``, for stores PARTITIONED on one column and
+  rewritten with dynamic partition overwrite (rollup, SCD2, LSH).
+  ``StampedStore.seed`` stamps every seed row ``last_batch = -1``; each
+  batch stamps every partition it rewrites with its own id, then writes
+  ``<root>/applied/batch_{id}``. A replay skips a batch whose marker
+  exists, and otherwise re-merges ONLY the touched partitions that do
+  not yet carry its stamp.
 
   RESIDUAL WINDOW (stamping protocol only): the guard assumes dynamic
   partition overwrite replaces each partition atomically. Spark's
@@ -63,7 +67,11 @@ in auc_store_stream). Two proven patterns, now shared:
   cost of rewriting untouched partitions. The stamping maintainers
   accept the window because their stores are rebuildable caches of
   the upstream event log, and the versioned protocol guards every
-  store whose history is authoritative (auc/quantile-hist/CMS/...).
+  store whose history is authoritative (auc/quantile-hist/CMS/HLL).
+
+Both builders raise ``injected crash after batch {id} write`` between
+the store write and the commit record when the batch id is in the
+maintainer's ``_crash_after_write`` set (the fault-injection hook).
 
 Under ``availableNow`` only the most recent batch can replay, so
 reclaiming the pre-merge version directory after a successful flip is
@@ -78,11 +86,13 @@ import shutil
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from magictables_spark.warehouse import store_root, store_tag
 
 __all__ = [
     "ReplaySource",
+    "StampedStore",
     "VersionedStore",
     "batch_subdir",
     "stop_query",
@@ -192,6 +202,12 @@ def subdir_store_paths(store_dir: str, exclude_batch=None) -> list[str]:
     )
 
 
+def _crash_hook(batch_id: int, crash_after_write: frozenset[int]) -> None:
+    """Die between the store write and the commit record (tests)."""
+    if batch_id in crash_after_write:
+        raise RuntimeError(f"injected crash after batch {batch_id} write")
+
+
 class VersionedStore:
     """CURRENT-pointer versioned store for non-idempotent merges."""
 
@@ -212,10 +228,6 @@ class VersionedStore:
         return f"store_v{batch_id}"
 
     # -- pointer ---------------------------------------------------------
-    def init(self) -> None:
-        """Commit the seed store (call once, after writing seed_path)."""
-        self._flip(-1, self.SEED_VERSION)
-
     def read_current(self) -> tuple[int, str]:
         """(last committed batch id, current store dir name)."""
         with open(self._current) as f:
@@ -228,15 +240,12 @@ class VersionedStore:
     def is_applied(self, batch_id: int) -> bool:
         return batch_id <= self.read_current()[0]
 
-    def commit(self, batch_id: int, version: str | None = None) -> None:
-        """Atomically flip CURRENT to ``version`` (default: the batch's
-        own store_v{batch_id}) and reclaim the pre-merge directory.
-        Pass the UNCHANGED current version for a no-op batch commit."""
+    def commit(self, batch_id: int) -> None:
+        """Atomically flip CURRENT to the batch's own store_v{batch_id}
+        and reclaim the pre-merge directory."""
         _, old_version = self.read_current()
-        new_version = version if version is not None else self.batch_version(batch_id)
-        self._flip(batch_id, new_version)
-        if old_version != new_version:
-            shutil.rmtree(self.version_path(old_version), ignore_errors=True)
+        self._flip(batch_id, self.batch_version(batch_id))
+        shutil.rmtree(self.version_path(old_version), ignore_errors=True)
 
     def _flip(self, batch_id: int, version: str) -> None:
         tmp = f"{self._current}.tmp{batch_id}"
@@ -245,3 +254,110 @@ class VersionedStore:
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self._current)
+
+    # -- lifecycle -------------------------------------------------------
+    def seed(self, df: DataFrame) -> None:
+        """Write ``df`` as the seed version and commit it as batch -1."""
+        df.write.mode("overwrite").parquet(self.seed_path())
+        self._flip(-1, self.SEED_VERSION)
+
+    def read(self, spark: SparkSession, schema: str) -> DataFrame:
+        """The committed store."""
+        return spark.read.schema(schema).parquet(self.current_path())
+
+    def batches(
+        self,
+        schema: str,
+        merge: Callable[[DataFrame, DataFrame], DataFrame],
+        crash_after_write: frozenset[int] = frozenset(),
+    ) -> Callable[[DataFrame, int], None]:
+        """foreachBatch body of the versioned protocol (module doc): a
+        batch not yet in CURRENT writes ``merge(committed store, batch
+        rows)`` to its own ``store_v{batch_id}`` and commits it with one
+        flip."""
+
+        def body(batch_df: DataFrame, batch_id: int) -> None:
+            if self.is_applied(batch_id):  # replay of a committed batch
+                return
+            current = self.read(batch_df.sparkSession, schema)
+            merge(current, batch_df).write.mode("overwrite").parquet(
+                self.version_path(self.batch_version(batch_id))
+            )
+            _crash_hook(batch_id, crash_after_write)
+            self.commit(batch_id)
+
+        return body
+
+
+class StampedStore:
+    """A store partitioned on ``part`` at ``<root>/store`` and advanced
+    by the stamping protocol (module doc): every row carries the
+    ``last_batch`` that wrote its partition, and a fully merged batch
+    leaves ``<root>/applied/batch_{id}``. ``schema`` is the stored
+    one, ``last_batch`` and ``part`` included: a store seeded from an
+    empty history has no partition dirs to infer it from."""
+
+    def __init__(self, src: ReplaySource, schema: str, part: str):
+        self.dir = src.path("store")
+        self.applied = src.path("applied")
+        self.schema = schema
+        self.part = part
+
+    def seed(self, df: DataFrame) -> None:
+        """Write ``df`` as the seed store, stamped ``last_batch = -1``."""
+        os.makedirs(self.applied)
+        self._write(df, -1)
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return spark.read.schema(self.schema).parquet(self.dir)
+
+    def _write(self, df: DataFrame, batch_id: int) -> None:
+        # dynamic overwrite replaces only the partitions ``df`` holds
+        df.withColumn("last_batch", F.lit(batch_id).cast("long")).write.option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(self.part).mode("overwrite").parquet(self.dir)
+
+    def batches(
+        self,
+        prepare: Callable[[DataFrame], DataFrame],
+        merge: Callable[[DataFrame, DataFrame], DataFrame],
+        crash_after_write: frozenset[int] = frozenset(),
+    ) -> Callable[[DataFrame, int], None]:
+        """foreachBatch body of the stamping protocol. ``prepare(batch
+        rows)`` runs once per call and must carry ``part``.
+        ``merge(store rows, batch rows)`` gets both sides restricted to
+        the partitions still to merge, the store rows without
+        ``last_batch``, and returns those partitions' new rows."""
+        part = F.col(self.part)
+
+        def body(batch_df: DataFrame, batch_id: int) -> None:
+            marker = os.path.join(self.applied, f"batch_{batch_id}")
+            if os.path.exists(marker):  # fast path: batch fully committed
+                return
+            batch = prepare(batch_df).localCheckpoint(eager=True)
+            touched = [r[0] for r in batch.select(part).distinct().collect()]
+            if touched:
+                store = self.read(batch_df.sparkSession).filter(part.isin(touched))
+                # a crash between the overwrite and the marker left some
+                # partitions stamped with this batch: merging them again
+                # would fold the batch in twice
+                done = {
+                    r[0]
+                    for r in store.filter(F.col("last_batch") == batch_id)
+                    .select(part)
+                    .distinct()
+                    .collect()
+                }
+                redo = [p for p in touched if p not in done]
+                if redo:
+                    in_redo = part.isin(redo)
+                    merged = merge(
+                        store.filter(in_redo).drop("last_batch"), batch.filter(in_redo)
+                    )
+                    # cut lineage: the overwrite replaces files it reads
+                    self._write(merged.localCheckpoint(eager=True), batch_id)
+            _crash_hook(batch_id, crash_after_write)
+            with open(marker, "w") as f:
+                f.write("ok")
+
+        return body

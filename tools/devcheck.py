@@ -7,7 +7,8 @@ driver gate applies (tests/parity.py), without pytest overhead.
 Slugs tagged ``warehouse`` serve from a persisted store, so each runs
 twice: cold (the call that may build the store), then warm (served from
 it). The warm run is checked against the oracle too; a rows-only slug
-must return the same row count both times.
+must return the same rows both times (compared by value, in the
+oracle's canonical row form).
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ def main() -> int:
     from magictables_spark.plans.catalog import TABLES
     from magictables_spark.plans.queries import REGISTRY
     from magictables_spark.session import get_spark
-    from tests.parity import compare
+    from tests.parity import canonical_rows, compare
 
     spark = get_spark("devcheck")
     spark.sparkContext.setLogLevel("ERROR")
@@ -54,10 +55,10 @@ def main() -> int:
             try:
                 sdf = spec.fn(spark, sf_dir)
                 if spec.oracle is None:
-                    n = sdf.count()
-                    ok = cold_rows in (None, n)
-                    msg = f"{n} rows" if ok else f"warm {n} rows != cold {cold_rows}"
-                    cold_rows = n
+                    rows = canonical_rows(sdf.toPandas())
+                    ok = cold_rows in (None, rows)
+                    msg = f"{len(rows)} rows" if ok else "warm rows != cold rows"
+                    cold_rows = rows
                 else:
                     ok, msg = compare(sdf, con.sql(spec.oracle))
             except Exception as e:  # noqa: BLE001

@@ -17,6 +17,9 @@ REVIEWED intentional pattern (tiny-broadcast nested loop, vocab-sized
 global window, declared single-series semantics); it prints as
 ``ok (waived: ...)`` and counts clean. Any unwaived flag still fails
 the sweep, so new regressions can't hide behind old justifications.
+A waived code that matches no finding of its slug prints a
+``stale waiver`` line (it does not change the exit code), so a
+justification does not outlive the pattern it excused.
 """
 
 from __future__ import annotations
@@ -45,7 +48,7 @@ WAIVERS: dict[str, dict[str, str]] = {
     "auc_store_stream": {SPE: "running below-count over the persisted SCORE-BIN store (a few hundred rows at any n — the score-domain bound); batch merges happened inside foreachBatch"},
     "roc_auc_ci_delong": {SPE: "below/above cumulatives over the SCORE-BIN domain (a few hundred rows at any n); the per-row collapse is the upstream bin-keyed agg"},
     "roc_curve_table": {SPE: "descending TP/FP cumulatives over the SCORE-BIN domain (a few hundred rows at any n); the per-row collapse is the upstream bin-keyed agg"},
-    "qq_plot_table": {NLJ: "broadcast side is the 19-row vigintile spine crossed into the per-arm DISTINCT-cents cumulative frame (value-domain bounded)", SPE: "per-arm cumulative windows over DISTINCT cents values — bounded by the value domain, not n"},
+    "qq_plot_table": {NLJ: "broadcast side is the 19-row vigintile spine crossed into the per-arm DISTINCT-cents cumulative frame (value-domain bounded)"},
     "roc_auc": {SPE: "running below-count over DISTINCT score bins (width-2^24 binned int64 scores — a few hundred bins at any n); the per-row rank collapse is the upstream bin-keyed agg"},
     "gains_decile_table": {SPE: "capture/band windows over the DISTINCT engagement-score frame (bounded by the per-user event-count domain) and the <=10-row band spine; the data-sized aggs are user-/score-keyed upstream"},
     "contamination_check": {NLJ: "broadcast side is the bounded held-out shingle set"},
@@ -212,6 +215,8 @@ def main() -> int:
         else:
             status = "ok"
         print(f"{slug}: {status}  shuffles={n_ex} broadcasts={n_bc} arrow_python={n_py}")
+        for code in sorted(set(waived) - {f.code for f in res.findings}):
+            print(f"{slug}: stale waiver {code} (matched no finding)")
     print(f"\n{len(slugs) - n_flagged}/{len(slugs)} clean")
     return 1 if n_flagged else 0
 
